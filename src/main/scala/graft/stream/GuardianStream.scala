@@ -147,37 +147,12 @@ object GuardianStream {
     Windows.withQualityFlags(embedded)
   }
 
-  private def qualityRoot(cfg: StreamConfig): String =
-    java.nio.file.Paths.get(cfg.sinkDir, "quality").toString
+  private def qualityRoot(sinkDir: String): String =
+    java.nio.file.Paths.get(sinkDir, "quality").toString
 
   private def qualityManifestPath(root: String, batchId: Long): java.nio.file.Path =
     java.nio.file.Paths.get(root, "manifests", f"manifest-$batchId%09d.json")
 
-  /** Per-epoch quality-window partials, published exactly-once to the
-    * `quality/` manifest table next to the audit data — the streaming
-    * restatement of the reference validating INSIDE the pipeline
-    * (app.py:50-51): every committed epoch lands its drift-window
-    * statistics in the same audit sink, not in a separate batch job.
-    *
-    * Design for the commit path's cost discipline:
-    *  - the partials are aggregated from the epoch's own COMMITTED
-    *    parquet files (a 3-column pruned scan of data the page cache
-    *    still holds — never a second evaluation of the transform
-    *    pipeline, never a second source scan);
-    *  - the per-epoch result is TINY (one row per touched event-time
-    *    window: count/min/max/sum/sumsq/pii as exact integers), so it is
-    *    collected and inlined in the epoch's quality MANIFEST — one agg
-    *    job, zero extra write jobs, zero extra footer sweeps;
-    *  - `readQuality` merges the partials exactly (integer arithmetic),
-    *    so a window spanning micro-batches reassembles bit-for-bit — the
-    *    append-partials + merge-on-read pattern streaming writers use on
-    *    Iceberg tables; no second stateful operator in the query graph.
-    *
-    * Exactly-once: idempotent by quality-manifest existence (same atomic
-    * CommitIO publish the audit manifests use), published AFTER the main
-    * manifest; a crash between the two publishes is healed on the
-    * epoch's redelivery (processBatch re-runs only this step).
-    */
   /** The epoch's committed data dir, or None when the epoch wrote no
     * parquet (empty epoch) — the recovery re-derivation source.
     */
@@ -190,141 +165,63 @@ object GuardianStream {
     if (hasFiles) Some(dataDir) else None
   }
 
+  /** Per-epoch quality-window partials, published exactly-once to the
+    * `quality/` manifest table next to the audit data — the streaming
+    * restatement of the reference validating INSIDE the pipeline
+    * (app.py:50-51): every committed epoch lands its drift-window
+    * statistics in the same audit sink, not in a separate batch job.
+    *
+    * Design for the commit path's cost discipline:
+    *  - every enabled monitor (`MonitorPartial`) is one aggregate riding
+    *    the write job's `observe()` — never a second evaluation of the
+    *    transform pipeline, never a second source scan;
+    *  - the per-epoch result is TINY (one row per touched event-time
+    *    window: count/min/max/sum/sumsq/pii as exact integers, plus the
+    *    constant-size monitor blocks), so it is inlined in the epoch's
+    *    quality MANIFEST — zero extra write jobs, zero extra footer sweeps;
+    *  - `readQuality` merges the partials exactly (integer arithmetic),
+    *    so a window spanning micro-batches reassembles bit-for-bit — the
+    *    append-partials + merge-on-read pattern streaming writers use on
+    *    Iceberg tables; no second stateful operator in the query graph.
+    *
+    * Exactly-once: idempotent by quality-manifest existence (same atomic
+    * CommitIO publish the audit manifests use), published AFTER the main
+    * manifest; a crash between the two publishes is healed on the
+    * epoch's redelivery (processBatch re-runs only this step, with
+    * `observed` = None).
+    */
   private def publishQuality(
       spark: SparkSession,
       cfg: StreamConfig,
       batchId: Long,
-      observed: Option[scala.collection.Map[Long, scala.collection.Seq[Long]]],
-      observedVocab: Option[scala.collection.Map[String, Long]] = None,
-      observedDiv: Option[scala.collection.Seq[Long]] = None,
-      observedCms: Option[scala.collection.Seq[Long]] = None): Unit = {
+      observed: Option[Map[String, Any]]): Unit = {
     val window = cfg.qualityWindow.getOrElse(return)
-    val root = qualityRoot(cfg)
+    val root = qualityRoot(cfg.sinkDir)
     if (IceLite.isCommitted(root, batchId)) return
-    val winUs = windowMicros(window)
-    val slideUs = cfg.qualitySlide.map(windowMicros).getOrElse(winUs)
-    // (window_start_us, [n, min, max, sum, sumsq, npii]) per touched window
-    val partials: Seq[(Long, Seq[Long])] = observed match {
-      case Some(m) => m.toSeq.map { case (ws, a) => ws -> a.toSeq }
-      case None =>
-        // Recovery path only (crash between the main and quality
-        // publishes, epoch redelivered): re-derive the partials from the
-        // epoch's committed parquet. An empty epoch has no data files —
-        // publish an empty partials manifest.
-        epochDataDir(cfg, batchId) match {
-          case None => Seq.empty
-          case Some(dataDir) =>
-            spark.read.parquet(dataDir)
-              .agg(graft.expressions.WindowStatsAgg.column(
-                col("ts"), col("text_len"), col("has_pii"), winUs, slideUs).as("qwin"))
-              .collect()(0)
-              .getMap[Long, scala.collection.Seq[Long]](0)
-              .toSeq.map { case (ws, a) => ws -> a.toSeq }
-        }
-    }
-    // Vocabulary summary (when configured): observed partial or the same
-    // recovery re-derivation. A re-derived summary can differ from the
-    // one the crashed attempt WOULD have published (MG values depend on
-    // the merge tree) — both are valid summaries, and exactly-once
-    // publish makes whichever lands first THE epoch value.
-    val vocab: Option[Seq[(String, Long)]] = cfg.vocabK.map { k =>
-      observedVocab match {
-        case Some(m) => m.toSeq.sortBy(_._1)
-        case None =>
-          epochDataDir(cfg, batchId) match {
-            case None => Seq.empty
-            case Some(dataDir) =>
-              spark.read.parquet(dataDir)
-                .agg(graft.expressions.MisraGriesAgg.textColumn(col("text"), k).as("v"))
-                .collect()(0)
-                .getMap[String, Long](0).toSeq.sortBy(_._1)
-          }
-      }
-    }
-    // Diversity bitmap (when configured): observed partial or the same
-    // recovery re-derivation; an empty epoch lands an all-zero bitmap
-    // (the OR-merge identity).
-    val div: Option[Array[Long]] = cfg.diversityM.map { dm =>
-      observedDiv match {
-        case Some(s) => s.toArray
-        case None =>
-          epochDataDir(cfg, batchId) match {
-            case None => new Array[Long](dm / 64)
-            case Some(dataDir) =>
-              spark.read.parquet(dataDir)
-                .agg(graft.expressions.GramBitmapAgg
-                  .textColumn(org.apache.spark.sql.functions.col("text"), 3, dm).as("d"))
-                .collect()(0).getSeq[Long](0).toArray
-          }
-      }
-    }
-    // CMS token counters (when configured): observed partial or the
-    // recovery re-derivation; an empty epoch lands all-zero counters
-    // (the additive-merge identity).
-    val cms: Option[Array[Long]] = cfg.cmsW.map { cw =>
-      observedCms match {
-        case Some(s) => s.toArray
-        case None =>
-          epochDataDir(cfg, batchId) match {
-            case None =>
-              new Array[Long](graft.expressions.CmsTextAgg.A.length * cw)
-            case Some(dataDir) =>
-              spark.read.parquet(dataDir)
-                .agg(graft.expressions.CmsTextAgg
-                  .textColumn(org.apache.spark.sql.functions.col("text"), cw).as("c"))
-                .collect()(0).getSeq[Long](0).toArray
-          }
-      }
-    }
+    val monitors = MonitorPartial.enabled(cfg)
+    // Recovery path only (crash between the main and quality publishes,
+    // epoch redelivered): re-derive every enabled monitor in ONE agg over
+    // the epoch's committed parquet. A re-derived vocabulary summary can
+    // differ from the one the crashed attempt WOULD have published (MG
+    // values depend on the merge tree) — both are valid summaries, and
+    // exactly-once publish makes whichever lands first THE epoch value.
+    // An empty epoch has no data files: every monitor publishes its merge
+    // identity.
+    val values = observed.orElse(epochDataDir(cfg, batchId).map { dataDir =>
+      val cols = monitors.map(m => m.column(cfg).as(m.name))
+      val row = spark.read.parquet(dataDir).agg(cols.head, cols.tail: _*).collect()(0)
+      row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+    })
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     node.put("batch_id", batchId)
     node.put("dataset_id", s"${cfg.datasetId}-quality")
     node.put("window", window)
     cfg.qualitySlide.foreach(node.put("slide", _))
-    val arr = node.putArray("partials")
-    partials.sortBy(_._1).foreach { case (ws, a) =>
-      val pn = arr.addObject()
-      pn.put("ws_us", ws); pn.put("we_us", ws + winUs)
-      pn.put("n_turns", a(0))
-      pn.put("len_min", a(1)); pn.put("len_max", a(2))
-      pn.put("len_sum", a(3)); pn.put("len_sumsq", a(4))
-      pn.put("n_pii", a(5))
-    }
-    vocab.foreach { vs =>
-      node.put("vocab_k", cfg.vocabK.get)
-      val va = node.putArray("vocab")
-      vs.foreach { case (t, c) =>
-        val vn = va.addObject(); vn.put("t", t); vn.put("c", c)
-      }
-    }
-    div.foreach { words =>
-      node.put("div_m", cfg.diversityM.get)
-      val da = node.putArray("div")
-      words.foreach(da.add)
-    }
-    cms.foreach { counters =>
-      node.put("cms_w", cfg.cmsW.get)
-      val ca = node.putArray("cms")
-      counters.foreach(ca.add)
-    }
+    monitors.foreach(_.publish(node, cfg, values))
     IceLite.commitIO.publishIfAbsent(
       qualityManifestPath(root, batchId), mapper.writeValueAsString(node))
     ()
-  }
-
-  /** (w, counters) of one quality manifest's CMS block, or None. */
-  private def cmsOf(
-      mapper: com.fasterxml.jackson.databind.ObjectMapper,
-      path: java.nio.file.Path): Option[(Int, Array[Long])] = {
-    val node = mapper.readTree(java.nio.file.Files.readString(path))
-    Option(node.get("cms_w")).map { wn =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      Option(node.get("cms")).foreach(_.elements().forEachRemaining { vn =>
-        out += vn.asLong()
-      })
-      wn.asInt() -> out.toArray
-    }
   }
 
   /** Bracketed standing heavy-hitter view: every Misra–Gries candidate
@@ -332,42 +229,15 @@ object GuardianStream {
     * `mg_lower` (the MG counter; never over-counts) and `cms_upper`
     * (the merged CMS probe; never under-counts), so
     * mg_lower ≤ true count ≤ cms_upper without ever recounting rows.
-    * Requires both `vocabK` and `cmsW` on the running config. The MG
-    * side folds in the compaction-pinned order; the CMS side sums
-    * order-free.
+    * Requires both `vocabK` and `cmsW` on the running config.
     */
-  /** The merged (w, counters) CMS of a sink's quality manifests —
-    * compacted state + residual epochs summed (exact long addition,
-    * order-free), with the same mid-stream width guard as compaction.
-    */
-  private def mergedCms(sinkDir: String): Option[(Int, Array[Long])] = {
-    val root = java.nio.file.Paths.get(sinkDir, "quality").toString
-    val (latest, residual) = qualitySources(root)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    var cw = 0
-    var counters: Array[Long] = null
-    def cfold(path: java.nio.file.Path): Unit =
-      cmsOf(mapper, path).foreach { case (w2, c) =>
-        if (counters == null) { cw = w2; counters = c.clone() }
-        else {
-          require(w2 == cw, s"CMS width changed mid-stream: $w2 vs $cw")
-          var i = 0
-          while (i < counters.length) { counters(i) += c(i); i += 1 }
-        }
-      }
-    latest.foreach(u => cfold(compactQualityPath(root, u)))
-    residual.foreach(b => cfold(qualityManifestPath(root, b)))
-    Option(counters).map(cw -> _)
-  }
-
   def readVocabBracket(spark: SparkSession, sinkDir: String): DataFrame = {
     import spark.implicits._
-    val merged = mergedCms(sinkDir)
-    val mg = readVocab(spark, sinkDir).collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    merged match {
+    val manifests = liveQuality(sinkDir)
+    val mg = vocabRows(manifests)
+    MonitorPartial.Cms.fold(manifests) match {
       case Some((cw, counters)) if mg.nonEmpty =>
-        mg.toSeq.map { case (t, lower) =>
+        mg.map { case (t, lower) =>
           (t, lower, graft.expressions.CmsTextAgg.probe(counters, cw, t))
         }.toDF("token", "mg_lower", "cms_upper")
       case _ =>
@@ -384,7 +254,7 @@ object GuardianStream {
   def readCms(spark: SparkSession, sinkDir: String,
       tokens: Seq[String]): DataFrame = {
     import spark.implicits._
-    mergedCms(sinkDir) match {
+    MonitorPartial.Cms.fold(liveQuality(sinkDir)) match {
       case Some((cw, counters)) =>
         tokens.map(t =>
           (t, graft.expressions.CmsTextAgg.probe(counters, cw, t)))
@@ -393,101 +263,38 @@ object GuardianStream {
     }
   }
 
-  /** (m, bitmap words) of one quality manifest's diversity block, or
-    * None when the manifest carries no diversity bitmap.
-    */
-  private def divOf(
-      mapper: com.fasterxml.jackson.databind.ObjectMapper,
-      path: java.nio.file.Path): Option[(Int, Array[Long])] = {
-    val node = mapper.readTree(java.nio.file.Files.readString(path))
-    Option(node.get("div_m")).map { mn =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      Option(node.get("div")).foreach(_.elements().forEachRemaining { vn =>
-        out += vn.asLong()
-      })
-      mn.asInt() -> out.toArray
-    }
-  }
-
-  /** Merged corpus-diversity view: OR the per-epoch linear-counting
-    * bitmaps (compacted state + residual epochs — OR is order-free, so
-    * unlike the vocab fold the order here is only a convention) and
-    * report one row (m, v_occ, est_linear): exact occupied slots and
-    * the −m·ln(empty/m) distinct-trigram estimate, −1 on saturation.
+  /** Merged corpus-diversity view: the OR of the per-epoch
+    * linear-counting bitmaps as one row (m, v_occ, est_linear): exact
+    * occupied slots and the −m·ln(empty/m) distinct-trigram estimate, −1
+    * on saturation.
     */
   def readDiversity(spark: SparkSession, sinkDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(sinkDir, "quality").toString
-    val (latest, residual) = qualitySources(root)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    var dm = 0
-    var acc: Array[Long] = null
-    def fold(path: java.nio.file.Path): Unit =
-      divOf(mapper, path).foreach { case (m2, w) =>
-        if (acc == null) { dm = m2; acc = w.clone() }
-        else {
-          require(m2 == dm, s"diversity bitmap size changed mid-stream: $m2 vs $dm")
-          var i = 0
-          while (i < acc.length) { acc(i) |= w(i); i += 1 }
-        }
-      }
-    latest.foreach(u => fold(compactQualityPath(root, u)))
-    residual.foreach(b => fold(qualityManifestPath(root, b)))
     import spark.implicits._
-    if (acc == null) Seq.empty[(Int, Long, Long)].toDF("m", "v_occ", "est_linear")
-    else {
-      val (v, est) = graft.expressions.GramBitmapAgg.summarize(acc, dm)
-      Seq((dm, v, est)).toDF("m", "v_occ", "est_linear")
+    MonitorPartial.Diversity.fold(liveQuality(sinkDir)) match {
+      case Some((dm, acc)) =>
+        val (v, est) = graft.expressions.GramBitmapAgg.summarize(acc, dm)
+        Seq((dm, v, est)).toDF("m", "v_occ", "est_linear")
+      case None => Seq.empty[(Int, Long, Long)].toDF("m", "v_occ", "est_linear")
     }
   }
 
-  /** (k, (token, counter) pairs) of one quality manifest's vocabulary
-    * summary, or None when the manifest carries no vocab block.
-    */
-  private def vocabOf(
-      mapper: com.fasterxml.jackson.databind.ObjectMapper,
-      path: java.nio.file.Path): Option[(Int, Seq[(String, Long)])] = {
-    val node = mapper.readTree(java.nio.file.Files.readString(path))
-    Option(node.get("vocab_k")).map { kn =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      Option(node.get("vocab")).foreach(_.elements().forEachRemaining { vn =>
-        out += (vn.get("t").asText() -> vn.get("c").asLong())
-      })
-      kn.asInt() -> out.toSeq
-    }
-  }
-
-  /** Merged vocabulary monitor view: fold the per-epoch Misra–Gries
-    * summaries (compacted state first, then residual epochs in batch
-    * order — the SAME left-fold `compactQuality` performs, so the view
-    * is identical before and after compaction) into one ≤ 2k-entry
-    * (token, counter) table. Counters under-count by at most
-    * N_tokens/(k+1) over the whole stream; no token is over-counted.
+  /** Merged vocabulary monitor view: the per-epoch Misra–Gries summaries
+    * folded into one ≤ 2k-entry (token, counter) table. Counters
+    * under-count by at most N_tokens/(k+1) over the whole stream; no
+    * token is over-counted.
     */
   def readVocab(spark: SparkSession, sinkDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(sinkDir, "quality").toString
-    val (latest, residual) = qualitySources(root)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val acc = new java.util.HashMap[String, Array[Long]]()
-    // same mid-stream guard as the diversity/CMS folds (ADVICE r5): a
-    // vocabK change across restarts would silently mix prune thresholds
-    // (and undercount bounds) in one fold
-    var k0 = -1
-    def fold(path: java.nio.file.Path): Unit =
-      vocabOf(mapper, path).foreach { case (k, partial) =>
-        if (k0 < 0) k0 = k
-        else require(k == k0, s"vocab k changed mid-stream: $k vs $k0")
-        graft.expressions.MgBuffer.foldStringPartial(acc, partial, k)
-      }
-    latest.foreach(u => fold(compactQualityPath(root, u)))
-    residual.foreach(b => fold(qualityManifestPath(root, b)))
     import spark.implicits._
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    acc.forEach { (t, c) => rows += (t -> c(0)); () }
-    rows.toSeq.sortBy(_._1).toDF("token", "cnt")
+    vocabRows(liveQuality(sinkDir)).toDF("token", "cnt")
   }
 
-  private def sessionsRoot(cfg: StreamConfig): String =
-    java.nio.file.Paths.get(cfg.sinkDir, "sessions").toString
+  private def vocabRows(
+      manifests: Seq[com.fasterxml.jackson.databind.JsonNode]): Seq[(String, Long)] =
+    MonitorPartial.Vocab.fold(manifests).map(MonitorPartial.Vocab.sorted)
+      .getOrElse(Seq.empty)
+
+  private def sessionsRoot(sinkDir: String): String =
+    java.nio.file.Paths.get(sinkDir, "sessions").toString
 
   /** One partition-local session run (interval partial, micros). */
   private[stream] final case class SessPartial(
@@ -522,21 +329,17 @@ object GuardianStream {
   private def publishSessions(
       spark: SparkSession, cfg: StreamConfig, batchId: Long): Unit = {
     val gap = cfg.sessionGap.getOrElse(return)
-    val root = sessionsRoot(cfg)
+    val root = sessionsRoot(cfg.sinkDir)
     if (IceLite.isCommitted(root, batchId)) return
-    val dataDir =
-      java.nio.file.Paths.get(cfg.sinkDir, "data", s"batch=$batchId").toString
-    val hasFiles = Option(new java.io.File(dataDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-    val rows: DataFrame =
-      if (hasFiles) spark.read.parquet(dataDir)
+    val rows: DataFrame = epochDataDir(cfg, batchId) match {
+      case Some(dataDir) => spark.read.parquet(dataDir)
         .select(col("conv_id"), col("ts"), col("text_len"), col("has_pii"))
-      else spark.createDataFrame(
+      case None => spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(Seq(
           StructField("conv_id", StringType), StructField("ts", TimestampType),
           StructField("text_len", IntegerType), StructField("has_pii", BooleanType))))
+    }
     val gapUs = windowMicros(gap)
     import spark.implicits._
     val partials = rows
@@ -589,11 +392,6 @@ object GuardianStream {
     ()
   }
 
-  /** Merged view of the per-epoch session partials: interval islands per
-    * conversation (sort by start; a partial starting before the running
-    * max end continues the session), then additive stats — equal to the
-    * batch `Windows.sessionWindows` over the same deduped rows.
-    */
   /** Interval-islands merge of session partials: a partial starting
     * before the running max end continues the session. Input and output
     * share the PARTIAL schema (conv_id, s_start, s_end, n_turns, len_sum,
@@ -668,8 +466,7 @@ object GuardianStream {
     * Returns false when < 2 residual epoch batches exist.
     */
   def compactSessions(spark: SparkSession, sinkDir: String): Boolean = {
-    val root = sessionsRoot(
-      StreamConfig(sourceDir = "", checkpointDir = "", sinkDir = sinkDir))
+    val root = sessionsRoot(sinkDir)
     val (latest, residual) = qualitySources(root)
     if (residual.size < 2) return false
     val upTo = residual.max
@@ -692,9 +489,13 @@ object GuardianStream {
     won
   }
 
+  /** Merged view of the per-epoch session partials: interval islands per
+    * conversation (sort by start; a partial starting before the running
+    * max end continues the session), then additive stats — equal to the
+    * batch `Windows.sessionWindows` over the same deduped rows.
+    */
   def readSessionQuality(spark: SparkSession, sinkDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(sinkDir, "sessions").toString
-    mergeSessionIslands(sessionPartials(spark, root))
+    mergeSessionIslands(sessionPartials(spark, sessionsRoot(sinkDir)))
       .select(
         col("conv_id"),
         col("s_start").as("session_start"),
@@ -704,14 +505,6 @@ object GuardianStream {
         col("n_pii"))
   }
 
-  /** Merged view of the per-epoch quality partials: one row per closed
-    * tumbling window with the same statistics Windows.driftWindows
-    * computes in batch (minus the HLL conv sketch — partial HLLs are not
-    * SQL-mergeable). count/min/max/sum/sumsq partials merge EXACTLY
-    * (integer arithmetic), so this equals the batch aggregation
-    * bit-for-bit — asserted by StreamingSpec. Driver-side manifest parse
-    * (the partial table is tiny: epochs × touched windows).
-    */
   private def compactQualityPath(root: String, upTo: Long): java.nio.file.Path =
     java.nio.file.Paths.get(root, "manifests", f"compact-$upTo%09d.json")
 
@@ -722,30 +515,35 @@ object GuardianStream {
   private[graft] def qualitySources(root: String): (Option[Long], Seq[Long]) =
     IceLite.compactSources(root)
 
-  /** Partial rows [ws, we, n, min, max, sum, sumsq, pii] of one quality
-    * manifest (epoch or compacted — same JSON shape).
+  /** The one quality fold's input: the given sources of the quality table
+    * at `root`, each read and parsed exactly once, in the one order every
+    * monitor folds in — the compacted manifest first, then the residual
+    * epochs ascending. Misra–Gries merge with pruning needs this pinned
+    * left fold for compaction to be lossless; OR and exact long addition
+    * give the same result in any order, so one order serves all monitors.
     */
-  private def qualityPartialsOf(
-      mapper: com.fasterxml.jackson.databind.ObjectMapper,
-      path: java.nio.file.Path): Seq[Array[Long]] = {
-    val node = mapper.readTree(java.nio.file.Files.readString(path))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-    node.get("partials").elements().forEachRemaining { pn =>
-      out += Array(
-        pn.get("ws_us").asLong(), pn.get("we_us").asLong(),
-        pn.get("n_turns").asLong(), pn.get("len_min").asLong(),
-        pn.get("len_max").asLong(), pn.get("len_sum").asLong(),
-        pn.get("len_sumsq").asLong(), pn.get("n_pii").asLong())
-    }
-    out.toSeq
+  private def qualityManifests(root: String, latest: Option[Long],
+      residual: Seq[Long]): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    (latest.map(compactQualityPath(root, _)).toSeq ++
+      residual.map(qualityManifestPath(root, _)))
+      .map(p => mapper.readTree(java.nio.file.Files.readString(p)))
+  }
+
+  /** Every live quality manifest of a sink, parsed (see qualityManifests). */
+  private def liveQuality(sinkDir: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val root = qualityRoot(sinkDir)
+    val (latest, residual) = qualitySources(root)
+    qualityManifests(root, latest, residual)
   }
 
   /** Roll the accumulated per-epoch quality partials (plus the previous
     * compacted manifest, if any) into ONE compacted manifest — the
-    * Iceberg `rewrite_manifests` discipline. The statistics are exact
-    * integers with associative merges (count/sum/sumsq add, min/max
-    * lattice), so compaction is LOSSLESS: `readQuality` before ≡ after,
-    * bit-for-bit (asserted by StreamingSpec).
+    * Iceberg `rewrite_manifests` discipline. Every monitor block is the
+    * same fold the readers perform, so compaction is LOSSLESS: every
+    * merged view before ≡ after, bit-for-bit (asserted by StreamingSpec).
+    * A monitor size that changed mid-stream fails here, before it becomes
+    * durable in the compacted manifest.
     *
     * Exactly-once/crash-safety: the compacted manifest is published with
     * the same atomic publish-if-absent the epoch manifests use; epoch
@@ -757,113 +555,16 @@ object GuardianStream {
     * folding).
     */
   def compactQuality(sinkDir: String): Boolean = {
-    val root = java.nio.file.Paths.get(sinkDir, "quality").toString
+    val root = qualityRoot(sinkDir)
     val (latest, residual) = qualitySources(root)
     if (residual.size < 2) return false
     val upTo = residual.max
+    val manifests = qualityManifests(root, latest, residual)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // ws -> [we, n, min, max, sum, sumsq, pii]
-    val merged = new java.util.TreeMap[Long, Array[Long]]()
-    def fold(p: Array[Long]): Unit = {
-      val a = merged.get(p(0))
-      if (a == null) merged.put(p(0), p.drop(1))
-      else {
-        a(1) += p(2)
-        if (p(3) < a(2)) a(2) = p(3)
-        if (p(4) > a(3)) a(3) = p(4)
-        a(4) += p(5)
-        a(5) += p(6)
-        a(6) += p(7)
-      }
-    }
-    // Vocabulary summaries fold with the IDENTICAL left-fold readVocab
-    // performs (compacted first, then residual ascending), so the merged
-    // view is bit-exact before ≡ after compaction even though MG merge
-    // with pruning is not order-independent.
-    val vacc = new java.util.HashMap[String, Array[Long]]()
-    var vocabK = 0
-    def vfold(path: java.nio.file.Path): Unit =
-      vocabOf(mapper, path).foreach { case (k, partial) =>
-        // same mid-stream guard as dfold/cfold (ADVICE r5): a vocabK
-        // change would silently mix MG prune thresholds and become
-        // durable in the compacted manifest
-        if (vocabK == 0) vocabK = k
-        else require(k == vocabK, s"vocab k changed mid-stream: $k vs $vocabK")
-        graft.expressions.MgBuffer.foldStringPartial(vacc, partial, k)
-      }
-    // Diversity bitmaps fold by OR — order-free, trivially lossless
-    // under compaction (unlike the order-pinned MG fold above).
-    var divM = 0
-    var dacc: Array[Long] = null
-    def dfold(path: java.nio.file.Path): Unit =
-      divOf(mapper, path).foreach { case (m2, w) =>
-        if (dacc == null) { divM = m2; dacc = w.clone() }
-        else {
-          // same guard as readDiversity: a diversityM change across
-          // restarts must fail HERE, before a mixed-moduli bitmap (or an
-          // index overflow) becomes durable in the compacted manifest
-          require(m2 == divM,
-            s"diversity bitmap size changed mid-stream: $m2 vs $divM")
-          var i = 0
-          while (i < dacc.length) { dacc(i) |= w(i); i += 1 }
-        }
-      }
-    // CMS counters fold by exact long addition — order-free like the
-    // bitmap; same mid-stream width guard as the read side.
-    var cmsW = 0
-    var cacc: Array[Long] = null
-    def cfold(path: java.nio.file.Path): Unit =
-      cmsOf(mapper, path).foreach { case (w2, c) =>
-        if (cacc == null) { cmsW = w2; cacc = c.clone() }
-        else {
-          require(w2 == cmsW, s"CMS width changed mid-stream: $w2 vs $cmsW")
-          var i = 0
-          while (i < cacc.length) { cacc(i) += c(i); i += 1 }
-        }
-      }
-    latest.foreach { u =>
-      qualityPartialsOf(mapper, compactQualityPath(root, u)).foreach(fold)
-      vfold(compactQualityPath(root, u))
-      dfold(compactQualityPath(root, u))
-      cfold(compactQualityPath(root, u))
-    }
-    residual.foreach { b =>
-      qualityPartialsOf(mapper, qualityManifestPath(root, b)).foreach(fold)
-      vfold(qualityManifestPath(root, b))
-      dfold(qualityManifestPath(root, b))
-      cfold(qualityManifestPath(root, b))
-    }
     val node = mapper.createObjectNode()
     node.put("upto_batch", upTo)
     latest.foreach(node.put("prev_compact", _))
-    val arr = node.putArray("partials")
-    merged.forEach { (ws, a) =>
-      val pn = arr.addObject()
-      pn.put("ws_us", ws); pn.put("we_us", a(0))
-      pn.put("n_turns", a(1))
-      pn.put("len_min", a(2)); pn.put("len_max", a(3))
-      pn.put("len_sum", a(4)); pn.put("len_sumsq", a(5))
-      pn.put("n_pii", a(6))
-    }
-    if (vocabK > 0) {
-      node.put("vocab_k", vocabK)
-      val va = node.putArray("vocab")
-      val vrows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      vacc.forEach { (t, c) => vrows += (t -> c(0)); () }
-      vrows.sortBy(_._1).foreach { case (t, c) =>
-        val vn = va.addObject(); vn.put("t", t); vn.put("c", c)
-      }
-    }
-    if (divM > 0) {
-      node.put("div_m", divM)
-      val da = node.putArray("div")
-      dacc.foreach(da.add)
-    }
-    if (cmsW > 0) {
-      node.put("cms_w", cmsW)
-      val ca = node.putArray("cms")
-      cacc.foreach(ca.add)
-    }
+    MonitorPartial.all.foreach(_.compact(node, manifests))
     IceLite.commitIO.publishIfAbsent(
       compactQualityPath(root, upTo), mapper.writeValueAsString(node))
   }
@@ -881,11 +582,6 @@ object GuardianStream {
     */
   def expireFolded(sinkDir: String): Int = {
     var removed = 0
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
     def sweep(root: String, alsoData: Boolean): Unit = {
       val (latest, _) = qualitySources(root)
       latest.foreach { upTo =>
@@ -907,12 +603,12 @@ object GuardianStream {
             if (alsoData) {
               if (n.startsWith("manifest-")) {
                 val b = n.stripPrefix("manifest-").stripSuffix(".json").toLong
-                rmTree(
+                IceLite.rmTree(
                   java.nio.file.Paths.get(root, "data", s"batch=$b").toFile)
               } else {
                 // resolve via the marker's path BEFORE deleting the marker
                 val u = n.stripPrefix("compact-").stripSuffix(".json").toLong
-                rmTree(new java.io.File(compactSessionsDataDir(root, u)))
+                IceLite.rmTree(new java.io.File(compactSessionsDataDir(root, u)))
               }
             }
             if (java.nio.file.Files.deleteIfExists(p)) removed += 1
@@ -930,55 +626,54 @@ object GuardianStream {
             val num = d.takeWhile(_.isDigit)
             if (d != live && num.nonEmpty && num.toLong <= upTo &&
                 IceLite.orphanStale(cdir.resolve(d))) {
-              rmTree(cdir.resolve(d).toFile)
+              IceLite.rmTree(cdir.resolve(d).toFile)
               removed += 1
             }
           }
         }
       }
     }
-    sweep(java.nio.file.Paths.get(sinkDir, "quality").toString, alsoData = false)
-    sweep(java.nio.file.Paths.get(sinkDir, "sessions").toString, alsoData = true)
+    sweep(qualityRoot(sinkDir), alsoData = false)
+    sweep(sessionsRoot(sinkDir), alsoData = true)
     removed
   }
 
+  /** Merged view of the per-epoch quality partials: one row per window
+    * with the same statistics Windows.driftWindows computes in batch
+    * (minus the HLL conv sketch — partial HLLs are not SQL-mergeable).
+    * count/min/max/sum/sumsq partials merge EXACTLY (integer arithmetic),
+    * so this equals the batch aggregation bit-for-bit — asserted by
+    * StreamingSpec. Driver-side manifest fold over the O(compacted) read
+    * path: one compacted manifest + the residual epochs.
+    */
   def readQuality(spark: SparkSession, sinkDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(sinkDir, "quality").toString
-    // O(compacted) read path: ONE compacted manifest + residual epochs
-    val (latest, residual) = qualitySources(root)
-    require(latest.nonEmpty || residual.nonEmpty,
-      s"quality table at $root has no committed epochs")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifests = liveQuality(sinkDir)
+    require(manifests.nonEmpty,
+      s"quality table at ${qualityRoot(sinkDir)} has no committed epochs")
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    val sources =
-      latest.map(u => compactQualityPath(root, u)).toSeq ++
-        residual.map(b => qualityManifestPath(root, b))
-    sources.foreach { p =>
-      qualityPartialsOf(mapper, p).foreach(a =>
-        rows.add(org.apache.spark.sql.Row(
-          a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7))))
-    }
+    MonitorPartial.WindowStats.fold(manifests).foreach(_.foreach {
+      case ((ws, we), a) =>
+        rows.add(org.apache.spark.sql.Row(ws, we, a(0), a(1), a(2), a(3), a(4), a(5)))
+    })
     val schema = StructType(Seq(
       StructField("ws_us", LongType), StructField("we_us", LongType),
       StructField("n_turns", LongType), StructField("len_min", LongType),
       StructField("len_max", LongType), StructField("len_sum", LongType),
       StructField("len_sumsq", LongType), StructField("n_pii", LongType)))
-    val p = spark.createDataFrame(rows, schema)
-    val n = sum(col("n_turns"))
-    val s = sum(col("len_sum")).cast("double")
-    val sq = sum(col("len_sumsq")).cast("double")
-    p.groupBy(
-        timestamp_micros(col("ws_us")).as("wstart"),
-        timestamp_micros(col("we_us")).as("wend"))
-      .agg(
-        n.as("n_turns"),
-        min(col("len_min")).as("len_min"),
-        max(col("len_max")).as("len_max"),
-        (s / n).as("len_mean"),
-        when(n < 2, 0.0)
-          .otherwise(sqrt(greatest(lit(0.0), (sq - s * s / n) / (n - 1))))
-          .as("len_std"),
-        sum(col("n_pii")).as("n_pii"))
+    val n = col("n_turns")
+    val s = col("len_sum").cast("double")
+    val sq = col("len_sumsq").cast("double")
+    spark.createDataFrame(rows, schema).select(
+      timestamp_micros(col("ws_us")).as("wstart"),
+      timestamp_micros(col("we_us")).as("wend"),
+      n,
+      col("len_min"),
+      col("len_max"),
+      (s / n).as("len_mean"),
+      when(n < 2, 0.0)
+        .otherwise(sqrt(greatest(lit(0.0), (sq - s * s / n) / (n - 1))))
+        .as("len_std"),
+      col("n_pii"))
   }
 
   /** Standing drift monitor over the audit sink's in-flow quality
@@ -1027,43 +722,19 @@ object GuardianStream {
       sum(col("text_len").cast("double")).as("lsum"),
       sum(col("text_len").cast("double") * col("text_len")).as("lsumsq"),
       sum(col("has_pii").cast("long")).as("npii"))
-    // The per-window quality partials ride the SAME write job as one
-    // custom aggregate (graft.expressions.WindowStatsAgg) — the epoch's
-    // drift-window statistics cost zero extra jobs and zero extra scans.
-    val qualityMetric = cfg.qualityWindow.map(w =>
-      graft.expressions.WindowStatsAgg.column(
-        col("ts"), col("text_len"), col("has_pii"), windowMicros(w),
-        cfg.qualitySlide.map(windowMicros).getOrElse(0L)).as("qwin"))
-    // The vocabulary monitor rides the same observe() (tokenizes inside
-    // the aggregate — the written rows are not exploded).
-    val vocabMetric = for { _ <- cfg.qualityWindow; k <- cfg.vocabK } yield
-      graft.expressions.MisraGriesAgg.textColumn(col("text"), k).as("vocab")
-    // The diversity bitmap rides the same observe() (gram-hashes inside
-    // the aggregate; constant 2·m bits of metric payload per epoch).
-    val divMetric = for { _ <- cfg.qualityWindow; dm <- cfg.diversityM } yield
-      graft.expressions.GramBitmapAgg.textColumn(col("text"), 3, dm).as("gdiv")
-    val cmsMetric = for { _ <- cfg.qualityWindow; cw <- cfg.cmsW } yield
-      graft.expressions.CmsTextAgg.textColumn(col("text"), cw).as("gcms")
-    val metrics = baseMetrics ++ qualityMetric ++ vocabMetric ++ divMetric ++ cmsMetric
-    // Commit-path phase timing (bench diagnosis only; off unless
-    // GRAFT_COMMIT_TIMING=1 in the environment).
-    val timing = sys.env.get("GRAFT_COMMIT_TIMING").contains("1")
-    def phase[A](name: String)(f: => A): A =
-      if (!timing) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"  [commit-timing] b$batchId $name ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-        r
-      }
+    // The standing quality monitors ride the SAME write job as custom
+    // aggregates (each tokenizes or hashes inside its aggregate — the
+    // written rows are not exploded): the epoch's monitor partials cost
+    // zero extra jobs and zero extra scans.
+    val metrics = baseMetrics ++
+      MonitorPartial.enabled(cfg).map(mp => mp.column(cfg).as(mp.name))
     val stamped = batch
       .withColumn("pid", spark_partition_id())
       .observe(obs, metrics.head, metrics.tail: _*)
-    val dataDir = phase("writeData") { IceLite.writeData(stamped, cfg.sinkDir, batchId) }
+    val dataDir = IceLite.writeData(stamped, cfg.sinkDir, batchId)
 
-    val m = phase("obs.get") { obs.get }
-    val parts = phase("footerStats") { IceLite.footerStats(dataDir) }
+    val m = obs.get
+    val parts = IceLite.footerStats(dataDir)
     val report = reportFromObserved(m)
     val nPii = if (m("npii") == null) 0L else m("npii").asInstanceOf[Long]
     val n = report.record_count
@@ -1098,18 +769,8 @@ object GuardianStream {
         report.checks.get("text_len").map(c =>
           "text_len_mean" -> c.actual_mean.toString),
       timestamp = Some(batchId.toDouble))
-    phase("publish") { IceLite.publish(cfg.sinkDir, batchId, lineage, parts) }
-    phase("quality") {
-      publishQuality(batch.sparkSession, cfg, batchId,
-        observed = qualityMetric.map(_ =>
-          m("qwin").asInstanceOf[scala.collection.Map[Long, scala.collection.Seq[Long]]]),
-        observedVocab = vocabMetric.map(_ =>
-          m("vocab").asInstanceOf[scala.collection.Map[String, Long]]),
-        observedDiv = divMetric.map(_ =>
-          m("gdiv").asInstanceOf[scala.collection.Seq[Long]]),
-        observedCms = cmsMetric.map(_ =>
-          m("gcms").asInstanceOf[scala.collection.Seq[Long]]))
-    }
+    IceLite.publish(cfg.sinkDir, batchId, lineage, parts)
+    publishQuality(batch.sparkSession, cfg, batchId, observed = Some(m))
     publishSessions(batch.sparkSession, cfg, batchId)
     // Periodic partial compaction (idempotent, crash-safe: atomic
     // publish-if-absent of deterministic merged content; old state stays

@@ -987,6 +987,75 @@ class StreamingSpec extends SparkSpec {
     assert(IceLite.committedBatches(root) == Seq(7L))
   }
 
+  /** One conversation of `texts` at 00:10 UTC, with the quality flags
+    * processBatch expects — small enough to drive epochs directly.
+    */
+  private def tinyTurns(texts: String*): DataFrame = {
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2025-01-01T00:10:00Z"))
+    Windows.withQualityFlags(texts.zipWithIndex
+      .map { case (t, i) => ("conv-tiny", i, "user", t, "", ts) }
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts"))
+  }
+
+  test("quality compaction keeps windows of different lengths apart across a qualityWindow change") {
+    val df = tinyTurns("the cat sat", "the dog ran")
+    val sink = tmp("qwin-change-sink")
+    val cfg = GuardianStream.StreamConfig(
+      sourceDir = "unused", checkpointDir = tmp("qwin-change-ck"), sinkDir = sink,
+      qualityWindow = Some("1 hour"))
+    // a restart with a longer window: both windows start at 00:00
+    GuardianStream.processBatch(df, 0L, cfg)
+    GuardianStream.processBatch(df, 1L, cfg.copy(qualityWindow = Some("2 hours")))
+    def rows(): Seq[String] =
+      GuardianStream.readQuality(spark, sink).collect().map(_.toString).toSeq.sorted
+    val before = rows()
+    assert(before.size == 2, s"one row per window length: $before")
+    assert(GuardianStream.compactQuality(sink))
+    assert(rows() == before, "readQuality unchanged by compaction")
+  }
+
+  test("a quality publish lost to a crash is re-derived byte-identically on redelivery") {
+    val df = tinyTurns("the cat sat on the mat", "a dog ran", "the end")
+    val sink = tmp("recover-sink")
+    // vocabK above the distinct-token count: Misra–Gries never prunes, so
+    // the re-derived summary is exact and cannot depend on the merge tree
+    val cfg = GuardianStream.StreamConfig(
+      sourceDir = "unused", checkpointDir = tmp("recover-ck"), sinkDir = sink,
+      qualityWindow = Some("1 hour"), vocabK = Some(64), diversityM = Some(512),
+      cmsW = Some(128))
+    GuardianStream.processBatch(df, 3L, cfg)
+    val manifest = java.nio.file.Paths.get(sink, "quality", "manifests", "manifest-000000003.json")
+    val original = Files.readAllBytes(manifest)
+    val json = new String(original, java.nio.charset.StandardCharsets.UTF_8)
+    Seq("\"n_turns\":3", "\"vocab_k\"", "\"div_m\"", "\"cms_w\"").foreach(f =>
+      assert(json.contains(f), s"all four monitor blocks published: $f in $json"))
+    // a crash between the main and the quality publish, then redelivery
+    Files.delete(manifest)
+    GuardianStream.processBatch(df, 3L, cfg)
+    assert(java.util.Arrays.equals(Files.readAllBytes(manifest), original),
+      s"republished manifest differs: ${Files.readString(manifest)} vs $json")
+  }
+
+  test("a monitor size changed mid-stream fails both the read and the compaction path") {
+    val df = tinyTurns("the cat sat", "the dog ran")
+    val base = GuardianStream.StreamConfig(
+      sourceDir = "unused", checkpointDir = tmp("guard-ck"), sinkDir = "unused",
+      qualityWindow = Some("1 hour"))
+    val cases: Seq[(String, Int => GuardianStream.StreamConfig, String => Any)] = Seq(
+      ("vocabK", n => base.copy(vocabK = Some(n)), GuardianStream.readVocab(spark, _)),
+      ("diversityM", n => base.copy(diversityM = Some(n)), GuardianStream.readDiversity(spark, _)),
+      ("cmsW", n => base.copy(cmsW = Some(n)), GuardianStream.readCms(spark, _, Seq("the"))))
+    for ((field, cfgOf, read) <- cases) {
+      val sink = tmp(s"guard-$field")
+      GuardianStream.processBatch(df, 0L, cfgOf(64).copy(sinkDir = sink))
+      GuardianStream.processBatch(df, 1L, cfgOf(128).copy(sinkDir = sink))
+      val onRead = intercept[IllegalArgumentException](read(sink))
+      assert(onRead.getMessage.contains("changed mid-stream"), s"$field read: $onRead")
+      val onCompact = intercept[IllegalArgumentException](GuardianStream.compactQuality(sink))
+      assert(onCompact.getMessage.contains("changed mid-stream"), s"$field compact: $onCompact")
+    }
+  }
+
   test("end-to-end pipeline: exactly-once sink, resume from checkpoint is identical") {
     val spec = TranscriptSpec(nConvs = 12, turnsPerConv = 16, seed = 27,
       stepSeconds = 30, burstLen = 1000)
