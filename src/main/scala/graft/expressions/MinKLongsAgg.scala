@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -90,18 +90,20 @@ private[graft] object MinKHeap {
   * of sorting all its rows in a single window partition. NULL inputs
   * are skipped (they define no rank; the fixture ids are non-null).
   * Ties: duplicates are kept as separate entries, exactly like the
-  * first k rows of the sort they replace.
+  * first k rows of the sort they replace. Narrower integral inputs
+  * (an `int` id column) are cast to long by the analyzer.
   */
 case class MinKLongsAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MinKBuf] {
+  extends TypedImperativeAggregate[MinKBuf] with ImplicitCastInputTypes {
 
   require(k > 0, "k must be positive")
 
   override def children: Seq[Expression] = Seq(child)
+  override def inputTypes = CatalystBridge.oneLongInput
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

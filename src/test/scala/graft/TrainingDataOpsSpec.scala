@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Multimodal, TrainingDataOps}
 
@@ -439,13 +440,15 @@ class TrainingDataOpsSpec extends SparkSpec {
     // hot source with 200 cap-eligible docs (cap 5), a dup-dropped doc,
     // NULL-lang rows planted BELOW and ABOVE the cap threshold (the
     // three-valued edge: retain NULL + 'retained' below, false +
-    // 'source_cap' above), and a cold source.
+    // 'source_cap' above), a cold source, and a NULL source with 8
+    // cap-eligible docs (the window groups NULL sources, so 3 are capped).
     val rows = (0 until 200).map(i =>
       (100L + i, s"tok$i alpha beta gamma", "en", "hot")) ++ Seq(
       (99L, "omega psi chi phi", null.asInstanceOf[String], "hot"),
       (500L, "upsilon rho sigma tau", null.asInstanceOf[String], "hot"),
       (501L, "uno dos tres cuatro", "en", "cold"),
-      (502L, "tiny", "en", "cold"))
+      (502L, "tiny", "en", "cold")) ++ (0 until 8).map(i =>
+      (700L + i, s"nul$i alpha beta gamma", "en", null.asInstanceOf[String]))
     val docs = rows.toDF("doc_id", "text", "lang", "source")
     val dupTbl = Seq((100L, false), (501L, true)).toDF("doc_id", "keep")
     docs.createOrReplaceTempView("cr_docs")
@@ -923,20 +926,120 @@ class TrainingDataOpsSpec extends SparkSpec {
     }
   }
 
+  // --- cache lifetime: withPersisted ------------------------------------
+
+  private def cacheManagerEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  /** Runs `op` outside any scope, then inside `withPersisted`, each from a
+    * clean cache (the CacheManager reuses plan-identical persists, which
+    * would confound the accounting). Asserts equal rows and a full
+    * release; returns how many persistent RDDs were live inside the scope
+    * after the collect.
+    */
+  private def assertScopeReleases(op: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    spark.catalog.clearCache()
+    val outside = rows(op)
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.size
+    var live = 0
+    val inside = TrainingDataOps.withPersisted {
+      val r = rows(op)
+      live = sc.getPersistentRDDs.size - before
+      r
+    }
+    assert(inside == outside, "rows inside the scope equal rows outside it")
+    assert(cacheManagerEmpty, "the scope unregisters every cached plan")
+    assert(sc.getPersistentRDDs.size == before, "the scope releases every cached RDD")
+    live
+  }
+
+  private lazy val scopeDocs = base.withColumn("lang", lit("en"))
+    .withColumn("source", when(col("doc_id") % 2 === 0, "a").otherwise("b"))
+  private lazy val uniformDocs = (0 until 50).map(i => (i.toLong, s"a$i b$i c$i"))
+    .toDF("doc_id", "text")
+  private lazy val chain = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+  private lazy val vecs = (0L until 12L).map(i =>
+    (i, Seq.tabulate(4)(d => ((i * 31 + d * 7) % 5 + (if ((i + d) % 2 == 0) 5 else 0)).toFloat)))
+    .toDF("vec_id", "embedding")
+
+  Seq[(String, () => DataFrame)](
+    "ngram jaccard" -> (() => TrainingDataOps.ngramJaccard(base,
+      Seq((0L, 6L), (0L, 1L), (0L, 2L)).toDF("id_a", "id_b"), "doc_id")),
+    "lsh verified jaccard" -> (() => TrainingDataOps.lshVerifiedJaccard(base, "doc_id")),
+    "connected components, local finish" -> (() => TrainingDataOps.connectedComponents(chain)),
+    "connected components, distributed" -> (() =>
+      TrainingDataOps.connectedComponents(chain, localFinishEdges = 0L)),
+    "near-dup clusters" -> (() => TrainingDataOps.nearDupClusters(base, "doc_id")),
+    "corpus retain without dupKeep" -> (() => TrainingDataOps.corpusRetain(scopeDocs,
+      keepLangs = Seq("en"), minTokens = 3, maxTokens = 50, capPerSource = 1)),
+    "budget select, everything fits" -> (() => TrainingDataOps.budgetSelect(uniformDocs, 1000L)),
+    "budget select, flat bin" -> (() => TrainingDataOps.budgetSelect(uniformDocs, 60L)),
+    "budget select, sharded bin" -> (() =>
+      TrainingDataOps.budgetSelect(uniformDocs, 60L, shardRowsCutoff = 0L)),
+    "tfidf top terms" -> (() => TrainingDataOps.tfidfTopTerms(base)),
+    "cms frequency audit" -> (() => TrainingDataOps.cmsFrequencyAudit(base, w = 64, topK = 5)),
+    "ivf k-means top-k" -> (() => TrainingDataOps.ivfKMeansTopK(vecs, "vec_id",
+      queryId = 0L, k = 3, nCentroids = Some(2), nProbe = Some(1)))
+  ).foreach { case (name, op) =>
+    test(s"withPersisted: $name rows are unchanged and every cache is released") {
+      assertScopeReleases(op())
+    }
+  }
+
   test("minhash jaccard estimate: cached handles release every persisted intermediate") {
-    // start from a clean cache: a plan-identical persist from another
-    // test would be REUSED by the CacheManager and shared entries would
-    // confound the release accounting below
+    assert(assertScopeReleases(TrainingDataOps.minhashJaccardEstimate(base)) > 0,
+      "the audit persists its intermediates while live")
+  }
+
+  test("withPersisted: a body that throws still releases its caches") {
+    spark.catalog.clearCache()
+    intercept[IllegalArgumentException] {
+      TrainingDataOps.withPersisted {
+        TrainingDataOps.connectedComponents(chain, maxIter = 0, localFinishEdges = 0L)
+      }
+    }
+    assert(cacheManagerEmpty, "the edge set persisted before the throw is released")
+  }
+
+  test("withPersisted: an inner scope leaves the outer scope's frames cached") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    TrainingDataOps.withPersisted {
+      TrainingDataOps.tfidfTopTerms(base).collect()
+      val outer = sc.getPersistentRDDs.size
+      assert(outer > before, "the outer scope's tf table is cached")
+      TrainingDataOps.withPersisted {
+        TrainingDataOps.cmsFrequencyAudit(base, w = 64, topK = 5).collect()
+        // plan-identical tf table: reused from the outer scope's cache
+        TrainingDataOps.tfidfTopTerms(base).collect()
+        assert(sc.getPersistentRDDs.size > outer)
+      }
+      assert(sc.getPersistentRDDs.size == outer && !cacheManagerEmpty,
+        "the inner scope released its own frame and nothing else")
+    }
+    assert(cacheManagerEmpty && sc.getPersistentRDDs.size == before)
+  }
+
+  test("connected components: a local finish releases the edge set it persisted") {
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.size
-    val (res, handles) = TrainingDataOps.minhashJaccardEstimateCached(base)
-    res.collect()
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
-      "the audit persists its intermediates while live")
-    assert(handles.size == 3, "sigs + est + shingles handles")
-    handles.foreach(_.unpersist(blocking = true))
+    val labels = TrainingDataOps.connectedComponents(chain).collect()
+    assert(labels.length == 12)
     assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "unpersisting the returned handles releases every cache entry")
+      "the local labels read nothing cached, so nothing stays persisted")
+  }
+
+  test("min-k aggregate: an int column is cast to long") {
+    val out = Seq((1, 9), (1, 3), (1, 7), (1, 1), (2, 5)).toDF("g", "id")
+      .groupBy(col("g"))
+      .agg(graft.expressions.MinKLongsAgg.minK(col("id"), 2).as("ids"))
+      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+    assert(out == Map(1 -> Seq(1L, 3L), 2 -> Seq(5L)))
   }
 
   test("gram cardinality: exact/occupied/estimate match a driver-side model; saturation reports -1") {

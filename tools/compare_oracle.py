@@ -10,9 +10,11 @@ views, and compares against the Spark result parquet in
 compared to 1e-9.
 """
 import json
+import os
 import sys
 
 import duckdb
+import numpy as np
 import pandas as pd
 
 def load(sf_dir, out_dir, names):
@@ -20,7 +22,6 @@ def load(sf_dir, out_dir, names):
     con = duckdb.connect()
     for t in ["lineitem", "customer", "orders", "events", "documents",
               "embeddings", "part", "supplier", "nation", "region"]:
-        import os
         p = f"{sf_dir}/{t}.parquet"
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(
@@ -47,14 +48,12 @@ def load(sf_dir, out_dir, names):
         if len(s) != len(o):
             print(f"{name}: ROW COUNT {len(s)} vs {len(o)}")
             failures.append(name); continue
-        sk = s.astype(str).apply(lambda r: "\x00".join(r), axis=1) if len(s) else None
         s2 = s.sort_values(by=list(s.columns), kind="mergesort").reset_index(drop=True)
         o2 = o.sort_values(by=list(o.columns), kind="mergesort").reset_index(drop=True)
         ok = True
         for c in s.columns:
             sv, ov = s2[c], o2[c]
             if pd.api.types.is_float_dtype(sv) or pd.api.types.is_float_dtype(ov):
-                import numpy as np
                 a = pd.to_numeric(sv, errors="coerce").to_numpy(dtype=float)
                 b = pd.to_numeric(ov, errors="coerce").to_numpy(dtype=float)
                 bad = ~(np.isclose(a, b, rtol=0, atol=1e-9) |
