@@ -27,11 +27,15 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * per-entry boxing:
   *
   *  - ONE mutable map per (operator, partition), mutated IN PLACE across
-  *    versions. Keys and values live as raw bytes in append-only 4 MiB
-  *    arena chunks (entries never move, so `UnsafeRow`s returned by
-  *    `get`/`iterator` stay valid for the batch); the index is an
-  *    open-addressing table of (hash, arena-position) pairs in two flat
-  *    arrays — zero objects per entry, ~40 bytes + payload per key.
+  *    versions. Keys and values live as raw bytes in append-only arena
+  *    chunks that start at 64 KiB and double up to 4 MiB, so a partition
+  *    holding a few rows pays KiB, not MiB (entries never move within a
+  *    batch, so `UnsafeRow`s returned by `get`/`iterator` stay valid for
+  *    the batch); the index is an open-addressing table of (hash,
+  *    arena-position) pairs in two flat arrays — zero objects per entry,
+  *    ~40 bytes + payload per key. A commit that leaves at least as many
+  *    dead bytes (removed or superseded entries) as live ones rewrites
+  *    the arena, so memory tracks live state, not lifetime churn.
   *  - Version history lives ON DISK ONLY (exactly the Iceberg-style
   *    manifests-over-files discipline the audit sink uses): each commit
   *    appends `<v>.gdelta` (LZ4, the batch's puts/removes in arrival
@@ -48,6 +52,16 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *  - Eviction-heavy operators (`dropDuplicatesWithinWatermark` scans
   *    all keys each batch to expire the watermark horizon) iterate the
   *    arena SEQUENTIALLY — cache-linear, no hash-order pointer chasing.
+  *  - `memoryUsedBytes` is what the map holds: allocated chunk bytes plus
+  *    the index and journal arrays. The custom metrics split the arena
+  *    into allocated, live and dead bytes and count compactions; each
+  *    progress event's `stateOperators[].customMetrics` sums them over
+  *    partitions. For a stream-stream join, Spark's
+  *    `SymmetricHashJoinStateManager` (V1, the manager for stores without
+  *    column families) forwards only each side's `keyWithIndexToValue`
+  *    store's custom metrics; its `keyToNumValues` store counts toward
+  *    `memoryUsedBytes` alone. So a join's arena metrics cover two of its
+  *    four stores per partition.
   *
   * Scope guard: this is a specialized engine component for the query
   * shapes the guardian pipeline plans (single column family, no prefix
@@ -70,9 +84,8 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     * get/put — narrower than the built-in providers. The operators this
     * engine plans (dedup, join, agg) all consume a lookup before the next
     * one; an operator that must HOLD a looked-up value across lookups
-    * sets `spark.hadoop.graft.arena.copyOnGet=true` (or env
-    * SPARK_GRAFT_ARENA_COPY_ON_GET=1) to get stable copies instead of
-    * silently reading corrupted state.
+    * sets `spark.hadoop.graft.arena.copyOnGet=true` to get stable copies
+    * instead of silently reading corrupted state.
     */
   private var copyOnGet = false
 
@@ -109,12 +122,14 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     this.hadoopConf = hadoopConf
     this.baseDir = stateStoreId.storeCheckpointLocation()
     this.fs = baseDir.getFileSystem(hadoopConf)
-    this.copyOnGet = hadoopConf.getBoolean("graft.arena.copyOnGet", false) ||
-      sys.env.get("SPARK_GRAFT_ARENA_COPY_ON_GET").contains("1")
+    this.copyOnGet = hadoopConf.getBoolean("graft.arena.copyOnGet", false)
     fs.mkdirs(baseDir)
   }
 
   override def stateStoreId: StateStoreId = storeId
+
+  override def supportedCustomMetrics: Seq[StateStoreCustomMetric] =
+    ArenaStateStoreProvider.customMetrics
 
   override def close(): Unit = synchronized { map.clear() }
 
@@ -213,10 +228,14 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     }
   }
 
+  /** Replay `[klen][vlen][key][value]` records (`vlen == -1`: a remove,
+    * key only; `klen == -2`: end) through one reused buffer.
+    */
   private def replayFile(p: HPath, into: ArenaMap): Unit = {
     val in = new DataInputStream(new net.jpountz.lz4.LZ4BlockInputStream(
       new BufferedInputStream(fs.open(p), 1 << 16)))
     try {
+      var buf = new Array[Byte](1 << 12)
       var done = false
       while (!done) {
         val klen =
@@ -226,14 +245,11 @@ class ArenaStateStoreProvider extends StateStoreProvider {
           if (klen == -2) done = true
           else {
             val vlen = in.readInt()
-            val key = new Array[Byte](klen)
-            in.readFully(key)
-            if (vlen == -1) into.removeRaw(key)
-            else {
-              val value = new Array[Byte](vlen)
-              in.readFully(value)
-              into.putRaw(key, value)
-            }
+            val n = klen + math.max(vlen, 0)
+            if (n > buf.length) buf = new Array[Byte](math.max(n, buf.length * 2))
+            in.readFully(buf, 0, n)
+            if (vlen == -1) into.removeRaw(buf, klen)
+            else into.putRaw(buf, klen, vlen)
           }
         }
       }
@@ -268,11 +284,10 @@ class ArenaStateStoreProvider extends StateStoreProvider {
   private def commitStore(loadedVersion: Long): Long = synchronized {
     val newVersion = loadedVersion + 1
     writeVersion(map, newVersion, snapshot = false)
-    // keep live-map garbage bounded (dead arena bytes from eviction
-    // churn); per-partition state is 1/numPartitions of the operator's,
-    // so this rewrite is small and rare — snapshots themselves are
-    // written by the MAINTENANCE thread from the immutable file chain,
-    // never here on the commit path
+    // the delta is published, so the journal's positions are spent and
+    // entries may move: reclaim dead arena bytes (eviction churn) here —
+    // snapshots themselves are written by the MAINTENANCE thread from the
+    // immutable file chain, never on the commit path
     map.compactIfWorthIt()
     map.clearJournal()
     currentVersion = newVersion
@@ -292,6 +307,8 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     */
   private final class ArenaStore(val version: Long) extends StateStore {
     private var committed = false
+    /** Compactions this store's commit ran (0 or 1). */
+    private var compactions = 0L
     private var validated = false
     /** Set when a newer store attempt superseded this one (zombie fence):
       * every subsequent operation throws instead of corrupting the map.
@@ -372,7 +389,9 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     override def commit(): Long = {
       require(!committed, "cannot commit twice")
       checkLive()
+      val before = map.compactions
       val v = commitStore(version)
+      compactions = map.compactions - before
       committed = true
       // the engine counts per-partition commits against the operator's
       // expected partition set (STATE_STORE_COMMIT_VALIDATION_FAILED
@@ -393,17 +412,39 @@ class ArenaStateStoreProvider extends StateStoreProvider {
 
     override def hasCommitted: Boolean = committed
 
-    override def metrics: StateStoreMetrics =
-      StateStoreMetrics(map.size, map.memoryBytes, Map.empty, Map.empty)
+    override def metrics: StateStoreMetrics = {
+      import ArenaStateStoreProvider._
+      StateStoreMetrics(map.size, map.memoryBytes, Map(
+        AllocatedBytes -> map.arenaBytes,
+        LiveBytes -> map.liveBytes,
+        DeadBytes -> map.deadBytes,
+        Compactions -> compactions), Map.empty)
+    }
 
     override def getStateStoreCheckpointInfo(): StateStoreCheckpointInfo =
       StateStoreCheckpointInfo(storeId.partitionId, version + 1, None, None)
   }
 }
 
-/** The arena map: raw-byte entries in append-only 4 MiB chunks indexed by
-  * an open-addressing (hash, position) table. Entries never move within a
+private object ArenaStateStoreProvider {
+  private val AllocatedBytes =
+    StateStoreCustomSizeMetric("arenaAllocatedBytes", "arena chunk bytes allocated")
+  private val LiveBytes =
+    StateStoreCustomSizeMetric("arenaLiveBytes", "arena bytes of live entries")
+  private val DeadBytes = StateStoreCustomSizeMetric("arenaDeadBytes",
+    "arena bytes of removed or superseded entries awaiting compaction")
+  private val Compactions =
+    StateStoreCustomSumMetric("arenaCompactions", "arena compactions run by commits")
+  private val customMetrics = Seq(AllocatedBytes, LiveBytes, DeadBytes, Compactions)
+}
+
+/** The arena map: raw-byte entries in append-only chunks indexed by an
+  * open-addressing (hash, position) table. Entries never move within a
   * batch, so returned `UnsafeRow`s remain valid until the next batch.
+  *
+  * Chunk `k` holds `min(64 KiB << k, 4 MiB)` bytes, or the one entry that
+  * does not fit that (an entry is at most 4 MiB). A position is
+  * `(chunkIndex << 32) | offset`.
   *
   * Arena entry layout: `[klen:int][vlen:int][keyBytes][valueBytes]`,
   * never spanning chunks. A dead entry (removed or superseded) has the
@@ -414,15 +455,19 @@ class ArenaStateStoreProvider extends StateStoreProvider {
   * Index slots: `poss(i)` = 0 empty, 1 tombstone, else position + 2.
   */
 private[state] final class ArenaMap {
-  private val ChunkBits = 22
-  private val ChunkSize = 1 << ChunkBits
+  import ArenaMap._
 
   private var chunks = new java.util.ArrayList[Array[Byte]]()
+  /** Bytes of the allocated chunks. */
+  var arenaBytes = 0L
+  /** Next write position (0 while no chunk is allocated). */
   private var top = 0L
-  private var liveBytes = 0L
-  private var deadBytes = 0L
+  var liveBytes = 0L
+  var deadBytes = 0L
+  /** Compactions run over this map's lifetime. */
+  var compactions = 0L
 
-  private var cap = 1 << 12
+  private var cap = InitialCap
   private var mask = cap - 1
   private var hashes = new Array[Int](cap)
   private var poss = new Array[Long](cap)
@@ -432,24 +477,34 @@ private[state] final class ArenaMap {
   /** Arena positions of this batch's ops, in arrival order (puts point at
     * the put entry; removes at the tombstone record).
     */
-  private var journal = new Array[Long](1024)
+  private var journal = new Array[Long](InitialJournal)
   private var journalLen = 0
 
   def journalNonEmpty: Boolean = journalLen > 0
   def clearJournal(): Unit = journalLen = 0
 
-  def memoryBytes: Long = chunks.size.toLong * ChunkSize + cap.toLong * 12
+  def memoryBytes: Long = arenaBytes + cap.toLong * 12 + journal.length.toLong * 8
 
   def clear(): Unit = {
-    chunks = new java.util.ArrayList[Array[Byte]]()
-    top = 0L; liveBytes = 0L; deadBytes = 0L
-    cap = 1 << 12; mask = cap - 1
-    hashes = new Array[Int](cap); poss = new Array[Long](cap)
-    size = 0L; tombstones = 0L; journalLen = 0
+    resetArena()
+    resetIndex(InitialCap)
+    size = 0L
   }
 
-  @inline private def chunkOf(pos: Long): Array[Byte] = chunks.get((pos >>> ChunkBits).toInt)
-  @inline private def offOf(pos: Long): Int = (pos & (ChunkSize - 1)).toInt
+  private def resetArena(): Unit = {
+    chunks = new java.util.ArrayList[Array[Byte]]()
+    arenaBytes = 0L; top = 0L; liveBytes = 0L; deadBytes = 0L
+    journal = new Array[Long](InitialJournal); journalLen = 0
+  }
+
+  private def resetIndex(newCap: Int): Unit = {
+    cap = newCap; mask = cap - 1
+    hashes = new Array[Int](cap); poss = new Array[Long](cap)
+    tombstones = 0L
+  }
+
+  @inline private def chunkOf(pos: Long): Array[Byte] = chunks.get((pos >>> 32).toInt)
+  @inline private def offOf(pos: Long): Int = pos.toInt
 
   private def appendJournal(pos: Long): Unit = {
     if (journalLen == journal.length) journal = java.util.Arrays.copyOf(journal, journalLen * 2)
@@ -459,35 +514,32 @@ private[state] final class ArenaMap {
 
   /** Reserve `n` contiguous bytes; returns the entry position. */
   private def reserve(n: Int): Long = {
-    require(n <= ChunkSize, s"state row of $n bytes exceeds arena chunk")
-    val chunkIdx = (top >>> ChunkBits).toInt
-    val within = offOf(top)
-    // a full chunk leaves `top` pointing at the (not yet allocated) next
-    // chunk's base: chunkIdx == chunks.size then, with within == 0
-    if (chunkIdx >= chunks.size || within + n > ChunkSize) {
-      // pad the tail of the current chunk so the iterator can skip it
-      if (chunkIdx < chunks.size && within + 8 <= ChunkSize) {
+    require(n <= MaxChunk, s"state row of $n bytes exceeds arena chunk")
+    if (chunks.isEmpty || offOf(top) + n > chunkOf(top).length) {
+      if (!chunks.isEmpty) {
+        // pad the tail of the current chunk so the iterator can skip it
         val c = chunkOf(top)
-        Platform.putInt(c, Platform.BYTE_ARRAY_OFFSET + within, PadMarker)
+        val within = offOf(top)
+        if (within + 8 <= c.length) {
+          Platform.putInt(c, Platform.BYTE_ARRAY_OFFSET + within, PadMarker)
+        }
       }
-      chunks.add(new Array[Byte](ChunkSize))
-      top = (chunks.size.toLong - 1) << ChunkBits
+      val k = chunks.size
+      val c = new Array[Byte](math.max(chunkSize(k), n))
+      chunks.add(c)
+      arenaBytes += c.length
+      top = k.toLong << 32
     }
     val pos = top
     top += n
     pos
   }
 
-  private val PadMarker = Int.MinValue
+  @inline private def hashRow(row: UnsafeRow): Int =
+    hashAt(row.getBaseObject, row.getBaseOffset, row.getSizeInBytes)
 
-  @inline private def hashRow(row: UnsafeRow): Int = {
-    val h = Murmur3_x86_32.hashUnsafeWords(
-      row.getBaseObject, row.getBaseOffset, row.getSizeInBytes, 42)
-    if (h == 0) 1 else h
-  }
-
-  @inline private def hashBytes(b: Array[Byte]): Int = {
-    val h = Murmur3_x86_32.hashUnsafeWords(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42)
+  @inline private def hashAt(base: AnyRef, off: Long, len: Int): Int = {
+    val h = Murmur3_x86_32.hashUnsafeWords(base, off, len, 42)
     if (h == 0) 1 else h
   }
 
@@ -515,25 +567,23 @@ private[state] final class ArenaMap {
     -1 // unreachable
   }
 
+  /** Index a key known to be absent, into a table without tombstones. */
+  private def place(h: Int, slotValue: Long): Unit = {
+    var j = (h * -1640531527) & mask
+    while (poss(j) != 0L) j = (j + 1) & mask
+    poss(j) = slotValue
+    hashes(j) = h
+  }
+
   private def grow(): Unit = {
     val oldCap = cap
-    cap <<= 1
-    mask = cap - 1
     val oh = hashes; val op = poss
-    hashes = new Array[Int](cap)
-    poss = new Array[Long](cap)
+    resetIndex(cap << 1)
     var i = 0
     while (i < oldCap) {
-      val p = op(i)
-      if (p >= 2L) {
-        var j = (oh(i) * -1640531527) & mask
-        while (poss(j) != 0L) j = (j + 1) & mask
-        poss(j) = p
-        hashes(j) = oh(i)
-      }
+      if (op(i) >= 2L) place(oh(i), op(i))
       i += 1
     }
-    tombstones = 0
   }
 
   @inline private def markDead(pos: Long): Unit = {
@@ -602,11 +652,12 @@ private[state] final class ArenaMap {
       value.getBaseObject, value.getBaseOffset, value.getSizeInBytes,
       journaled = true)
 
-  def putRaw(key: Array[Byte], value: Array[Byte]): Unit =
-    putInternal(hashBytes(key),
-      key, Platform.BYTE_ARRAY_OFFSET, key.length,
-      value, Platform.BYTE_ARRAY_OFFSET, value.length,
+  /** Replay a put: key in `buf[0, klen)`, value in `buf[klen, klen + vlen)`. */
+  def putRaw(buf: Array[Byte], klen: Int, vlen: Int): Unit = {
+    val off = Platform.BYTE_ARRAY_OFFSET.toLong
+    putInternal(hashAt(buf, off, klen), buf, off, klen, buf, off + klen, vlen,
       journaled = false)
+  }
 
   private def removeInternal(
       h: Int, kBase: AnyRef, kOff: Long, kLen: Int, journaled: Boolean): Unit = {
@@ -629,9 +680,11 @@ private[state] final class ArenaMap {
     removeInternal(hashRow(key),
       key.getBaseObject, key.getBaseOffset, key.getSizeInBytes, journaled = true)
 
-  def removeRaw(key: Array[Byte]): Unit =
-    removeInternal(hashBytes(key), key, Platform.BYTE_ARRAY_OFFSET, key.length,
-      journaled = false)
+  /** Replay a remove: key in `buf[0, klen)`. */
+  def removeRaw(buf: Array[Byte], klen: Int): Unit = {
+    val off = Platform.BYTE_ARRAY_OFFSET.toLong
+    removeInternal(hashAt(buf, off, klen), buf, off, klen, journaled = false)
+  }
 
   // Reused by get(): the returned row is valid ONLY until the next
   // get/put on this map. This is a deliberately NARROWER contract than
@@ -657,6 +710,27 @@ private[state] final class ArenaMap {
       getRow.pointTo(c, Platform.BYTE_ARRAY_OFFSET + o + 8 + klen, vlen)
       getRow
     }
+  }
+
+  /** The position of the first live entry at or after `from` in arena
+    * `cs`, or `end` when none is before it.
+    */
+  private def seekLive(cs: java.util.ArrayList[Array[Byte]], from: Long, end: Long): Long = {
+    var pos = from
+    while (pos < end) {
+      val c = cs.get((pos >>> 32).toInt)
+      val off = offOf(pos)
+      val klenRaw =
+        if (off + 8 > c.length) PadMarker
+        else Platform.getInt(c, Platform.BYTE_ARRAY_OFFSET + off)
+      if (klenRaw == PadMarker) pos = ((pos >>> 32) + 1) << 32
+      else if (klenRaw >= 0) return pos
+      else {
+        val vlen = Platform.getInt(c, Platform.BYTE_ARRAY_OFFSET + off + 4)
+        pos += 8L + (klenRaw & Int.MaxValue) + math.max(vlen, 0)
+      }
+    }
+    end
   }
 
   /** Arena-ordered iterator over live entries. DOUBLE-BUFFERED row reuse
@@ -686,30 +760,20 @@ private[state] final class ArenaMap {
       private var cur = 0
       private var ready = false
 
-      private def advance(): Unit = {
-        while (!ready && pos < end) {
-          if (offOf(pos) + 8 > ChunkSize) {
-            pos = ((pos >>> ChunkBits) + 1) << ChunkBits
-          } else {
+      private def advance(): Unit =
+        if (!ready) {
+          pos = seekLive(chunks, pos, end)
+          if (pos < end) {
             val c = chunkOf(pos)
             val o = Platform.BYTE_ARRAY_OFFSET + offOf(pos)
-            val klenRaw = Platform.getInt(c, o)
-            if (klenRaw == PadMarker) {
-              pos = ((pos >>> ChunkBits) + 1) << ChunkBits
-            } else {
-              val klen = klenRaw & Int.MaxValue
-              val vlen = Platform.getInt(c, o + 4)
-              val n = 8L + klen + math.max(vlen, 0)
-              if (klenRaw >= 0) {
-                keyRows(cur).pointTo(c, o + 8, klen)
-                valueRows(cur).pointTo(c, o + 8 + klen, vlen)
-                ready = true
-              }
-              pos += n
-            }
+            val klen = Platform.getInt(c, o)
+            val vlen = Platform.getInt(c, o + 4)
+            keyRows(cur).pointTo(c, o + 8, klen)
+            valueRows(cur).pointTo(c, o + 8 + klen, vlen)
+            ready = true
+            pos += 8L + klen + vlen
           }
         }
-      }
 
       override def hasNext: Boolean = { advance(); ready }
       override def next(): UnsafeRowPair = {
@@ -735,51 +799,64 @@ private[state] final class ArenaMap {
   def writeLive(out: DataOutputStream): Unit = {
     var i = 0
     while (i < cap) {
-      if (poss(i) >= 2L) writeRecord(out, poss(i) - 2, forceLive = true)
+      if (poss(i) >= 2L) writeRecord(out, poss(i) - 2)
       i += 1
     }
   }
 
-  private def writeRecord(out: DataOutputStream, pos: Long, forceLive: Boolean = false): Unit = {
+  private def writeRecord(out: DataOutputStream, pos: Long): Unit = {
     val c = chunkOf(pos)
-    val o = Platform.BYTE_ARRAY_OFFSET + offOf(pos)
-    val klenRaw = Platform.getInt(c, o)
-    val klen = klenRaw & Int.MaxValue
-    val vlen = Platform.getInt(c, o + 4)
+    val off = offOf(pos)
+    val klen = Platform.getInt(c, Platform.BYTE_ARRAY_OFFSET + off) & Int.MaxValue
+    val vlen = Platform.getInt(c, Platform.BYTE_ARRAY_OFFSET + off + 4)
     // a journaled put whose entry was later superseded/removed in the SAME
     // batch still replays positionally (a later journal record corrects
     // it), so dead puts are written as puts; tombstone records carry
     // vlen == -1 already
     out.writeInt(klen)
     out.writeInt(vlen)
-    val buf = new Array[Byte](klen + math.max(vlen, 0))
-    Platform.copyMemory(c, o + 8, buf, Platform.BYTE_ARRAY_OFFSET, buf.length)
-    out.write(buf)
+    out.write(c, off + 8, klen + math.max(vlen, 0))
   }
 
-  /** Rebuild arena + index from live entries when dead bytes dominate —
-    * called at snapshot cadence so long-running queries stay bounded by
-    * live state, not lifetime churn.
+  /** Rewrite arena + index from the live entries, in arena order, when
+    * the dead bytes reach the live ones (and one first chunk). Called on
+    * every commit, after its delta is published: the journal is spent
+    * and entries may move between batches. A compaction copies at most
+    * as many live bytes as writes killed since the last one, so its cost
+    * is amortized O(1) per write.
     */
   def compactIfWorthIt(): Unit = {
-    if (deadBytes < (64L << 20) || deadBytes < liveBytes) return
-    val oldIter = iterator(1, 1) // field counts irrelevant: raw copy below
-    val nc = new ArenaMap
-    // copy via raw bytes to avoid schema knowledge
-    while (oldIter.hasNext) {
-      val p = oldIter.next()
-      val k = new Array[Byte](p.key.getSizeInBytes)
-      Platform.copyMemory(p.key.getBaseObject, p.key.getBaseOffset,
-        k, Platform.BYTE_ARRAY_OFFSET, k.length)
-      val v = new Array[Byte](p.value.getSizeInBytes)
-      Platform.copyMemory(p.value.getBaseObject, p.value.getBaseOffset,
-        v, Platform.BYTE_ARRAY_OFFSET, v.length)
-      nc.putRaw(k, v)
+    if (deadBytes < liveBytes || deadBytes < FirstChunk) return
+    val oldChunks = chunks
+    val end = top
+    resetArena()
+    var newCap = InitialCap
+    while (size * 2 > newCap) newCap <<= 1
+    resetIndex(newCap)
+    var pos = seekLive(oldChunks, 0L, end)
+    while (pos < end) {
+      val c = oldChunks.get((pos >>> 32).toInt)
+      val o = Platform.BYTE_ARRAY_OFFSET + offOf(pos)
+      val klen = Platform.getInt(c, o)
+      val vlen = Platform.getInt(c, o + 4)
+      val np = writeEntry(c, o + 8, klen, c, o + 8 + klen, vlen)
+      place(hashAt(c, o + 8, klen), np + 2)
+      pos = seekLive(oldChunks, pos + 8L + klen + vlen, end)
     }
-    chunks = nc.chunks; top = nc.top
-    liveBytes = nc.liveBytes; deadBytes = 0
-    cap = nc.cap; mask = nc.mask
-    hashes = nc.hashes; poss = nc.poss
-    size = nc.size; tombstones = 0
+    compactions += 1
   }
+}
+
+private object ArenaMap {
+  private val FirstChunk = 1 << 16
+  private val MaxChunk = 1 << 22
+  private val InitialCap = 1 << 12
+  private val InitialJournal = 1024
+  /** Marks a chunk's unused tail. A stored klen can never read -1: dead
+    * entries are `klen | Int.MinValue` with klen ≤ 4 MiB, so even a dead
+    * empty key (`Int.MinValue`) stays distinct from the marker.
+    */
+  private val PadMarker = -1
+
+  private def chunkSize(k: Int): Int = if (k >= 6) MaxChunk else FirstChunk << k
 }

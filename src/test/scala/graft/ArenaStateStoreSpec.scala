@@ -37,10 +37,14 @@ class ArenaStateStoreSpec extends SparkSpec {
   private def value(v: Long): UnsafeRow =
     valProj(InternalRow(v)).copy()
 
-  private def newProvider(dir: String): ArenaStateStoreProvider = {
+  private def newProvider(
+      dir: String,
+      partition: Int = 0,
+      keySchema: StructType = keySchema,
+      valueSchema: StructType = valueSchema): ArenaStateStoreProvider = {
     val p = new ArenaStateStoreProvider
     p.init(
-      StateStoreId(dir, 0L, 0),
+      StateStoreId(dir, 0L, partition),
       keySchema, valueSchema,
       NoPrefixKeyStateEncoderSpec(keySchema),
       useColumnFamilies = false,
@@ -154,7 +158,8 @@ class ArenaStateStoreSpec extends SparkSpec {
   }
 
   test("arena store: chunk-boundary sweep at 400k keys") {
-    // 400k entries x ~48 bytes ≈ 5 chunks: exercises chunk-roll, index
+    // 400k entries x ~48 bytes ≈ 19 MB: the doubling chunks up to 4 MiB
+    // and three more at the cap: exercises chunk-roll, index
     // growth, eviction-style remove-while-iterating, and exact iteration
     val p = newProvider(tmp("arena-sweep"))
     val s = p.getStore(0, None)
@@ -656,5 +661,206 @@ class ArenaStateStoreSpec extends SparkSpec {
     val s3 = p3.getStore(ver, None)
     assert(dump(s3) == reference, "replay after losing the newest snapshot diverged")
     s3.abort(); p3.close()
+  }
+
+  // ---- arena memory: doubling chunks, compaction, honest reporting ----
+
+  private val blobSchema = StructType(Seq(StructField("blob", BinaryType)))
+  private val blobProj = UnsafeProjection.create(Array[DataType](BinaryType))
+
+  private def customMetric(m: StateStoreMetrics, name: String): Long =
+    m.customMetrics.collectFirst { case (k, v) if k.name == name => v }
+      .getOrElse(fail(s"no custom metric $name in ${m.customMetrics}"))
+
+  test("arena store: many small stores each report KiB, not a 4 MiB chunk") {
+    // a stream-stream join keeps 4 stores per partition: memory must
+    // follow the rows a store holds, not a fixed chunk per store
+    val dir = tmp("arena-many")
+    (0 until 64).foreach { part =>
+      val p = newProvider(dir, partition = part)
+      val s = p.getStore(0, None)
+      (0 until 100).foreach(i => s.put(key(part, i), value(i)))
+      s.commit()
+      val m = s.metrics
+      assert(m.numKeys == 100)
+      assert(m.memoryUsedBytes <= (256L << 10),
+        s"partition $part reports ${m.memoryUsedBytes} bytes for 100 rows")
+      assert(customMetric(m, "arenaLiveBytes") <= customMetric(m, "arenaAllocatedBytes"))
+      p.close()
+    }
+  }
+
+  test("arena store: eviction churn compacts the arena and replays identically") {
+    val dir = tmp("arena-churn")
+    val p = newProvider(dir)
+    val s1 = p.getStore(0, None)
+    (0 until 50000).foreach(i => s1.put(key(i, i), value(i)))
+    s1.commit()
+    val s2 = p.getStore(1, None)
+    (100 until 50000).foreach(i => s2.remove(key(i, i)))
+    s2.commit()
+    val m = s2.metrics
+    assert(m.memoryUsedBytes < (512L << 10), s"after churn: ${m.memoryUsedBytes} bytes")
+    assert(customMetric(m, "arenaCompactions") == 1)
+    assert(customMetric(m, "arenaDeadBytes") == 0)
+    var expected = (0 until 100).map(i => (i.toLong, i.toLong) -> i.toLong).toMap
+    // the compacted map serves reads and takes writes
+    val s3 = p.getStore(2, None)
+    assert(dump(s3) == expected)
+    assert((0 until 100).forall(i => s3.get(key(i, i)).getLong(0) == i))
+    s3.put(key(200, 200), value(200))
+    s3.remove(key(0, 0))
+    s3.commit()
+    expected = expected - ((0L, 0L)) + ((200L, 200L) -> 200L)
+    val s4 = p.getStore(3, None)
+    assert(dump(s4) == expected)
+    s4.abort()
+    p.close()
+    val p2 = newProvider(dir) // cold start: replay 1..3.gdelta
+    val s5 = p2.getStore(3, None)
+    assert(dump(s5) == expected)
+    s5.abort()
+    p2.close()
+  }
+
+  test("arena store: a hand-written v1 delta replays, and a commit writes the same bytes") {
+    // the on-disk layout, spelled out: LZ4 block stream of big-endian
+    // [klen][vlen][key][value] records, a remove as [klen][-1][key], then -2
+    val rows = new java.io.ByteArrayOutputStream
+    def int(i: Int): Unit = rows.write(java.nio.ByteBuffer.allocate(4).putInt(i).array())
+    def put(k: UnsafeRow, v: UnsafeRow): Unit = {
+      int(k.getSizeInBytes); int(v.getSizeInBytes); rows.write(k.getBytes); rows.write(v.getBytes)
+    }
+    def del(k: UnsafeRow): Unit = { int(k.getSizeInBytes); int(-1); rows.write(k.getBytes) }
+    put(key(1, 1), value(11))
+    put(key(2, 2), value(20))
+    put(key(1, 1), value(11))
+    del(key(2, 2))
+    put(key(3, 3), value(30))
+    int(-2)
+    val expected = rows.toByteArray
+    assert(expected.length == 4 * (8 + 24 + 16) + (8 + 24) + 4) // no header, no padding
+
+    val handDir = tmp("arena-v1-hand")
+    val deltaDir = java.nio.file.Paths.get(handDir, "0", "0")
+    Files.createDirectories(deltaDir)
+    val out = new net.jpountz.lz4.LZ4BlockOutputStream(
+      Files.newOutputStream(deltaDir.resolve("1.gdelta")))
+    try out.write(expected) finally out.close()
+    val p1 = newProvider(handDir)
+    val s1 = p1.getStore(1, None)
+    assert(dump(s1) == Map((1L, 1L) -> 11L, (3L, 3L) -> 30L))
+    s1.abort()
+    p1.close()
+
+    // the same ops through a store publish exactly these bytes (the
+    // journal writes each put's current bytes, so the first put of
+    // (1, 1), updated in place, reads 11)
+    val dir = tmp("arena-v1-written")
+    val p2 = newProvider(dir)
+    val s2 = p2.getStore(0, None)
+    s2.put(key(1, 1), value(10))
+    s2.put(key(2, 2), value(20))
+    s2.put(key(1, 1), value(11))
+    s2.remove(key(2, 2))
+    s2.put(key(3, 3), value(30))
+    s2.commit()
+    p2.close()
+    val in = new net.jpountz.lz4.LZ4BlockInputStream(
+      Files.newInputStream(java.nio.file.Paths.get(dir, "0", "0", "1.gdelta")))
+    val written = try in.readAllBytes() finally in.close()
+    assert(written.sameElements(expected))
+  }
+
+  test("arena store: oversized rows survive put, get, iterate and replay") {
+    def blob(n: Int, seed: Int): UnsafeRow = {
+      val b = new Array[Byte](n)
+      new scala.util.Random(seed).nextBytes(b)
+      blobProj(InternalRow(b)).copy()
+    }
+    // an entry is [klen][vlen] + 24-byte key + (16 + payload)-byte value
+    val maxPayload = (4 << 20) - 8 - 24 - 16
+    val rowsIn = Seq(
+      key(1, 1) -> blob(100, 1),
+      key(2, 2) -> blob(100000, 2), // larger than the first 64 KiB chunk
+      key(3, 3) -> blob(100, 3),
+      key(4, 4) -> blob(maxPayload, 4), // key + value = 4 MiB - 8 bytes
+      key(5, 5) -> blob(100, 5))
+    assert(rowsIn(3)._1.getSizeInBytes + rowsIn(3)._2.getSizeInBytes == (4 << 20) - 8)
+    def contents(store: ReadStateStore): Map[(Long, Long), Seq[Byte]] = {
+      val it = store.iterator(StateStore.DEFAULT_COL_FAMILY_NAME)
+      try it.map(p => (p.key.getLong(0), p.key.getLong(1)) ->
+        p.value.getBinary(0).toSeq).toMap
+      finally it.close()
+    }
+    val expected = rowsIn.map { case (k, v) =>
+      (k.getLong(0), k.getLong(1)) -> v.getBinary(0).toSeq }.toMap
+    val dir = tmp("arena-oversized")
+    val p = newProvider(dir, valueSchema = blobSchema)
+    val s = p.getStore(0, None)
+    rowsIn.foreach { case (k, v) => s.put(k, v) }
+    rowsIn.foreach { case (k, v) =>
+      assert(s.get(k).getBinary(0).sameElements(v.getBinary(0)))
+    }
+    assert(contents(s) == expected)
+    // one word (rows pad to 8 bytes) past the limit is refused, and leaves
+    // no trace
+    intercept[IllegalArgumentException](s.put(key(6, 6), blob(maxPayload + 8, 6)))
+    assert(s.get(key(6, 6)) == null)
+    s.commit()
+    p.close()
+    val p2 = newProvider(dir, valueSchema = blobSchema)
+    val s2 = p2.getStore(1, None)
+    assert(contents(s2) == expected)
+    s2.abort()
+    p2.close()
+  }
+
+  test("arena store: a superseded entry under an empty key does not hide later entries") {
+    // a global aggregate keys its state on a zero-field row; once its
+    // value changes length, the dead entry's stored klen is 0 | sign bit
+    // and must not read as a chunk's pad marker
+    val emptyKey = UnsafeProjection.create(Array.empty[DataType])(InternalRow()).copy()
+    val dir = tmp("arena-empty-key")
+    val p = newProvider(dir, keySchema = StructType(Nil), valueSchema = blobSchema)
+    val s = p.getStore(0, None)
+    s.put(emptyKey, blobProj(InternalRow(Array[Byte](1))).copy())
+    s.put(emptyKey, blobProj(InternalRow(Array.fill[Byte](20)(2))).copy())
+    def values(store: ReadStateStore): Seq[Seq[Byte]] = {
+      val it = store.iterator(StateStore.DEFAULT_COL_FAMILY_NAME)
+      try it.map(_.value.getBinary(0).toSeq).toList finally it.close()
+    }
+    assert(values(s) == Seq(Seq.fill[Byte](20)(2)))
+    s.commit()
+    p.close()
+  }
+
+  test("arena provider: progress events carry the arena's custom metrics") {
+    val base = graft.gen.DeterministicGen.transcripts(spark,
+      TranscriptSpec(nConvs = 4, turnsPerConv = 6, seed = 95))
+    val src = tmp("arena-metrics-src")
+    writeBatches(src, Seq(base))
+    val ops = withArenaProvider {
+      val s = spark.readStream.schema(GuardianStream.turnSchema)
+        .parquet(src)
+        .withWatermark("ts", "365 days")
+      val q = DedupState.dedupRows(s).writeStream
+        .option("checkpointLocation", tmp("arena-metrics-ck"))
+        .outputMode("append")
+        .format("memory").queryName("arena_metrics_out")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q.recentProgress.toSeq.flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+    }
+    assert(ops.nonEmpty && ops.exists(_.numRowsTotal > 0))
+    ops.foreach { op =>
+      val cm = op.customMetrics
+      Seq("arenaAllocatedBytes", "arenaLiveBytes", "arenaDeadBytes", "arenaCompactions")
+        .foreach(n => assert(cm.containsKey(n), s"missing $n in $cm"))
+      assert(cm.get("arenaLiveBytes") <= cm.get("arenaAllocatedBytes"), cm.toString)
+      assert(cm.get("arenaAllocatedBytes") <= op.memoryUsedBytes, cm.toString)
+    }
+    assert(ops.exists(_.customMetrics.get("arenaLiveBytes") > 0))
   }
 }
