@@ -1,9 +1,11 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import scala.util.control.NonFatal
 import graft.lineage.DataLineage
 import graft.model.{ColumnSpec, Turn}
 import graft.validate.Validator
@@ -865,7 +867,7 @@ object GuardianStream {
         ()
       }
     if (availableNow) writer = writer.trigger(Trigger.AvailableNow())
-    writer.start()
+    startQuery(spark, writer)
   }
 
   /** Health/progress record for a standing query — the engine analog of
@@ -924,6 +926,44 @@ object GuardianStream {
       .outputMode("append")
       .foreachBatch((batch: DataFrame, batchId: Long) => processBatch(batch, batchId, cfg))
     if (cfg.availableNow) writer = writer.trigger(Trigger.AvailableNow())
-    writer.start()
+    startQuery(spark, writer)
+  }
+
+  /** Query-scoped defaults `startQuery` applies when the caller left the
+    * key unset:
+    *  - the engine's checkpoint manager: local checkpoint files through
+    *    java.nio, without Hadoop's per-file `chmod`/`readlink` forks;
+    *  - no artifact isolation: an isolated query session gets a fresh
+    *    executor classloader, and the codegen cache is keyed by
+    *    classloader, so every query start recompiled (and re-JITted) all
+    *    its generated classes. The guardian plans use no session artifacts.
+    */
+  private val QueryDefaults = Seq(
+    LocalCheckpointFileManager.ManagerClassKey -> classOf[LocalCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  /** Start `writer` on the caller's session, so its `spark.streams`
+    * listeners see the query, with `QueryDefaults` set for as long as the
+    * query builds its checkpoint I/O: `start()` clones the session its
+    * offset and commit logs, state stores and schema files use, and the
+    * file sources — whose `sources/<i>` logs read the caller's session —
+    * exist once the query is initialized. Then the caller's conf is
+    * restored exactly.
+    */
+  private def startQuery(spark: SparkSession, writer: DataStreamWriter[Row]): StreamingQuery = {
+    val set = spark.conf.getAll
+    val applied = QueryDefaults.filterNot { case (k, _) => set.contains(k) }
+    applied.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = writer.start()
+      q match {
+        case w: StreamingQueryWrapper =>
+          // a query that dies initializing reports it through the query
+          try w.streamingQuery.awaitInitialization(60000L)
+          catch { case NonFatal(_) => () }
+        case _ =>
+      }
+      q
+    } finally applied.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }

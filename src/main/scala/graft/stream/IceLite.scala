@@ -72,11 +72,19 @@ object PosixCommitIO extends CommitIO {
     val tmp = target.getParent.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     Files.createDirectories(target.getParent)
     Files.writeString(tmp, content)
+    linkIfAbsent(tmp, target)
+  }
+
+  /** Make the written file `tmp` visible as `target` iff `target` is
+    * absent — atomic and winner-takes-all; false when `target` already
+    * existed. `tmp` is removed either way. createLink is atomic AND fails
+    * with EEXIST when the target exists. (Files.move with ATOMIC_MOVE maps
+    * to rename(2) on Linux, which silently REPLACES an existing target —
+    * last-writer-wins, NOT winner-takes-all; caught by the publish-race
+    * test.) The engine's checkpoint manager publishes through it too.
+    */
+  def linkIfAbsent(tmp: Path, target: Path): Boolean =
     try {
-      // createLink is atomic AND fails with EEXIST when the target exists.
-      // (Files.move with ATOMIC_MOVE maps to rename(2) on Linux, which
-      // silently REPLACES an existing target — last-writer-wins, NOT
-      // winner-takes-all; caught by the publish-race test.)
       Files.createLink(target, tmp)
       true
     } catch {
@@ -85,7 +93,6 @@ object PosixCommitIO extends CommitIO {
       Files.deleteIfExists(tmp)
       ()
     }
-  }
 }
 
 object IceLite {
@@ -221,7 +228,6 @@ object IceLite {
   }
 
   def footerStats(dataDir: String): Seq[PartitionManifest] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     def parquetFiles(f: java.io.File): Seq[java.io.File] = {
       val fs = Option(f.listFiles()).getOrElse(Array.empty).toSeq
       fs.filter(x => x.isFile && x.getName.endsWith(".parquet")) ++
@@ -236,7 +242,7 @@ object IceLite {
     val files: Array[java.io.File] = parquetFiles(new java.io.File(dataDir)).toArray
     files
       .map(f => java.util.concurrent.CompletableFuture.supplyAsync(
-        () => footerOf(f, conf), footerPool))
+        () => footerOf(f, footerConf), footerPool))
       .flatMap(_.join())
       .groupBy(_.pid)
       .map { case (pid, ms) =>
@@ -249,6 +255,12 @@ object IceLite {
       .toSeq
       .sortBy(_.pid)
   }
+
+  /** One Hadoop conf for every footer read: a fresh `Configuration`
+    * re-parses core-default.xml on first use — a few ms on every epoch's
+    * commit path. Footer reads only read it.
+    */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
   /** Shared bounded pool for footer reads — one per process, daemon
     * threads (a fresh pool per commit would put 8 thread creations inside

@@ -2,13 +2,15 @@ package graft.stream.state
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.state._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import graft.stream.LocalCheckpointFileManager
 
 /** ArenaStateStoreProvider — a clone-free, allocation-free state store for
   * Spark Structured Streaming's hot stateful operators.
@@ -39,8 +41,12 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *  - Version history lives ON DISK ONLY (exactly the Iceberg-style
   *    manifests-over-files discipline the audit sink uses): each commit
   *    appends `<v>.gdelta` (LZ4, the batch's puts/removes in arrival
-  *    order) via write-temp-then-rename, and every
-  *    `minDeltasForSnapshot` commits also writes a full `<v>.gsnapshot`.
+  *    order) as an atomic create of the query's `CheckpointFileManager`
+  *    (temp file, then atomic replace; a failed write cancels its temp),
+  *    and every `minDeltasForSnapshot` commits also writes a full
+  *    `<v>.gsnapshot`. All of the provider's file I/O goes through that
+  *    manager: java.nio under the engine's `LocalCheckpointFileManager`,
+  *    Spark's own manager otherwise.
   *    Recovery (abort, task retry, resume-from-checkpoint, version
   *    rewind) rebuilds the map from the newest snapshot ≤ v plus the
   *    delta chain — the SAME replay contract the built-in providers
@@ -78,7 +84,7 @@ class ArenaStateStoreProvider extends StateStoreProvider {
   private var valueSchema: StructType = _
   private var storeConf: StateStoreConf = _
   private var hadoopConf: Configuration = _
-  private var fs: FileSystem = _
+  private var fm: CheckpointFileManager = _
   private var baseDir: HPath = _
   /** ADVICE r3: `get` returns a reused row valid only until the next
     * get/put — narrower than the built-in providers. The operators this
@@ -121,9 +127,9 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     this.storeConf = storeConfs
     this.hadoopConf = hadoopConf
     this.baseDir = stateStoreId.storeCheckpointLocation()
-    this.fs = baseDir.getFileSystem(hadoopConf)
+    this.fm = CheckpointFileManager.create(baseDir, hadoopConf)
     this.copyOnGet = hadoopConf.getBoolean("graft.arena.copyOnGet", false)
-    fs.mkdirs(baseDir)
+    fm.mkdirs(baseDir)
   }
 
   override def stateStoreId: StateStoreId = storeId
@@ -163,13 +169,13 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     * retained version stays reconstructable.
     */
   override def doMaintenance(): Unit = {
-    if (fs == null) return
+    if (fm == null) return
     val target = synchronized(currentVersion)
     val snapBase = listVersions(".gsnapshot").filter(_ <= target).sorted.lastOption.getOrElse(0L)
     // shadow build reads only immutable published files — no lock needed
     val shadow: Option[ArenaMap] =
       if (target - snapBase >= math.max(1, storeConf.minDeltasForSnapshot) &&
-          (snapBase + 1 to target).forall(v => fs.exists(new HPath(baseDir, s"$v.gdelta")))) {
+          (snapBase + 1 to target).forall(v => fm.exists(new HPath(baseDir, s"$v.gdelta")))) {
         val m = new ArenaMap
         if (snapBase > 0) replayFile(new HPath(baseDir, s"$snapBase.gsnapshot"), m)
         (snapBase + 1 to target).foreach(v =>
@@ -180,8 +186,8 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     // in-flight temp file or concurrent publishes
     synchronized {
       shadow.foreach(m => writeVersion(m, target, snapshot = true))
-      listNames(".tmp-").foreach { n =>
-        try fs.delete(new HPath(baseDir, n), false)
+      listNames.filter(LocalCheckpointFileManager.isTempName).foreach { n =>
+        try fm.delete(new HPath(baseDir, n))
         catch { case _: Throwable => () }
       }
       val floor = target - math.max(1, storeConf.minVersionsToRetain)
@@ -189,25 +195,21 @@ class ArenaStateStoreProvider extends StateStoreProvider {
         val anchor = listVersions(".gsnapshot").filter(_ <= floor).sorted.lastOption
         anchor.foreach { a =>
           listVersions(".gsnapshot").filter(_ < a)
-            .foreach(v => fs.delete(new HPath(baseDir, s"$v.gsnapshot"), false))
+            .foreach(v => fm.delete(new HPath(baseDir, s"$v.gsnapshot")))
           listVersions(".gdelta").filter(_ <= a)
-            .foreach(v => fs.delete(new HPath(baseDir, s"$v.gdelta"), false))
+            .foreach(v => fm.delete(new HPath(baseDir, s"$v.gdelta")))
         }
       }
     }
   }
 
-  private def listNames(prefix: String): Seq[String] = {
-    if (!fs.exists(baseDir)) return Seq.empty
-    fs.listStatus(baseDir).toSeq.map(_.getPath.getName).filter(_.startsWith(prefix))
-  }
+  private def listNames: Seq[String] =
+    if (!fm.exists(baseDir)) Seq.empty
+    else fm.list(baseDir).toSeq.map(_.getPath.getName)
 
-  private def listVersions(suffix: String): Seq[Long] = {
-    if (!fs.exists(baseDir)) return Seq.empty
-    fs.listStatus(baseDir).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(suffix))
+  private def listVersions(suffix: String): Seq[Long] =
+    listNames.filter(_.endsWith(suffix))
       .flatMap(n => scala.util.Try(n.stripSuffix(suffix).toLong).toOption)
-  }
 
   // ---- recovery: rebuild the map from snapshot + delta chain ----
 
@@ -222,7 +224,7 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     var v = base + 1
     while (v <= version) {
       val p = new HPath(baseDir, s"$v.gdelta")
-      require(fs.exists(p), s"missing state delta $p for version $version")
+      require(fm.exists(p), s"missing state delta $p for version $version")
       replayFile(p, map)
       v += 1
     }
@@ -233,7 +235,7 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     */
   private def replayFile(p: HPath, into: ArenaMap): Unit = {
     val in = new DataInputStream(new net.jpountz.lz4.LZ4BlockInputStream(
-      new BufferedInputStream(fs.open(p), 1 << 16)))
+      new BufferedInputStream(fm.open(p), 1 << 16)))
     try {
       var buf = new Array[Byte](1 << 12)
       var done = false
@@ -258,25 +260,22 @@ class ArenaStateStoreProvider extends StateStoreProvider {
 
   // ---- commit: append the batch's ops as an atomic delta file ----
 
+  /** Publish `<version>.gdelta` (the journal) or `.gsnapshot` (the live
+    * entries); a rerun of a version replaces its file.
+    */
   private def writeVersion(from: ArenaMap, version: Long, snapshot: Boolean): Unit = {
     val suffix = if (snapshot) ".gsnapshot" else ".gdelta"
-    val target = new HPath(baseDir, s"$version$suffix")
-    val tmp = new HPath(baseDir, s".tmp-$version-${System.nanoTime()}$suffix")
+    val raw = fm.createAtomic(new HPath(baseDir, s"$version$suffix"), overwriteIfPossible = true)
     try {
       val out = new DataOutputStream(new net.jpountz.lz4.LZ4BlockOutputStream(
-        new BufferedOutputStream(fs.create(tmp, true), 1 << 16)))
-      try {
-        if (snapshot) from.writeLive(out) else from.writeJournal(out)
-        out.writeInt(-2)
-      } finally out.close()
-      if (fs.exists(target)) fs.delete(target, false)
-      if (!fs.rename(tmp, target)) {
-        throw new IllegalStateException(s"failed to publish state file $target")
-      }
+        new BufferedOutputStream(raw, 1 << 16)))
+      if (snapshot) from.writeLive(out) else from.writeJournal(out)
+      out.writeInt(-2)
+      out.close() // publishes
     } catch {
       case t: Throwable =>
         // never leak the temp file (maintenance also sweeps strays)
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
+        raw.cancel()
         throw t
     }
   }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -1160,5 +1161,119 @@ class StreamingSpec extends SparkSpec {
     assert(q.recentProgress.map(_.numInputRows).sum == spec.totalTurns)
     assert(h.eventTimeWatermark.nonEmpty, s"watermark surfaced: $h")
     assert(h.statusMessage.nonEmpty)
+  }
+
+  // ---- the start path: warm, fork-free queries on the caller's session ----
+
+  private val startKeys = Seq(
+    LocalCheckpointFileManager.ManagerClassKey, "spark.sql.artifact.isolation.enabled")
+
+  private def startConf: Map[String, Option[String]] =
+    startKeys.map(k => k -> spark.conf.getAll.get(k)).toMap
+
+  /** Hadoop's `.<name>.crc` side files under the checkpoint's offsets,
+    * commits, sources and state (Spark's own state checksum files, when
+    * enabled, are `<name>.crc` and not counted).
+    */
+  private def checkpointCrcs(ck: String): Seq[String] =
+    Seq("offsets", "commits", "sources", "state").flatMap { d =>
+      val dir = java.nio.file.Paths.get(ck, d)
+      if (!Files.exists(dir)) Seq.empty
+      else {
+        val s = Files.walk(dir)
+        try s.iterator().asScala.map(_.toString)
+          .filter(p => p.endsWith(".crc") && p.split('/').last.startsWith(".")).toList
+        finally s.close()
+      }
+    }
+
+  private def withArena[A](f: => A): A = {
+    val k = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, "graft.stream.state.ArenaStateStoreProvider")
+    try f
+    finally prev match {
+      case Some(p) => spark.conf.set(k, p)
+      case None => spark.conf.unset(k)
+    }
+  }
+
+  private def guardianDrain(src: String, tag: String): GuardianStream.StreamConfig = {
+    val cfg = GuardianStream.StreamConfig(
+      sourceDir = src, checkpointDir = tmp(s"$tag-ck"), sinkDir = tmp(s"$tag-sink"),
+      maxFilesPerTrigger = Some(1), availableNow = true)
+    GuardianStream.start(spark, cfg).awaitTermination()
+    cfg
+  }
+
+  test("start and startProvenance leave the caller's conf as they found it, set or unset; listeners see the query") {
+    val turns = turnsDF(TranscriptSpec(nConvs = 4, turnsPerConv = 8, seed = 53))
+    val src = tmp("start-src")
+    writeBatches(src, Seq(turns))
+    assert(startConf.values.forall(_.isEmpty), s"keys set before the test: $startConf")
+
+    // unset: the query runs on the engine's defaults, the caller's conf
+    // stays unset, and the caller's listeners receive its progress
+    val progressOf = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = { progressOf.add(e.progress.id); () }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val (q, cfg) =
+      try {
+        val cfg = GuardianStream.StreamConfig(
+          sourceDir = src, checkpointDir = tmp("start-ck"), sinkDir = tmp("start-sink"),
+          availableNow = true)
+        val q = GuardianStream.start(spark, cfg)
+        assert(startConf.values.forall(_.isEmpty), s"unset keys leaked: $startConf")
+        q.awaitTermination()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!progressOf.contains(q.id) && System.nanoTime() < deadline) Thread.sleep(50)
+        (q, cfg)
+      } finally spark.streams.removeListener(listener)
+    assert(progressOf.contains(q.id), "the caller's listener saw no progress of the query")
+    assert(checkpointCrcs(cfg.checkpointDir).isEmpty,
+      s"the engine's checkpoint manager wrote no .crc: ${checkpointCrcs(cfg.checkpointDir)}")
+
+    // set: the caller's values win and survive the start
+    val callers = Map(
+      LocalCheckpointFileManager.ManagerClassKey ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager",
+      "spark.sql.artifact.isolation.enabled" -> "true")
+    callers.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val ck = tmp("start-prov-ck")
+      GuardianStream.startProvenance(spark, src, src, ck, tmp("start-prov-sink"),
+        availableNow = true).awaitTermination()
+      assert(startConf == callers.map { case (k, v) => k -> Some(v) })
+      assert(checkpointCrcs(ck).nonEmpty, "the caller's FileContext manager ran the query")
+    } finally startKeys.foreach(spark.conf.unset)
+  }
+
+  test("a second AvailableNow drain of the same input compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val slices = Seq(21, 22).map(seed => turnsDF(TranscriptSpec(nConvs = 4, turnsPerConv = 8, seed = seed)))
+    val src = tmp("warm-src")
+    writeBatches(src, slices)
+    withArena {
+      guardianDrain(src, "warm-1")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      guardianDrain(src, "warm-2")
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"the second drain compiled $compiled classes")
+    }
+  }
+
+  test("a drain writes no .crc file under the checkpoint's offsets, commits, sources or state") {
+    val turns = turnsDF(TranscriptSpec(nConvs = 6, turnsPerConv = 8, seed = 57))
+    val src = tmp("nocrc-src")
+    writeBatches(src, Seq(turns.filter(col("turn_idx") < 4), turns.filter(col("turn_idx") >= 4)))
+    val cfg = withArena(guardianDrain(src, "nocrc"))
+    assert(Files.exists(java.nio.file.Paths.get(cfg.checkpointDir, "state")), "the query kept state")
+    val crcs = checkpointCrcs(cfg.checkpointDir)
+    assert(crcs.isEmpty, s"checksum side files: $crcs")
   }
 }
