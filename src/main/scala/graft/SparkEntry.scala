@@ -442,16 +442,13 @@ object SparkEntry {
     // under the driver's hash gate. The oracle restates fixture + filter.
     "audit_conv_trace" -> ((s, dir) => {
       val root = scratchDir("graft-audit-trace")
-      // persisted across the two epoch commits (each commit evaluates its
-      // slice twice for stats + data); released before the lookup — the
-      // returned frame reads the committed parquet, not this plan
-      val turns = e2eFixture(s, dir).drop("event_id").persist()
+      // each commit is one job over its slice of the fixture parquet
+      val turns = e2eFixture(s, dir).drop("event_id")
       val lin = new graft.lineage.DataLineage("audit")
       graft.stream.IceLite.commit(
-        turns.filter(col("conv_id") <= "conv-000007"), s"$root/t", 0L, lin)
+        turns.filter(col("conv_id") <= "conv-000007"), s"$root/t", 0L)(_ => lin)
       graft.stream.IceLite.commit(
-        turns.filter(col("conv_id") > "conv-000007"), s"$root/t", 1L, lin)
-      turns.unpersist()
+        turns.filter(col("conv_id") > "conv-000007"), s"$root/t", 1L)(_ => lin)
       graft.stream.IceLite.readConv(s, s"$root/t", "conv-000007")
         .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
           col("tool"), col("ts"))

@@ -152,9 +152,6 @@ object GuardianStream {
   private def qualityRoot(sinkDir: String): String =
     java.nio.file.Paths.get(sinkDir, "quality").toString
 
-  private def qualityManifestPath(root: String, batchId: Long): java.nio.file.Path =
-    java.nio.file.Paths.get(root, "manifests", f"manifest-$batchId%09d.json")
-
   /** The epoch's committed data dir, or None when the epoch wrote no
     * parquet (empty epoch) — the recovery re-derivation source.
     */
@@ -222,7 +219,7 @@ object GuardianStream {
     cfg.qualitySlide.foreach(node.put("slide", _))
     monitors.foreach(_.publish(node, cfg, values))
     IceLite.commitIO.publishIfAbsent(
-      qualityManifestPath(root, batchId), mapper.writeValueAsString(node))
+      IceLite.manifestPath(root, batchId), mapper.writeValueAsString(node))
     ()
   }
 
@@ -331,8 +328,6 @@ object GuardianStream {
   private def publishSessions(
       spark: SparkSession, cfg: StreamConfig, batchId: Long): Unit = {
     val gap = cfg.sessionGap.getOrElse(return)
-    val root = sessionsRoot(cfg.sinkDir)
-    if (IceLite.isCommitted(root, batchId)) return
     val rows: DataFrame = epochDataDir(cfg, batchId) match {
       case Some(dataDir) => spark.read.parquet(dataDir)
         .select(col("conv_id"), col("ts"), col("text_len"), col("has_pii"))
@@ -384,13 +379,13 @@ object GuardianStream {
         timestamp_micros(col("s_start_us")).as("s_start"),
         timestamp_micros(col("s_end_us")).as("s_end"),
         col("n_turns"), col("len_sum"), col("n_pii"))
-      .withColumn("pid", spark_partition_id())
-    val dir = IceLite.writeData(partials, root, batchId)
-    val lineage = new DataLineage(s"${cfg.datasetId}-sessions", createdAt = 0.0)
-    lineage.record("session_quality", 0L, 0L,
-      Map("epoch" -> batchId.toString, "gap" -> gap),
-      timestamp = Some(batchId.toDouble))
-    IceLite.publish(root, batchId, lineage, IceLite.footerStats(dir))
+    IceLite.commit(partials, sessionsRoot(cfg.sinkDir), batchId) { _ =>
+      val lineage = new DataLineage(s"${cfg.datasetId}-sessions", createdAt = 0.0)
+      lineage.record("session_quality", 0L, 0L,
+        Map("epoch" -> batchId.toString, "gap" -> gap),
+        timestamp = Some(batchId.toDouble))
+      lineage
+    }
     ()
   }
 
@@ -421,75 +416,14 @@ object GuardianStream {
         col("n_turns"), col("len_sum"), col("n_pii"))
   }
 
-  private def compactSessionsMarker(root: String, upTo: Long): java.nio.file.Path =
-    java.nio.file.Paths.get(root, "manifests", f"compact-$upTo%09d.json")
-
-  /** Data dir of a PUBLISHED compacted session table — resolved from the
-    * marker's `path` (attempt-unique per compactor) through the same
-    * failure-tolerant resolver the audit table uses.
-    */
-  private def compactSessionsDataDir(root: String, upTo: Long): String =
-    IceLite.resolveCompactDir(
-      root, compactSessionsMarker(root, upTo), s"compact/$upTo")
-
-  /** All live session partials: the latest compacted table (if any) plus
-    * the residual per-epoch batches — O(compacted) files, not O(epochs).
-    */
-  private def sessionPartials(spark: SparkSession, root: String): DataFrame = {
-    val (latest, residual) = qualitySources(root) // same manifest naming
-    sessionPartialsOf(spark, root, latest, residual)
-  }
-
-  /** Partials of an EXPLICIT source snapshot — compaction folds exactly
-    * the listing it decided `upTo` from (re-listing could fold an epoch
-    * committed in between while readers still count it as residual).
-    */
-  private def sessionPartialsOf(
-      spark: SparkSession, root: String,
-      latest: Option[Long], residual: Seq[Long]): DataFrame = {
-    require(latest.nonEmpty || residual.nonEmpty,
-      s"sessions table at $root has no committed epochs")
-    val cols = Seq("conv_id", "s_start", "s_end", "n_turns", "len_sum", "n_pii")
-      .map(col)
-    val parts =
-      latest.map(u =>
-        spark.read.parquet(compactSessionsDataDir(root, u)).select(cols: _*)).toSeq ++
-        (if (residual.nonEmpty)
-          Seq(IceLite.readBatches(spark, root, residual).select(cols: _*))
-        else Seq.empty)
-    parts.reduce(_.unionByName(_))
-  }
-
   /** Roll the accumulated per-epoch session partials (plus the previous
-    * compacted table, if any) into ONE compacted parquet table under
-    * `sessions/compact/<upTo>/`, made visible by an atomically-published
-    * marker manifest. Lossless: merged islands are valid partials (see
-    * mergeSessionIslands), so `readSessionQuality` before ≡ after.
-    * Returns false when < 2 residual epoch batches exist.
+    * compacted table, if any) into ONE compacted table — `IceLite.compact`
+    * with the islands merge as its rewrite. Lossless: merged islands are
+    * valid partials (see mergeSessionIslands), so `readSessionQuality`
+    * before ≡ after. Returns false when < 2 residual epoch batches exist.
     */
-  def compactSessions(spark: SparkSession, sinkDir: String): Boolean = {
-    val root = sessionsRoot(sinkDir)
-    val (latest, residual) = qualitySources(root)
-    if (residual.size < 2) return false
-    val upTo = residual.max
-    if (IceLite.commitIO.exists(compactSessionsMarker(root, upTo))) return false
-    // write first to an ATTEMPT-UNIQUE dir (invisible until the marker
-    // publish; a losing concurrent compactor can never clobber the
-    // winner's published data — ADVICE r4), then race on the marker
-    val attemptRel = s"compact/$upTo-${java.util.UUID.randomUUID().toString.take(8)}"
-    val attemptDir = java.nio.file.Paths.get(root, attemptRel).toString
-    mergeSessionIslands(sessionPartialsOf(spark, root, latest, residual))
-      .write.mode("overwrite").parquet(attemptDir)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    node.put("upto_batch", upTo)
-    latest.foreach(node.put("prev_compact", _))
-    node.put("path", attemptRel)
-    val won = IceLite.commitIO.publishIfAbsent(
-      compactSessionsMarker(root, upTo), mapper.writeValueAsString(node))
-    if (!won) IceLite.rmTree(new java.io.File(attemptDir))
-    won
-  }
+  def compactSessions(spark: SparkSession, sinkDir: String): Boolean =
+    IceLite.compact(spark, sessionsRoot(sinkDir), mergeSessionIslands)
 
   /** Merged view of the per-epoch session partials: interval islands per
     * conversation (sort by start; a partial starting before the running
@@ -497,7 +431,7 @@ object GuardianStream {
     * batch `Windows.sessionWindows` over the same deduped rows.
     */
   def readSessionQuality(spark: SparkSession, sinkDir: String): DataFrame = {
-    mergeSessionIslands(sessionPartials(spark, sessionsRoot(sinkDir)))
+    mergeSessionIslands(IceLite.read(spark, sessionsRoot(sinkDir)))
       .select(
         col("conv_id"),
         col("s_start").as("session_start"),
@@ -506,16 +440,6 @@ object GuardianStream {
         (col("len_sum").cast("double") / col("n_turns")).as("len_mean"),
         col("n_pii"))
   }
-
-  private def compactQualityPath(root: String, upTo: Long): java.nio.file.Path =
-    java.nio.file.Paths.get(root, "manifests", f"compact-$upTo%09d.json")
-
-  /** (latest compacted manifest's upto-batch, epoch manifests NOT yet
-    * folded into it) — what a reader must parse: O(1) compacted state +
-    * the residual epochs, never every epoch since stream start.
-    */
-  private[graft] def qualitySources(root: String): (Option[Long], Seq[Long]) =
-    IceLite.compactSources(root)
 
   /** The one quality fold's input: the given sources of the quality table
     * at `root`, each read and parsed exactly once, in the one order every
@@ -527,15 +451,15 @@ object GuardianStream {
   private def qualityManifests(root: String, latest: Option[Long],
       residual: Seq[Long]): Seq[com.fasterxml.jackson.databind.JsonNode] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    (latest.map(compactQualityPath(root, _)).toSeq ++
-      residual.map(qualityManifestPath(root, _)))
+    (latest.map(IceLite.compactMarkerPath(root, _)).toSeq ++
+      residual.map(IceLite.manifestPath(root, _)))
       .map(p => mapper.readTree(java.nio.file.Files.readString(p)))
   }
 
   /** Every live quality manifest of a sink, parsed (see qualityManifests). */
   private def liveQuality(sinkDir: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
     val root = qualityRoot(sinkDir)
-    val (latest, residual) = qualitySources(root)
+    val (latest, residual) = IceLite.compactSources(root)
     qualityManifests(root, latest, residual)
   }
 
@@ -558,7 +482,7 @@ object GuardianStream {
     */
   def compactQuality(sinkDir: String): Boolean = {
     val root = qualityRoot(sinkDir)
-    val (latest, residual) = qualitySources(root)
+    val (latest, residual) = IceLite.compactSources(root)
     if (residual.size < 2) return false
     val upTo = residual.max
     val manifests = qualityManifests(root, latest, residual)
@@ -568,77 +492,23 @@ object GuardianStream {
     latest.foreach(node.put("prev_compact", _))
     MonitorPartial.all.foreach(_.compact(node, manifests))
     IceLite.commitIO.publishIfAbsent(
-      compactQualityPath(root, upTo), mapper.writeValueAsString(node))
+      IceLite.compactMarkerPath(root, upTo), mapper.writeValueAsString(node))
   }
 
-  /** Expire state superseded by compaction (the Iceberg
-    * `expire_snapshots` discipline): per-epoch quality manifests at or
-    * below the latest compacted manifest's upto-batch, and session epoch
-    * manifests/data plus older compacted session tables. Reads are
-    * unaffected (readers already prefer the compacted state); safe
-    * against redelivery because Structured Streaming re-runs only the
-    * LATEST batch after a crash, and the latest batch's partials are
-    * never folded before its own publishes complete (auto-compaction
+  /** Expire the quality and session state superseded by compaction —
+    * `IceLite.expireCompacted` on both tables: per-epoch quality
+    * manifests at or below the latest compacted manifest's upto-batch,
+    * and session epoch manifests/data plus older compacted session
+    * tables. Reads are unaffected (readers already prefer the compacted
+    * state); safe against redelivery because Structured Streaming re-runs
+    * only the LATEST batch after a crash, and the latest batch's partials
+    * are never folded before its own publishes complete (auto-compaction
     * runs at the END of processBatch). Returns the number of files/dirs
     * removed.
     */
-  def expireFolded(sinkDir: String): Int = {
-    var removed = 0
-    def sweep(root: String, alsoData: Boolean): Unit = {
-      val (latest, _) = qualitySources(root)
-      latest.foreach { upTo =>
-        val mdir = java.nio.file.Paths.get(root, "manifests")
-        IceLite.commitIO.listNames(mdir).foreach { n =>
-          val folded =
-            (n.startsWith("manifest-") && n.endsWith(".json") &&
-              n.stripPrefix("manifest-").stripSuffix(".json").toLong <= upTo) ||
-            (n.startsWith("compact-") && n.endsWith(".json") &&
-              n.stripPrefix("compact-").stripSuffix(".json").toLong < upTo)
-          if (folded) {
-            val p = mdir.resolve(n)
-            // Superseded manifests are never on the read path (readers
-            // prefer the latest compacted state), so the delete order
-            // within one entry is immaterial for them; data-first keeps
-            // the sweep idempotent — a crash between the deletes leaves
-            // the manifest, so a re-run finds the entry and re-deletes
-            // the (possibly half-gone) data dir.
-            if (alsoData) {
-              if (n.startsWith("manifest-")) {
-                val b = n.stripPrefix("manifest-").stripSuffix(".json").toLong
-                IceLite.rmTree(
-                  java.nio.file.Paths.get(root, "data", s"batch=$b").toFile)
-              } else {
-                // resolve via the marker's path BEFORE deleting the marker
-                val u = n.stripPrefix("compact-").stripSuffix(".json").toLong
-                IceLite.rmTree(new java.io.File(compactSessionsDataDir(root, u)))
-              }
-            }
-            if (java.nio.file.Files.deleteIfExists(p)) removed += 1
-          }
-        }
-        // orphan attempt dirs from losing/crashed compactors (same sweep
-        // rule as IceLite.expireCompacted: numbered <= latest, not the
-        // live published dir, AND stale past the grace window — a slow
-        // in-flight compactor's dir is never deleted under its write)
-        if (alsoData) {
-          val live = java.nio.file.Paths
-            .get(compactSessionsDataDir(root, upTo)).getFileName.toString
-          val cdir = java.nio.file.Paths.get(root, "compact")
-          IceLite.commitIO.listNames(cdir).foreach { d =>
-            val num = d.takeWhile(_.isDigit)
-            if (d != live && num.nonEmpty && num.toLong <= upTo &&
-                IceLite.orphanStale(cdir.resolve(d))) {
-              IceLite.rmTree(cdir.resolve(d).toFile)
-              removed += 1
-            }
-          }
-        }
-      }
-    }
-    sweep(qualityRoot(sinkDir), alsoData = false)
-    sweep(sessionsRoot(sinkDir), alsoData = true)
-    removed
-  }
+  def expireFolded(sinkDir: String): Int =
+    IceLite.expireCompacted(qualityRoot(sinkDir)) +
+      IceLite.expireCompacted(sessionsRoot(sinkDir))
 
   /** Merged view of the per-epoch quality partials: one row per window
     * with the same statistics Windows.driftWindows computes in batch
@@ -699,24 +569,16 @@ object GuardianStream {
   /** Validate one micro-batch and commit it exactly-once.
     *
     * Cost discipline (this is the per-epoch hot path): the transform
-    * pipeline is evaluated EXACTLY ONCE, in the parquet data write — the
-    * only Spark job of the epoch. The validation report's moments ride
-    * along as `observe()` metrics of that same job, and the manifest's
-    * per-partition lineage (row counts, conv_id ranges) is read from the
-    * written parquet footers driver-side (the per-file-stats design real
-    * Iceberg manifests use). The atomic manifest publish stays last,
-    * preserving the invisible-until-committed invariant.
+    * pipeline is evaluated EXACTLY ONCE, in `IceLite.commit`'s parquet
+    * data write — the only Spark job of the epoch. The validation
+    * report's moments ride along as `observe()` metrics of that same job,
+    * and the manifest's per-partition lineage (row counts, conv_id
+    * ranges) is read from the written parquet footers driver-side (the
+    * per-file-stats design real Iceberg manifests use). The atomic
+    * manifest publish stays last, preserving the
+    * invisible-until-committed invariant.
     */
   def processBatch(batch: DataFrame, batchId: Long, cfg: StreamConfig): Unit = {
-    if (IceLite.isCommitted(cfg.sinkDir, batchId)) {
-      // Epoch already visible (foreachBatch redelivery) — but a crash
-      // between the main and the quality/session publishes must still be
-      // healed.
-      publishQuality(batch.sparkSession, cfg, batchId, observed = None)
-      publishSessions(batch.sparkSession, cfg, batchId)
-      return
-    }
-    val obs = org.apache.spark.sql.Observation(s"guardian-$batchId")
     val baseMetrics = Seq(
       count(lit(1)).as("n"),
       min(col("text_len")).as("lmin"),
@@ -730,17 +592,33 @@ object GuardianStream {
     // zero extra jobs and zero extra scans.
     val metrics = baseMetrics ++
       MonitorPartial.enabled(cfg).map(mp => mp.column(cfg).as(mp.name))
-    val stamped = batch
-      .withColumn("pid", spark_partition_id())
-      .observe(obs, metrics.head, metrics.tail: _*)
-    val dataDir = IceLite.writeData(stamped, cfg.sinkDir, batchId)
+    val observed =
+      IceLite.commit(batch, cfg.sinkDir, batchId, metrics: _*)(epochLineage(cfg, batchId, _))
+    // None: the epoch was already visible (foreachBatch redelivery) — a
+    // crash between the main and the quality/session publishes is healed
+    // here, the quality partials re-derived from the committed parquet.
+    publishQuality(batch.sparkSession, cfg, batchId, observed)
+    publishSessions(batch.sparkSession, cfg, batchId)
+    // Periodic partial compaction (idempotent, crash-safe: atomic
+    // publish-if-absent of deterministic merged content; old state stays
+    // readable until the compacted manifest lands).
+    cfg.compactEvery.foreach { n =>
+      if (n > 0 && batchId > 0 && batchId % n == 0) {
+        if (cfg.qualityWindow.isDefined) compactQuality(cfg.sinkDir)
+        if (cfg.sessionGap.isDefined) compactSessions(batch.sparkSession, cfg.sinkDir)
+        ()
+      }
+    }
+  }
 
-    val m = obs.get
-    val parts = IceLite.footerStats(dataDir)
+  /** The audit manifest's lineage for one epoch, from the write job's
+    * observed metrics `m`.
+    */
+  private def epochLineage(
+      cfg: StreamConfig, batchId: Long, m: Map[String, Any]): DataLineage = {
     val report = reportFromObserved(m)
     val nPii = if (m("npii") == null) 0L else m("npii").asInstanceOf[Long]
     val n = report.record_count
-
     val lineage = new DataLineage(cfg.datasetId, createdAt = 0.0)
     // Source offsets for this epoch, from the checkpoint's offset WAL —
     // written by the engine BEFORE the batch executes, so it is exact and
@@ -771,19 +649,7 @@ object GuardianStream {
         report.checks.get("text_len").map(c =>
           "text_len_mean" -> c.actual_mean.toString),
       timestamp = Some(batchId.toDouble))
-    IceLite.publish(cfg.sinkDir, batchId, lineage, parts)
-    publishQuality(batch.sparkSession, cfg, batchId, observed = Some(m))
-    publishSessions(batch.sparkSession, cfg, batchId)
-    // Periodic partial compaction (idempotent, crash-safe: atomic
-    // publish-if-absent of deterministic merged content; old state stays
-    // readable until the compacted manifest lands).
-    cfg.compactEvery.foreach { n =>
-      if (n > 0 && batchId > 0 && batchId % n == 0) {
-        if (cfg.qualityWindow.isDefined) compactQuality(cfg.sinkDir)
-        if (cfg.sessionGap.isDefined) compactSessions(batch.sparkSession, cfg.sinkDir)
-        ()
-      }
-    }
+    lineage
   }
 
   /** Fixed duration string → microseconds (month-bearing intervals have no
@@ -846,13 +712,8 @@ object GuardianStream {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!IceLite.isCommitted(sinkDir, batchId)) {
-          val stamped = batch.withColumn("pid", spark_partition_id())
-          val obs = org.apache.spark.sql.Observation(s"prov-$batchId")
-          val observed = stamped.observe(obs,
-            count(lit(1)).as("n"), sum(col("text_match").cast("long")).as("matched"))
-          IceLite.writeData(observed, sinkDir, batchId)
-          val m = obs.get
+        IceLite.commit(batch, sinkDir, batchId,
+            count(lit(1)).as("n"), sum(col("text_match").cast("long")).as("matched")) { m =>
           val n = m.get("n").collect { case l: Long => l }.getOrElse(0L)
           val lineage = new DataLineage("provenance", createdAt = 0.0)
           lineage.record("provenance_join", n, n,
@@ -861,8 +722,7 @@ object GuardianStream {
               "text_matched" ->
                 m.get("matched").flatMap(Option(_)).map(_.toString).getOrElse("0")),
             timestamp = Some(batchId.toDouble))
-          IceLite.publish(sinkDir, batchId, lineage, IceLite.footerStats(
-            java.nio.file.Paths.get(sinkDir, "data", s"batch=$batchId").toString))
+          lineage
         }
         ()
       }

@@ -2,40 +2,11 @@ package graft.stream
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.lineage.DataLineage
 
-/** IceLite — an Iceberg-emulating table layout: Parquet data files made
-  * visible only by atomically-published JSON manifests.
-  *
-  * The north rule requires an "Iceberg audit sink with per-partition
-  * lineage manifests (conv_id-range, offsets, checkpoint epoch)" and
-  * exactly-once semantics. No Iceberg runtime jar exists in the offline
-  * sandbox (SURVEY.md §7.3), so this implements precisely the subset of
-  * Iceberg's contract the north star uses:
-  *
-  *  - data files land under `data/batch=<epoch>/` and are INVISIBLE to
-  *    readers until `manifests/manifest-<epoch>.json` is published with an
-  *    atomic rename — a crashed or duplicated `foreachBatch` invocation
-  *    leaves no visible trace;
-  *  - a manifest that already exists short-circuits the commit
-  *    (idempotent by batch id ⇒ exactly-once under Structured Streaming's
-  *    at-least-once `foreachBatch` retries);
-  *  - each manifest records per-partition lineage: partition id, row
-  *    count, conv_id min/max, plus the batch's lineage event log — any
-  *    output row is traceable to its source micro-batch by (epoch,
-  *    partition, conv_id range).
-  *
-  * Layout (flat — `pid` is a DATA column, not a directory: `partitionBy`
-  * would force a per-batch sort; the file↔partition binding is recovered
-  * from each file's parquet footer stats, min == max on `pid`):
-  * {{{
-  *   <root>/data/batch=<epoch>/part-*.parquet   (pid, conv_id, … columns)
-  *   <root>/manifests/manifest-<epoch %09d>.json ("path": "data/batch=<epoch>")
-  * }}}
-  */
 /** The filesystem contract the exactly-once commit rests on — ONE
   * primitive: publish-if-absent of a small manifest file, atomic and
   * winner-takes-all under concurrent publishers.
@@ -95,6 +66,44 @@ object PosixCommitIO extends CommitIO {
     }
 }
 
+/** IceLite — an Iceberg-emulating table layout: Parquet data files made
+  * visible only by atomically-published JSON manifests.
+  *
+  * The north rule requires an "Iceberg audit sink with per-partition
+  * lineage manifests (conv_id-range, offsets, checkpoint epoch)" and
+  * exactly-once semantics. No Iceberg runtime jar exists in the offline
+  * sandbox (SURVEY.md §7.3), so this implements precisely the subset of
+  * Iceberg's contract the north star uses:
+  *
+  *  - data files land under `data/batch=<epoch>/` and are INVISIBLE to
+  *    readers until `manifests/manifest-<epoch>.json` is published with an
+  *    atomic rename — a crashed or duplicated `foreachBatch` invocation
+  *    leaves no visible trace;
+  *  - a manifest that already exists short-circuits the commit
+  *    (idempotent by batch id ⇒ exactly-once under Structured Streaming's
+  *    at-least-once `foreachBatch` retries);
+  *  - each manifest records per-partition lineage: partition id, row
+  *    count, conv_id min/max, plus the batch's lineage event log — any
+  *    output row is traceable to its source micro-batch by (epoch,
+  *    partition, conv_id range).
+  *
+  * Layout (flat — `pid` is a DATA column, not a directory: `partitionBy`
+  * would force a per-batch sort; the file↔partition binding is recovered
+  * from each file's parquet footer stats, min == max on `pid`):
+  * {{{
+  *   <root>/data/batch=<epoch>/part-*.parquet   (pid, conv_id, … columns)
+  *   <root>/manifests/manifest-<epoch %09d>.json ("path": "data/batch=<epoch>")
+  *   <root>/compact/<upto>-<attempt>/part-*.parquet
+  *   <root>/manifests/compact-<upto %09d>.json ("path": "compact/<upto>-<attempt>")
+  * }}}
+  *
+  * One lifecycle serves the tables the guardian writes: `commit` lands
+  * an epoch of the audit, provenance and session-partials tables,
+  * `compact` folds a table's committed epochs into one, and
+  * `expireCompacted` deletes what a compaction superseded — also on the
+  * quality table, whose epochs and compactions are manifests with no
+  * data files.
+  */
 object IceLite {
 
   /** The commit seam — swap for an object-store CommitIO in deployments
@@ -113,46 +122,58 @@ object IceLite {
       partitions: Seq[PartitionManifest],
       lineageJson: String)
 
-  private def manifestPath(root: String, batchId: Long): Path =
+  private[stream] def manifestPath(root: String, batchId: Long): Path =
     Paths.get(root, "manifests", f"manifest-$batchId%09d.json")
+
+  private[stream] def compactMarkerPath(root: String, upTo: Long): Path =
+    Paths.get(root, "manifests", f"compact-$upTo%09d.json")
+
+  /** A manifest-directory entry: `manifest-<n>.json` is epoch n's
+    * manifest, `compact-<n>.json` the marker of a compaction up to epoch
+    * n. Other names (publish temp files) do not match.
+    */
+  private object TableFile {
+    private val Name = """(manifest|compact)-(\d+)\.json""".r
+    def unapply(name: String): Option[(String, Long)] = name match {
+      case Name(kind, n) => Some((kind, n.toLong))
+      case _ => None
+    }
+  }
 
   def isCommitted(root: String, batchId: Long): Boolean =
     commitIO.exists(manifestPath(root, batchId))
 
   def committedBatches(root: String): Seq[Long] =
     commitIO.listNames(Paths.get(root, "manifests"))
-      .filter(n => n.startsWith("manifest-") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("manifest-").stripSuffix(".json").toLong)
+      .collect { case TableFile("manifest", b) => b }
       .sorted
 
-  /** Idempotent exactly-once commit of one micro-batch. Returns false when
-    * the batch id was already committed (duplicate foreachBatch delivery).
+  /** Idempotent exactly-once commit of one epoch — the one write path of
+    * the audit, provenance and session tables. Returns the `metrics` the
+    * write job observed (empty when none are given), or None when the
+    * batch id was already committed (a duplicate foreachBatch delivery,
+    * or a concurrent commit that published first).
     *
-    * Partition binding: rows are stamped with `spark_partition_id()` and
-    * `pid` is written as a DATA column (see `writeData` — `partitionBy`
-    * would force a per-batch sort; each write task emits one file, so the
-    * file↔partition binding is recoverable from parquet footer stats).
-    * The per-partition stats in the manifest describe exactly the rows
-    * with that `pid` — the (conv_id-range, epoch, partition) triple the
-    * north star requires. The stamped frame is persisted so stats and
-    * files come from one evaluation.
+    * ONE Spark job: rows are stamped with `spark_partition_id()` as `pid`,
+    * the data files are written while `metrics` ride the same job as
+    * `observe()` aggregates, and the per-partition stats (row counts,
+    * conv_id min/max, pid binding) are read driver-side from the written
+    * parquet FOOTERS. The manifest — its lineage built by `lineage` from
+    * the observed values — is published last, so the epoch stays
+    * invisible until committed. Its per-partition stats describe exactly
+    * the rows with that `pid`: the (conv_id-range, epoch, partition)
+    * triple the north star requires.
     */
-  def commit(
-      df: DataFrame,
-      root: String,
-      batchId: Long,
-      lineage: DataLineage): Boolean = {
-    if (isCommitted(root, batchId)) return false
+  def commit(df: DataFrame, root: String, batchId: Long, metrics: Column*)(
+      lineage: Map[String, Any] => DataLineage): Option[Map[String, Any]] = {
+    if (isCommitted(root, batchId)) return None
     val stamped = df.withColumn("pid", spark_partition_id())
-    // ONE evaluation: write the data files, then read the per-partition
-    // stats (row counts, conv_id min/max, pid binding) from the written
-    // parquet FOOTERS driver-side — the same single-job commit the
-    // streaming sink runs (processBatch). The earlier formulation
-    // persisted the frame and ran a separate groupBy(pid) stats job
-    // before the write: two jobs + a cache entry per commit for stats the
-    // footers already carry.
-    val dir = writeData(stamped, root, batchId)
-    publish(root, batchId, lineage, footerStats(dir))
+    val observation = Option.when(metrics.nonEmpty)(Observation())
+    val dir = writeData(
+      observation.fold(stamped)(stamped.observe(_, metrics.head, metrics.tail: _*)),
+      root, batchId)
+    val observed = observation.fold(Map.empty[String, Any])(_.get)
+    Option.when(publish(root, batchId, lineage(observed), footerStats(dir)))(observed)
   }
 
   /** Write one batch's data files (invisible until `publish`). Returns the
@@ -173,7 +194,7 @@ object IceLite {
   }
 
   /** Atomically publish the manifest that makes a written batch visible. */
-  def publish(
+  private def publish(
       root: String,
       batchId: Long,
       lineage: DataLineage,
@@ -181,11 +202,6 @@ object IceLite {
     writeManifest(root, Manifest(
       batchId, lineage.datasetId, stats.map(_.rowCount).sum, stats, lineage.toJson))
 
-  /** Per-partition stats straight from the written parquet FOOTERS —
-    * row counts and conv_id min/max come from parquet column statistics,
-    * read driver-side in milliseconds with NO Spark job (the same
-    * per-file-stats design real Iceberg manifests use).
-    */
   /** One file's (pid, rows, conv_id range) from its parquet footer. */
   private def footerOf(
       f: java.io.File,
@@ -227,6 +243,11 @@ object IceLite {
     } finally reader.close()
   }
 
+  /** Per-partition stats straight from the written parquet FOOTERS —
+    * row counts and conv_id min/max come from parquet column statistics,
+    * read driver-side in milliseconds with NO Spark job (the same
+    * per-file-stats design real Iceberg manifests use).
+    */
   def footerStats(dataDir: String): Seq[PartitionManifest] = {
     def parquetFiles(f: java.io.File): Seq[java.io.File] = {
       val fs = Option(f.listFiles()).getOrElse(Array.empty).toSeq
@@ -273,21 +294,6 @@ object IceLite {
       t
     })
 
-  /** Commit a frame already stamped with a `pid` column, with per-partition
-    * stats the caller computed (lets the pipeline share ONE aggregation
-    * job between the validation report and the manifest).
-    */
-  def commitStamped(
-      stamped: DataFrame,
-      root: String,
-      batchId: Long,
-      lineage: DataLineage,
-      stats: Seq[PartitionManifest]): Boolean = {
-    if (isCommitted(root, batchId)) return false
-    writeData(stamped, root, batchId)
-    publish(root, batchId, lineage, stats)
-  }
-
   private def writeManifest(root: String, m: Manifest): Boolean = {
     val node = mapper.createObjectNode()
     node.put("batch_id", m.batchId)
@@ -324,10 +330,6 @@ object IceLite {
       mapper.writeValueAsString(node.get("lineage")))
   }
 
-  /** Snapshot read: only manifest-listed batches are visible (uncommitted
-    * data directories are never listed). basePath makes batch/pid proper
-    * partition columns so partition pruning works on them.
-    */
   /** Snapshot read: the latest COMPACTED table (if any) plus residual
     * committed batches — O(compacted) paths instead of one directory per
     * epoch since stream start. Uncompacted tables read exactly as before
@@ -335,12 +337,21 @@ object IceLite {
     */
   def read(spark: SparkSession, root: String): DataFrame = {
     val (latest, residual) = compactSources(root)
+    sources(spark, root, latest, residual)
+  }
+
+  /** The rows of an EXPLICIT source listing: the compacted table `latest`
+    * (if any) plus the `residual` epoch batches. Readers and compaction
+    * plan from one listing — re-listing could see a compaction or an
+    * epoch published in between.
+    */
+  private def sources(spark: SparkSession, root: String,
+      latest: Option[Long], residual: Seq[Long]): DataFrame = {
     require(latest.nonEmpty || residual.nonEmpty,
       s"IceLite table at $root has no committed batches")
-    val parts =
-      latest.map(u => spark.read.parquet(compactDataDir(root, u))).toSeq ++
-        (if (residual.nonEmpty) Seq(readBatches(spark, root, residual)) else Seq.empty)
-    parts.reduce(_.unionByName(_))
+    (latest.map(u => spark.read.parquet(compactDataDir(root, u))).toSeq ++
+      Option.when(residual.nonEmpty)(readBatches(spark, root, residual)))
+      .reduce(_.unionByName(_))
   }
 
   /** Residual epoch batches whose manifest per-partition
@@ -377,16 +388,12 @@ object IceLite {
     require(latest.nonEmpty || residual.nonEmpty,
       s"IceLite table at $root has no committed batches")
     val hits = convBatchesOf(root, convId, residual)
-    val parts =
-      latest.map(u => spark.read.parquet(compactDataDir(root, u))).toSeq ++
-        (if (hits.nonEmpty) Seq(readBatches(spark, root, hits)) else Seq.empty)
-    if (parts.isEmpty)
+    if (latest.isEmpty && hits.isEmpty)
       // schema-stable empty result: no epoch can contain the conv — plan
       // one pruned-to-nothing scan rather than inventing a schema
-      readBatches(spark, root, residual.take(1))
-        .filter(org.apache.spark.sql.functions.lit(false))
+      readBatches(spark, root, residual.take(1)).filter(lit(false))
     else
-      parts.reduce(_.unionByName(_)).filter(col("conv_id") === convId)
+      sources(spark, root, latest, hits).filter(col("conv_id") === convId)
   }
 
   /** Snapshot read of SPECIFIC committed batch ids (the compaction read
@@ -405,38 +412,31 @@ object IceLite {
   // The small-files discipline a standing query needs at deployment
   // horizons: a month of seconds-cadence epochs is ~10^6 batch
   // directories — listing and scan planning over them dominates any
-  // read. Same atomic-marker pattern as the quality/session partial
-  // compaction (write data invisible, publish marker winner-takes-all,
-  // expire superseded state separately).
-
-  private def compactMarkerPath(root: String, upTo: Long): Path =
-    Paths.get(root, "manifests", f"compact-$upTo%09d.json")
+  // read. Write the folded data invisible, publish its marker
+  // winner-takes-all, expire the superseded state separately. The
+  // manifest-only quality table folds its manifests the same way
+  // (GuardianStream.compactQuality) and expires through the same sweep.
 
   /** Data dir of a PUBLISHED compacted table: resolved from the marker's
     * `path` field (each compaction attempt writes an attempt-unique dir,
     * so a losing concurrent compactor can never clobber the winner's
     * published data — ADVICE r4). Falls back to the legacy `compact/<upTo>`
-    * layout for markers written before the path field existed.
-    */
-  def compactDataDir(root: String, upTo: Long): String =
-    resolveCompactDir(root, compactMarkerPath(root, upTo), s"compact/$upTo")
-
-  /** Resolve a compacted table's data dir from its marker's `path` field
-    * (shared by the audit table and the session-partials table). The read
+    * layout for markers written before the path field existed. The read
     * is failure-tolerant, not just existence-checked: a concurrent expiry
     * sweep may delete a SUPERSEDED marker between the exists() and the
     * read — the legacy fallback keeps both the reader (which never reads
     * superseded markers) and the idempotent sweep well-defined.
     */
-  private[stream] def resolveCompactDir(
-      root: String, mp: Path, legacyRel: String): String = {
+  def compactDataDir(root: String, upTo: Long): String = {
+    val mp = compactMarkerPath(root, upTo)
+    val legacy = s"compact/$upTo"
     val rel =
       try {
         if (commitIO.exists(mp))
           Option(mapper.readTree(Files.readString(mp)).get("path"))
-            .map(_.asText()).getOrElse(legacyRel)
-        else legacyRel
-      } catch { case _: java.io.IOException => legacyRel }
+            .map(_.asText()).getOrElse(legacy)
+        else legacy
+      } catch { case _: java.io.IOException => legacy }
     Paths.get(root, rel).toString
   }
 
@@ -449,15 +449,12 @@ object IceLite {
   /** How long an unreferenced attempt dir must sit untouched before the
     * orphan sweep may remove it — a live parquet write keeps refreshing
     * its dir as part files land, so only crashed attempts go stale.
-    * Tunable for tests (GRAFT_ORPHAN_GRACE_MS env for deployments).
     */
-  @volatile private[graft] var orphanGraceMs: Long =
-    sys.env.get("GRAFT_ORPHAN_GRACE_MS").map(_.toLong)
-      .getOrElse(15L * 60 * 1000)
+  private val OrphanGraceMs = 15L * 60 * 1000
 
-  private[stream] def orphanStale(p: Path): Boolean =
+  private def orphanStale(p: Path): Boolean =
     try {
-      val cutoff = System.currentTimeMillis() - orphanGraceMs
+      val cutoff = System.currentTimeMillis() - OrphanGraceMs
       def newest(f: java.io.File): Long =
         if (f.isDirectory)
           (f.lastModified() +:
@@ -469,23 +466,23 @@ object IceLite {
   /** (latest compacted marker's upto-batch, committed batches after it). */
   def compactSources(root: String): (Option[Long], Seq[Long]) = {
     val names = commitIO.listNames(Paths.get(root, "manifests"))
-    val latest = names
-      .filter(n => n.startsWith("compact-") && n.endsWith(".json"))
-      .map(_.stripPrefix("compact-").stripSuffix(".json").toLong)
-      .sorted.lastOption
+    val latest = names.collect { case TableFile("compact", u) => u }.maxOption
     val residual = names
-      .filter(n => n.startsWith("manifest-") && n.endsWith(".json"))
-      .map(_.stripPrefix("manifest-").stripSuffix(".json").toLong)
-      .filter(b => latest.forall(b > _))
+      .collect { case TableFile("manifest", b) if latest.forall(b > _) => b }
       .sorted
     (latest, residual)
   }
 
   /** Fold the residual committed batches (plus the previous compacted
-    * table, if any) into ONE compacted parquet table. Pure rewrite —
-    * audit rows are immutable facts, so read-before ≡ read-after. The
-    * marker carries the folded row count so accounting survives expiry
-    * of the per-epoch manifests. Returns false with < 2 residual batches.
+    * table, if any) into ONE compacted parquet table: `rewrite` of their
+    * union. The audit tables fold by `identity` — audit rows are
+    * immutable facts, so read-before ≡ read-after; the session partials
+    * fold by merging interval islands, itself lossless. The marker's
+    * `row_count` counts the rows folded in (the folded epoch manifests'
+    * counts plus the previous marker's), so accounting survives expiry of
+    * the per-epoch manifests; it is left out when the previous marker has
+    * none (session markers written before the count was kept) rather than
+    * guessed. Returns false with < 2 residual batches.
     *
     * Cost note: this rewrite is O(previous compact + residual) — a
     * MAINTENANCE action run at coarse cadence, unlike the every-N-epochs
@@ -494,7 +491,8 @@ object IceLite {
     * Iceberg's rewrite_data_files); the marker/visibility protocol here
     * is the part that carries over unchanged.
     */
-  def compact(spark: SparkSession, root: String): Boolean = {
+  def compact(spark: SparkSession, root: String,
+      rewrite: DataFrame => DataFrame = identity): Boolean = {
     val (latest, residual) = compactSources(root)
     if (residual.size < 2) return false
     val upTo = residual.max
@@ -507,56 +505,50 @@ object IceLite {
     // never exposed to a mid-overwrite dir.
     val attemptRel = s"compact/$upTo-${java.util.UUID.randomUUID().toString.take(8)}"
     val attemptDir = Paths.get(root, attemptRel).toString
-    val parts =
-      latest.map(u => spark.read.parquet(compactDataDir(root, u))).toSeq :+
-        readBatches(spark, root, residual)
-    val folded = parts.reduce(_.unionByName(_))
-    folded.write.mode("overwrite").parquet(attemptDir)
-    val prevRows = latest.map { u =>
-      val n = mapper.readTree(Files.readString(compactMarkerPath(root, u)))
-      n.get("row_count").asLong()
-    }.getOrElse(0L)
+    rewrite(sources(spark, root, latest, residual)).write.mode("overwrite").parquet(attemptDir)
+    val prevRows = latest.fold(Option(0L)) { u =>
+      Option(mapper.readTree(Files.readString(compactMarkerPath(root, u))).get("row_count"))
+        .map(_.asLong())
+    }
     val node = mapper.createObjectNode()
     node.put("upto_batch", upTo)
     latest.foreach(node.put("prev_compact", _))
     node.put("path", attemptRel)
-    node.put("row_count",
-      prevRows + residual.map(b => readManifest(root, b).rowCount).sum)
+    prevRows.foreach(p =>
+      node.put("row_count", p + residual.map(b => readManifest(root, b).rowCount).sum))
     val won = commitIO.publishIfAbsent(
       compactMarkerPath(root, upTo), mapper.writeValueAsString(node))
     if (!won) rmTree(new java.io.File(attemptDir))
     won
   }
 
-  /** Expire state superseded by `compact`: folded epoch data dirs and
+  /** Expire state superseded by the latest compaction (the Iceberg
+    * `expire_snapshots` discipline): folded epoch data dirs and
     * manifests, older compacted tables, and orphan attempt dirs from
-    * losing/crashed compactors. Superseded manifests are never on the
+    * losing/crashed compactors. On the manifest-only quality table the
+    * data deletes find nothing. Superseded manifests are never on the
     * read path (`compactSources` prefers the latest compacted marker), so
     * the delete ORDER within one entry is immaterial for readers;
     * data-first keeps the sweep idempotent — a crash between the two
     * deletes leaves the manifest in place, so the re-run finds the entry
-    * again and re-deletes the (possibly half-gone) data dir. Idempotent.
+    * again and re-deletes the (possibly half-gone) data dir. Returns the
+    * number of manifests, markers and orphan dirs removed.
     */
   def expireCompacted(root: String): Int = {
     val (latest, _) = compactSources(root)
     var removed = 0
     latest.foreach { upTo =>
       val mdir = Paths.get(root, "manifests")
-      commitIO.listNames(mdir).foreach { n =>
-        val p = mdir.resolve(n)
-        if (n.startsWith("manifest-") && n.endsWith(".json") &&
-            n.stripPrefix("manifest-").stripSuffix(".json").toLong <= upTo) {
-          rmTree(Paths.get(root, "data",
-            s"batch=${n.stripPrefix("manifest-").stripSuffix(".json").toLong}").toFile)
-          if (Files.deleteIfExists(p)) removed += 1
-        } else if (n.startsWith("compact-") && n.endsWith(".json") &&
-            n.stripPrefix("compact-").stripSuffix(".json").toLong < upTo) {
+      commitIO.listNames(mdir).foreach {
+        case n @ TableFile("manifest", b) if b <= upTo =>
+          rmTree(Paths.get(root, "data", s"batch=$b").toFile)
+          if (Files.deleteIfExists(mdir.resolve(n))) removed += 1
+        case n @ TableFile("compact", u) if u < upTo =>
           // resolve the marker's data dir BEFORE deleting the marker (the
           // path field is only recoverable from it)
-          rmTree(new java.io.File(
-            compactDataDir(root, n.stripPrefix("compact-").stripSuffix(".json").toLong)))
-          if (Files.deleteIfExists(p)) removed += 1
-        }
+          rmTree(new java.io.File(compactDataDir(root, u)))
+          if (Files.deleteIfExists(mdir.resolve(n))) removed += 1
+        case _ =>
       }
       // Orphan attempt dirs: a compactor that crashed before publish (or
       // lost the race mid-cleanup) leaves compact/<upTo'>-<uuid> with no

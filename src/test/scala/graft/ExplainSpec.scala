@@ -80,8 +80,7 @@ class ExplainSpec extends SparkSpec {
     try {
       val turns = graft.gen.DeterministicGen.transcripts(
         spark, graft.gen.DeterministicGen.TranscriptSpec(nConvs = 3, turnsPerConv = 4, seed = 5))
-      graft.stream.IceLite.commit(
-        turns, root, 0L, new graft.lineage.DataLineage("t"))
+      graft.stream.IceLite.commit(turns, root, 0L)(_ => new graft.lineage.DataLineage("t"))
       val p = graft.stream.IceLite.readConv(spark, root, "conv-000001")
         .queryExecution.executedPlan.toString()
       assert(p.contains("PushedFilters") && p.contains("conv_id"),

@@ -321,7 +321,7 @@ class StreamingSpec extends SparkSpec {
 
     val qRoot = java.nio.file.Paths.get(cfg.sinkDir, "quality").toString
     val sRoot = java.nio.file.Paths.get(cfg.sinkDir, "sessions").toString
-    val epochsBefore = GuardianStream.qualitySources(qRoot)._2.size
+    val epochsBefore = IceLite.compactSources(qRoot)._2.size
     assert(epochsBefore >= 4, s"fixture must commit many epochs ($epochsBefore)")
 
     def canonQ(): Set[String] = GuardianStream.readQuality(spark, cfg.sinkDir)
@@ -342,8 +342,8 @@ class StreamingSpec extends SparkSpec {
     assert(canonQ() == qBefore, "readQuality unchanged by compaction")
     assert(canonS() == sBefore, "readSessionQuality unchanged by compaction")
     // read path now touches ONE compacted source + zero residual epochs
-    val (qc, qr) = GuardianStream.qualitySources(qRoot)
-    val (sc, sr) = GuardianStream.qualitySources(sRoot)
+    val (qc, qr) = IceLite.compactSources(qRoot)
+    val (sc, sr) = IceLite.compactSources(sRoot)
     assert(qc.nonEmpty && qr.isEmpty, s"quality residual after compaction: $qr")
     assert(sc.nonEmpty && sr.isEmpty, s"sessions residual after compaction: $sr")
     // nothing left to fold ⇒ no-op, and a SECOND compaction cycle after
@@ -353,12 +353,56 @@ class StreamingSpec extends SparkSpec {
 
     // expiry: folded epoch manifests + superseded session data removed,
     // merged views byte-identical after the sweep
+    def tree(): Set[String] = {
+      val root = java.nio.file.Paths.get(cfg.sinkDir)
+      val s = Files.walk(root)
+      try s.iterator().asScala.map(root.relativize(_).toString).toSet
+      finally s.close()
+    }
+    val qFolded = IceLite.committedBatches(qRoot).filter(b => qc.exists(b <= _))
+    val sFolded = IceLite.committedBatches(sRoot).filter(b => sc.exists(b <= _))
+    // the session marker counts the partial rows folded in
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def sMarkerPath(u: Long) =
+      java.nio.file.Paths.get(sRoot, "manifests", f"compact-$u%09d.json")
+    def sMarker(u: Long) = mapper.readTree(Files.readString(sMarkerPath(u)))
+    assert(sMarker(sc.get).get("row_count").asLong() ==
+      sFolded.map(b => IceLite.readManifest(sRoot, b).rowCount).sum)
+    val treeBefore = tree()
     val removed = GuardianStream.expireFolded(cfg.sinkDir)
-    assert(removed >= epochsBefore, s"expiry removed $removed files")
+    val treeAfter = tree()
+    assert(treeAfter.subsetOf(treeBefore), s"expiry only deletes: ${treeAfter -- treeBefore}")
+    val expected = treeBefore.filter { p =>
+      qFolded.exists(b => p == f"quality/manifests/manifest-$b%09d.json") ||
+        sFolded.exists(b => p == f"sessions/manifests/manifest-$b%09d.json" ||
+          p == s"sessions/data/batch=$b" || p.startsWith(s"sessions/data/batch=$b/"))
+    }
+    assert(treeBefore -- treeAfter == expected,
+      s"expiry removed exactly the folded epochs: extra ${(treeBefore -- treeAfter) -- expected}, " +
+        s"kept ${expected -- (treeBefore -- treeAfter)}")
+    assert(qFolded.size >= epochsBefore && sFolded.size >= epochsBefore)
+    assert(removed == qFolded.size + sFolded.size, s"expiry removed $removed files")
     assert(IceLite.committedBatches(qRoot).isEmpty, "folded quality manifests expired")
     assert(canonQ() == qBefore, "readQuality unchanged by expiry")
     assert(canonS() == sBefore, "readSessionQuality unchanged by expiry")
     assert(GuardianStream.expireFolded(cfg.sinkDir) == 0, "expiry is idempotent")
+
+    // a sink whose session marker predates the folded-row count (only
+    // upto_batch and path): two more epochs, then compaction over it —
+    // the merged view is unchanged and the new marker guesses no count
+    val old = mapper.createObjectNode()
+    old.put("upto_batch", sc.get)
+    old.put("path", sMarker(sc.get).get("path").asText())
+    Files.writeString(sMarkerPath(sc.get), mapper.writeValueAsString(old))
+    GuardianStream.processBatch(tinyTurns("one more turn"), sc.get + 1, cfg)
+    GuardianStream.processBatch(tinyTurns("and another"), sc.get + 2, cfg)
+    val sBeforeOld = canonS()
+    assert(sBeforeOld.size == sBefore.size + 1, "the new epochs add one session")
+    assert(GuardianStream.compactSessions(spark, cfg.sinkDir), "compaction over the old marker")
+    assert(canonS() == sBeforeOld, "readSessionQuality unchanged by compaction over an old sink")
+    val newMarker = sMarker(sc.get + 2)
+    assert(newMarker.get("prev_compact").asLong() == sc.get)
+    assert(!newMarker.has("row_count"), s"no guessed row_count: $newMarker")
   }
 
   test("auto-compaction every N epochs keeps the manifest count bounded") {
@@ -382,7 +426,7 @@ class StreamingSpec extends SparkSpec {
       compactEvery = Some(2))
     GuardianStream.start(spark, cfg).awaitTermination()
     val qRoot = java.nio.file.Paths.get(cfg.sinkDir, "quality").toString
-    val (compact, residual) = GuardianStream.qualitySources(qRoot)
+    val (compact, residual) = IceLite.compactSources(qRoot)
     assert(compact.nonEmpty, "auto-compaction published a compacted manifest")
     assert(residual.size <= 2, s"residual epochs bounded by the cadence: $residual")
     // and the merged view still matches the per-epoch manifests' total
@@ -516,6 +560,44 @@ class StreamingSpec extends SparkSpec {
     assert(IceLite.expireCompacted(cfg.sinkDir) > 0)
     assert(canonA() == aBefore && canonS() == sBefore && canonQ() == qBefore,
       "all reads unchanged after expiry")
+  }
+
+  test("expiry sweeps a stale orphan compaction attempt and keeps a fresh one, audit and sessions") {
+    val cfg = GuardianStream.StreamConfig(
+      sourceDir = "unused", checkpointDir = tmp("orphan-ck"), sinkDir = tmp("orphan-sink"),
+      qualityWindow = None, sessionGap = Some("30 minutes"))
+    Seq("alpha", "beta", "gamma").zipWithIndex.foreach { case (t, b) =>
+      GuardianStream.processBatch(tinyTurns(t), b.toLong, cfg)
+    }
+    val sRoot = java.nio.file.Paths.get(cfg.sinkDir, "sessions").toString
+    assert(IceLite.compact(spark, cfg.sinkDir))
+    assert(GuardianStream.compactSessions(spark, cfg.sinkDir))
+    // two attempt dirs no marker names: a crashed compactor's (untouched
+    // for an hour) and a live one's (just written)
+    val hourAgo = System.currentTimeMillis() - 60L * 60 * 1000
+    def plant(root: String): (java.io.File, java.io.File) = {
+      val upTo = IceLite.compactSources(root)._1.get
+      val Seq(stale, fresh) = Seq("deadbeef", "cafef00d").map { a =>
+        val d = new java.io.File(root, s"compact/$upTo-$a")
+        assert(d.mkdirs())
+        Files.writeString(new java.io.File(d, "part-00000.parquet").toPath, "x")
+        d
+      }
+      stale.listFiles().foreach(_.setLastModified(hourAgo))
+      assert(stale.setLastModified(hourAgo))
+      (stale, fresh)
+    }
+    val planted = Seq(plant(cfg.sinkDir), plant(sRoot))
+    // three folded epoch manifests + the stale orphan, in each table
+    assert(IceLite.expireCompacted(cfg.sinkDir) == 4)
+    assert(GuardianStream.expireFolded(cfg.sinkDir) == 4)
+    planted.foreach { case (stale, fresh) =>
+      assert(!stale.exists(), s"stale orphan swept: $stale")
+      assert(fresh.isDirectory, s"fresh attempt kept: $fresh")
+    }
+    assert(IceLite.read(spark, cfg.sinkDir).count() == 3)
+    assert(GuardianStream.readSessionQuality(spark, cfg.sinkDir)
+      .agg(sum("n_turns")).collect()(0).getLong(0) == 3)
   }
 
   test("standing drift monitor over quality partials equals the batch drift detector") {
@@ -900,9 +982,9 @@ class StreamingSpec extends SparkSpec {
     val root = tmp("icelite")
     val df = turnsDF(TranscriptSpec(nConvs = 3, turnsPerConv = 5, seed = 26))
     val lin = new graft.lineage.DataLineage("t")
-    assert(IceLite.commit(df, root, 0L, lin))
-    assert(!IceLite.commit(df, root, 0L, lin), "duplicate commit skipped")
-    assert(IceLite.commit(df.limit(4), root, 1L, lin))
+    assert(IceLite.commit(df, root, 0L)(_ => lin).nonEmpty)
+    assert(IceLite.commit(df, root, 0L)(_ => lin).isEmpty, "duplicate commit skipped")
+    assert(IceLite.commit(df.limit(4), root, 1L)(_ => lin).nonEmpty)
     assert(IceLite.committedBatches(root) == Seq(0L, 1L))
     assert(IceLite.read(spark, root).count() == 15 + 4)
     val m = IceLite.readManifest(root, 0L)
@@ -920,8 +1002,8 @@ class StreamingSpec extends SparkSpec {
     // only the epoch that can contain the conversation
     val lo = df.filter(col("conv_id") <= "conv-000002")
     val hi = df.filter(col("conv_id") > "conv-000002")
-    assert(IceLite.commit(lo, root, 0L, lin))
-    assert(IceLite.commit(hi, root, 1L, lin))
+    assert(IceLite.commit(lo, root, 0L)(_ => lin).nonEmpty)
+    assert(IceLite.commit(hi, root, 1L)(_ => lin).nonEmpty)
     assert(IceLite.convBatches(root, "conv-000001") == Seq(0L),
       "low conv prunes to epoch 0 only")
     assert(IceLite.convBatches(root, "conv-000004") == Seq(1L),

@@ -1,0 +1,164 @@
+#!/usr/bin/env python3
+"""Compare two guardian sinks written from the same input.
+
+    python3 tools/sink_diff.py <sinkA> <sinkB>
+
+For each IceLite table of a sink -- the root (audit or provenance table),
+`quality/` and `sessions/` -- it checks:
+
+  * epoch manifests (`manifests/manifest-<n>.json`): same names, byte-equal;
+  * compaction markers (`manifests/compact-<n>.json`): equal JSON once the
+    attempt-unique `path` is masked. On `sessions/` the folded-row count
+    `row_count` is reported on its own line instead of compared;
+  * rows: the snapshot `IceLite.read` returns -- the latest compacted table
+    (the marker's `path`, or `compact/<n>` without one) plus the epoch
+    batches after it, `pid` dropped -- equal as multisets (DuckDB
+    `EXCEPT ALL` both ways over pyarrow tables).
+
+A table absent from both sinks is skipped. Prints one line per table and
+exits 1 when any table differs.
+"""
+import json
+import os
+import re
+import sys
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+TABLES = [".", "quality", "sessions"]
+NAME = re.compile(r"(manifest|compact)-(\d+)\.json$")
+
+
+def listing(root):
+    """{kind: {n: file name}} of a table's manifest directory."""
+    out = {"manifest": {}, "compact": {}}
+    mdir = os.path.join(root, "manifests")
+    for n in sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []:
+        m = NAME.fullmatch(n)
+        if m:
+            out[m.group(1)][int(m.group(2))] = n
+    return out
+
+
+def read_json(root, name):
+    with open(os.path.join(root, "manifests", name), "rb") as f:
+        return json.load(f)
+
+
+def differing_keys(ja, jb):
+    """Top-level keys whose values differ between two JSON objects."""
+    return sorted(k for k in ja.keys() | jb.keys() if ja.get(k) != jb.get(k))
+
+
+def parquet_files(d):
+    found = []
+    for base, dirs, files in os.walk(d):
+        dirs.sort()
+        found += [os.path.join(base, f) for f in sorted(files)
+                  if f.endswith(".parquet") and not f.startswith((".", "_"))]
+    return found
+
+
+def snapshot(root, ls):
+    """The parquet files `IceLite.read` would scan, or [] for none."""
+    latest = max(ls["compact"], default=None)
+    files = []
+    if latest is not None:
+        rel = read_json(root, ls["compact"][latest]).get("path", f"compact/{latest}")
+        files += parquet_files(os.path.join(root, rel))
+    for b in sorted(ls["manifest"]):
+        if latest is None or b > latest:
+            files += parquet_files(os.path.join(root, "data", f"batch={b}"))
+    return files
+
+
+def rows(files):
+    tables = []
+    for f in files:
+        t = pq.read_table(f)
+        keep = sorted(c for c in t.column_names if c not in ("pid", "batch"))
+        tables.append(t.select(keep))
+    return pa.concat_tables(tables, promote_options="permissive") if tables else None
+
+
+def compare_table(a, b, table):
+    ra, rb = os.path.join(a, table), os.path.join(b, table)
+    if not os.path.isdir(ra) and not os.path.isdir(rb):
+        return True, f"{table}: absent in both"
+    la, lb = listing(ra), listing(rb)
+    problems, notes = [], []
+
+    if la["manifest"].keys() != lb["manifest"].keys():
+        problems.append(f"epoch sets differ: {sorted(la['manifest'])} vs {sorted(lb['manifest'])}")
+    same = 0
+    for n in sorted(la["manifest"].keys() & lb["manifest"].keys()):
+        name = la["manifest"][n]
+        with open(os.path.join(ra, "manifests", name), "rb") as fa, \
+                open(os.path.join(rb, "manifests", name), "rb") as fb:
+            ba, bb = fa.read(), fb.read()
+        if ba == bb:
+            same += 1
+        else:
+            keys = differing_keys(json.loads(ba), json.loads(bb)) or ["formatting"]
+            problems.append(f"{name} differs in {', '.join(keys)}")
+    notes.append(f"{same} epoch manifests byte-identical")
+
+    if la["compact"].keys() != lb["compact"].keys():
+        problems.append(f"marker sets differ: {sorted(la['compact'])} vs {sorted(lb['compact'])}")
+    same = 0
+    for n in sorted(la["compact"].keys() & lb["compact"].keys()):
+        ja = read_json(ra, la["compact"][n])
+        jb = read_json(rb, lb["compact"][n])
+        for j in (ja, jb):
+            if "path" in j:
+                j["path"] = "<attempt>"
+        if table == "sessions":
+            ca, cb = ja.pop("row_count", None), jb.pop("row_count", None)
+            notes.append(f"compact-{n} row_count {ca if ca is not None else '-'}"
+                         f" vs {cb if cb is not None else '-'}")
+        if ja == jb:
+            same += 1
+        else:
+            problems.append(f"compact-{n} differs in {', '.join(differing_keys(ja, jb))}")
+    notes.append(f"{same} markers equal with path masked")
+
+    ta, tb = rows(snapshot(ra, la)), rows(snapshot(rb, lb))
+    if ta is None and tb is None:
+        notes.append("no data files")
+    elif ta is None or tb is None:
+        problems.append("only one side has data files")
+    elif ta.column_names != tb.column_names:
+        problems.append(f"columns differ: {ta.column_names} vs {tb.column_names}")
+    else:
+        con = duckdb.connect()
+        con.register("a", ta)
+        con.register("b", tb)
+        only_a = con.execute("SELECT count(*) FROM (SELECT * FROM a EXCEPT ALL SELECT * FROM b)").fetchone()[0]
+        only_b = con.execute("SELECT count(*) FROM (SELECT * FROM b EXCEPT ALL SELECT * FROM a)").fetchone()[0]
+        if only_a or only_b:
+            problems.append(f"rows differ: {only_a} only in A, {only_b} only in B "
+                            f"({ta.num_rows} vs {tb.num_rows})")
+        else:
+            notes.append(f"{ta.num_rows} rows identical")
+        con.close()
+
+    status = "OK" if not problems else "DIFF"
+    return not problems, f"{table}: {status}: " + "; ".join(problems + notes)
+
+
+def main(argv):
+    if len(argv) != 3:
+        sys.exit(__doc__.strip().splitlines()[2].strip())
+    ok = True
+    for table in TABLES:
+        good, line = compare_table(argv[1], argv[2], table)
+        ok &= good
+        print(line)
+    print("SINKS EQUAL" if ok else "SINKS DIFFER")
+    return 0 if ok else 1
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
