@@ -773,16 +773,14 @@ object SparkEntry {
         Seq("turn", "of", "type", "[user]", "ssn", "zz-absent-token"))
     }),
 
-    // Exact cross-corpus dedup THROUGH the Bloom-prefiltered plan (ref =
-    // even doc_ids): bloom positives resolved by the exact anti-join, so
-    // the result must equal the oracle's plain NOT EXISTS.
+    // Exact cross-corpus dedup (ref = even doc_ids): the 128-bit-key
+    // anti-join must equal the oracle's plain NOT EXISTS.
     "cross_dedup_exact" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"))
       graft.ops.TrainingDataOps.exactCrossDedup(
         docs.filter(pmod(col("doc_id"), lit(2L)) === 1),
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0),
-        bloomItems = 1000L, fpp = 0.01)
+        docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
         .select(col("doc_id"), col("lang"), col("source"))
     }),
 

@@ -1701,38 +1701,16 @@ object TrainingDataOps {
   }
 
   /** Exact cross-corpus dedup: keep the new-corpus rows whose content
-    * hash does NOT appear in the reference corpus. `bloomItems > 0`
-    * turns on a Bloom pre-filter built over the reference keys
-    * (one pass, driver-merged sketch of ~1.44·n·ln(1/fpp) bits): rows
-    * the filter rules out are kept WITHOUT entering the anti-join
-    * shuffle — only probable matches (true dups + ~fpp of the rest)
-    * shuffle, which at a 100 TB new corpus against a mostly-disjoint
-    * reference shrinks the join input by ~1/fpp. The filter can only
-    * produce false POSITIVES, and those are resolved by the exact
-    * anti-join, so the result is identical with the pre-filter on or
-    * off (pinned by test and by the cross_dedup_exact oracle). For
-    * reference corpora too large for one driver sketch, shard the
-    * reference and AND the verdicts — the fpp knob trades driver
-    * memory for shuffle volume. The new corpus is scanned twice (clean
-    * branch + maybe branch).
+    * hash does NOT appear in the reference corpus — one `left_anti`
+    * join on a 128-bit content key.
     *
-    * STREAMING: `newDocs` may be a streaming DataFrame — both shapes
-    * plan as a stream-static anti-join against the reference snapshot
-    * (the bloom adds only a static literal filter and a self-union),
-    * giving continuous-ingest dedup against yesterday's corpus with no
-    * state store at all (StreamingSpec pins stream ≡ batch for both).
-    *
-    * DEFAULT IS OFF, by measurement (BASELINE.md, graft.BloomAb): on a
-    * single node the shuffle runs at ~scan bandwidth, so the bytes the
-    * filter avoids cost less than the reference pass + second scan it
-    * adds (~2x slower here). Turn it on when BOTH hold: the shuffle
-    * crosses a real network, and the reference key set exceeds
-    * broadcast size (under ~10 MB AQE just broadcasts the ref side and
-    * no new-corpus shuffle exists to avoid).
+    * STREAMING: `newDocs` may be a streaming DataFrame — it plans as a
+    * stream-static anti-join against the reference snapshot, giving
+    * continuous-ingest dedup against yesterday's corpus with no state
+    * store at all (StreamingSpec pins stream ≡ batch).
     */
   def exactCrossDedup(newDocs: DataFrame, refDocs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      bloomItems: Long = 0L, fpp: Double = 0.01): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // 128-bit join key (two chained xxhash64 longs — the streaming
     // dedupRows precedent): a single 64-bit hash reaches ~50% collision
     // odds around 5e9 docs, i.e. exactly the corpus size this op is for,
@@ -1746,28 +1724,9 @@ object TrainingDataOps {
     val keys = Seq("__k1", "__k2")
     val ref = refDocs.filter(col(textCol).isNotNull)
       .select(k1.as("__k1"), k2.as("__k2")).distinct()
-    val base = newDocs.withColumn("__k1", k1).withColumn("__k2", k2)
-    val filtered =
-      if (bloomItems <= 0L) base.join(ref, keys, "left_anti")
-      else {
-        // the bloom pre-filters on the FIRST hash only (one long per
-        // probe); the exact anti-join on both keys resolves positives
-        val bf = ref.stat.bloomFilter("__k1", bloomItems, fpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        import org.apache.spark.sql.graftbridge.CatalystBridge
-        val might = CatalystBridge.column(
-          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-            org.apache.spark.sql.catalyst.expressions.Literal
-              .create(bos.toByteArray,
-                org.apache.spark.sql.types.BinaryType),
-            CatalystBridge.expression(col("__k1"))))
-        // definitely-absent rows bypass the shuffle entirely; only
-        // bloom-positive rows pay the exact anti-join
-        base.filter(!might).unionByName(
-          base.filter(might).join(ref, keys, "left_anti"))
-      }
-    filtered.drop("__k1").drop("__k2")
+    newDocs.withColumn("__k1", k1).withColumn("__k2", k2)
+      .join(ref, keys, "left_anti")
+      .drop("__k1").drop("__k2")
   }
 
   /** MinHash estimator audit: for every LSH candidate pair, the Jaccard

@@ -18,17 +18,26 @@ import graft.model.Turn
   *
   * State per key is a bounded set of 64-bit (turn_idx, text) hashes — at
   * 10^12-turn scale each conversation's state is spread over `salt`
-  * buckets and capped at `maxHashesPerKey` (NEWEST kept — the right policy
+  * buckets and capped at `MaxHashesPerKey` (NEWEST kept — the right policy
   * next to the event-time TTL, which also ages out the oldest; a Bloom
   * filter would trade per-hash exactness for fixed memory). Dedup keys on
   * the 64-bit hash, so two DISTINCT turns colliding (p ≈ 2⁻⁶⁴ per pair
   * within one salt bucket) would be conflated — a deliberate
   * space/exactness tradeoff, not bit-exact set membership. Keys expire via
   * event-time timeout once the watermark passes their last activity +
-  * `stateTtlMs` — late replays older than the watermark are dropped by the
+  * `StateTtlMs` — late replays older than the watermark are dropped by the
   * watermark itself, so expiry cannot re-admit duplicates.
   */
 object DedupState {
+
+  /** How long past its last event a key's state outlives the watermark. */
+  private val StateTtlMs: Long = 2L * 3600 * 1000
+
+  /** Per-key cap on remembered turn hashes (the newest are kept). */
+  private val MaxHashesPerKey: Int = 1 << 20
+
+  /** Event-time window of `nearDupRows`' per-row band count. */
+  private val NearDupWindow = "60 seconds"
 
   final case class SeenState(hashes: Array[Long], maxEventMs: Long)
 
@@ -118,7 +127,7 @@ object DedupState {
       else java.util.Arrays.copyOfRange(order, size - max, size)
   }
 
-  def dedupFn(stateTtlMs: Long, maxHashesPerKey: Int)(
+  def dedupFn(
       key: (String, Int),
       turns: Iterator[Turn],
       state: GroupState[SeenState]): Iterator[Turn] = {
@@ -153,10 +162,10 @@ object DedupState {
       // keep no state at all.
       if (state.exists) state.remove()
     } else {
-      state.update(SeenState(seen.toTrimmedArray(maxHashesPerKey), maxEventMs))
+      state.update(SeenState(seen.toTrimmedArray(MaxHashesPerKey), maxEventMs))
       if (wmMs >= 0) {
         // Timeout must be strictly beyond the current watermark.
-        state.setTimeoutTimestamp(math.max(maxEventMs + stateTtlMs, wmMs + 1))
+        state.setTimeoutTimestamp(math.max(maxEventMs + StateTtlMs, wmMs + 1))
       }
     }
     out.iterator
@@ -278,7 +287,7 @@ object DedupState {
     * band-bucket shuffle; the windowed count shuffles the surviving
     * rows once more on row identity. Both stages are watermark-bounded.
     */
-  def nearDupRows(df: DataFrame, windowSlice: String = "60 seconds"): DataFrame = {
+  def nearDupRows(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.expressions.PolyHashFunctions.tokenPolyHashes
     val P = graft.ops.TrainingDataOps.P
@@ -314,7 +323,7 @@ object DedupState {
     // the raw ts column cannot stay in the grouping keys next to the
     // window (two event-time columns); min(ts) restores it after the agg
     survivors
-      .groupBy(window(col("ts"), windowSlice), col("conv_id"), col("turn_idx"),
+      .groupBy(window(col("ts"), NearDupWindow), col("conv_id"), col("turn_idx"),
         col("text"))
       .agg(count(lit(1)).as("__bands"), min(col("ts")).as("ts"))
       .filter(col("__bands") === 4)
@@ -333,9 +342,7 @@ object DedupState {
     */
   def dedup(
       ds: Dataset[Turn],
-      turnBucketShift: Int = 8,
-      stateTtlMs: Long = 2L * 3600 * 1000,
-      maxHashesPerKey: Int = 1 << 20): Dataset[Turn] = {
+      turnBucketShift: Int = 8): Dataset[Turn] = {
     import ds.sparkSession.implicits._
     import org.apache.spark.sql.functions.{col, lit, shiftrightunsigned}
     // Column-computed salted key + relational groupBy().as[K, V]: a
@@ -350,6 +357,6 @@ object DedupState {
       .groupBy(col("conv_id"), col("__salt"))
       .as[(String, Int), Turn]
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        dedupFn(stateTtlMs, maxHashesPerKey))
+        dedupFn)
   }
 }

@@ -14,16 +14,18 @@ import graft.watermark.Watermarker
 /** The standing guardian pipeline — the streaming restatement of the
   * reference's `/generate` route (app.py:32-53):
   *
-  *   transcript stream → event-time watermark → salted stateful dedup →
+  *   transcript stream → event-time watermark → stateful dedup →
   *   per-turn watermark embed → stateless quality/PII validators →
   *   per-micro-batch validation report → exactly-once IceLite audit sink
   *   with per-partition lineage manifests.
   *
-  * Skew: the stateful dedup shuffles on the SALTED key
-  * (conv_id, turn_idx mod salt) — the "salted repartitioning on (conv_id,
-  * turn_idx bucket) before the stateful aggregate" of the north star; a
-  * hot conversation spreads over `salt` state partitions instead of
-  * pinning one.
+  * Skew: the default row-level dedup keys on a 128-bit hash of
+  * (conv_id, turn_idx, text), so a hot conversation's turns hash over
+  * every state partition instead of pinning one. The
+  * flatMapGroupsWithState path (`rowDedup = false`) salts instead: it
+  * groups on (conv_id, turn_idx >> turnBucketShift) — the "salted
+  * repartitioning on (conv_id, turn_idx bucket) before the stateful
+  * aggregate" of the north star.
   *
   * Determinism: no wall clock anywhere — dataset ids derive from the sink
   * identity, lineage timestamps are the checkpoint epoch, so a resume from
@@ -152,18 +154,6 @@ object GuardianStream {
   private def qualityRoot(sinkDir: String): String =
     java.nio.file.Paths.get(sinkDir, "quality").toString
 
-  /** The epoch's committed data dir, or None when the epoch wrote no
-    * parquet (empty epoch) — the recovery re-derivation source.
-    */
-  private def epochDataDir(cfg: StreamConfig, batchId: Long): Option[String] = {
-    val dataDir =
-      java.nio.file.Paths.get(cfg.sinkDir, "data", s"batch=$batchId").toString
-    val hasFiles = Option(new java.io.File(dataDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-    if (hasFiles) Some(dataDir) else None
-  }
-
   /** Per-epoch quality-window partials, published exactly-once to the
     * `quality/` manifest table next to the audit data — the streaming
     * restatement of the reference validating INSIDE the pipeline
@@ -206,9 +196,9 @@ object GuardianStream {
     // exactly-once publish makes whichever lands first THE epoch value.
     // An empty epoch has no data files: every monitor publishes its merge
     // identity.
-    val values = observed.orElse(epochDataDir(cfg, batchId).map { dataDir =>
+    val values = observed.orElse(IceLite.readEpoch(spark, cfg.sinkDir, batchId).map { rows =>
       val cols = monitors.map(m => m.column(cfg).as(m.name))
-      val row = spark.read.parquet(dataDir).agg(cols.head, cols.tail: _*).collect()(0)
+      val row = rows.agg(cols.head, cols.tail: _*).collect()(0)
       row.getValuesMap[Any](row.schema.fieldNames.toSeq)
     })
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -328,8 +318,8 @@ object GuardianStream {
   private def publishSessions(
       spark: SparkSession, cfg: StreamConfig, batchId: Long): Unit = {
     val gap = cfg.sessionGap.getOrElse(return)
-    val rows: DataFrame = epochDataDir(cfg, batchId) match {
-      case Some(dataDir) => spark.read.parquet(dataDir)
+    val rows: DataFrame = IceLite.readEpoch(spark, cfg.sinkDir, batchId) match {
+      case Some(epoch) => epoch
         .select(col("conv_id"), col("ts"), col("text_len"), col("has_pii"))
       case None => spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),

@@ -11,14 +11,14 @@ import graft.lineage.DataLineage
   * primitive: publish-if-absent of a small manifest file, atomic and
   * winner-takes-all under concurrent publishers.
   *
-  * Portability (VERDICT r1 §wrong-6): the default implementation uses
-  * POSIX/HDFS atomic rename, correct for local disks, NFS and
-  * HDFS-like stores. Object stores have NO atomic rename — a 100 TB
-  * deployment on S3/GCS/ABFS implements this trait with the store's
-  * conditional put instead (`If-None-Match: *` on S3, `ifGenerationMatch=0`
-  * on GCS, ETag precondition on ABFS), which gives the same
-  * winner-takes-all semantics without any rename. Everything else IceLite
-  * does (data-file writes, footer reads, manifest lists) is plain
+  * Portability (VERDICT r1 §wrong-6): the default implementation
+  * publishes with a POSIX hard link, which fails when the target exists —
+  * correct for local disks, NFS and HDFS-like stores. Object stores have
+  * no link — a 100 TB deployment on S3/GCS/ABFS implements this trait
+  * with the store's conditional put instead (`If-None-Match: *` on S3,
+  * `ifGenerationMatch=0` on GCS, ETag precondition on ABFS), which gives
+  * the same winner-takes-all semantics. Everything else IceLite does
+  * (data-file writes, footer reads, manifest lists) is plain
   * write-new-object / read / list and needs no atomicity.
   */
 trait CommitIO {
@@ -30,7 +30,7 @@ trait CommitIO {
   def publishIfAbsent(target: Path, content: String): Boolean
 }
 
-/** Default: temp file + ATOMIC_MOVE rename (POSIX/HDFS semantics). */
+/** Default: temp file + hard link to the target (`linkIfAbsent`). */
 object PosixCommitIO extends CommitIO {
   def exists(p: Path): Boolean = Files.exists(p)
   def listNames(dir: Path): Seq[String] = {
@@ -76,8 +76,8 @@ object PosixCommitIO extends CommitIO {
   * Iceberg's contract the north star uses:
   *
   *  - data files land under `data/batch=<epoch>/` and are INVISIBLE to
-  *    readers until `manifests/manifest-<epoch>.json` is published with an
-  *    atomic rename — a crashed or duplicated `foreachBatch` invocation
+  *    readers until `manifests/manifest-<epoch>.json` is published
+  *    winner-takes-all — a crashed or duplicated `foreachBatch` invocation
   *    leaves no visible trace;
   *  - a manifest that already exists short-circuits the commit
   *    (idempotent by batch id ⇒ exactly-once under Structured Streaming's
@@ -107,7 +107,7 @@ object PosixCommitIO extends CommitIO {
 object IceLite {
 
   /** The commit seam — swap for an object-store CommitIO in deployments
-    * without atomic rename (see the CommitIO scaladoc).
+    * without POSIX hard links (see the CommitIO scaladoc).
     */
   @volatile var commitIO: CommitIO = PosixCommitIO
 
@@ -124,6 +124,14 @@ object IceLite {
 
   private[stream] def manifestPath(root: String, batchId: Long): Path =
     Paths.get(root, "manifests", f"manifest-$batchId%09d.json")
+
+  /** Epoch `batchId`'s data dir, relative to the table root — the one
+    * place that knows the `data/batch=<epoch>` layout.
+    */
+  private def epochRel(batchId: Long): String = s"data/batch=$batchId"
+
+  private def epochDir(root: String, batchId: Long): Path =
+    Paths.get(root, epochRel(batchId))
 
   private[stream] def compactMarkerPath(root: String, upTo: Long): Path =
     Paths.get(root, "manifests", f"compact-$upTo%09d.json")
@@ -185,10 +193,10 @@ object IceLite {
     * so the file↔partition binding is recovered from the parquet footer's
     * pid column statistics (min == max per file) at manifest time.
     */
-  def writeData(stamped: DataFrame, root: String, batchId: Long): String = {
+  private def writeData(stamped: DataFrame, root: String, batchId: Long): String = {
     Files.createDirectories(Paths.get(root, "data"))
     Files.createDirectories(Paths.get(root, "manifests"))
-    val dataDir = Paths.get(root, "data", s"batch=$batchId").toString
+    val dataDir = epochDir(root, batchId).toString
     stamped.write.mode("overwrite").parquet(dataDir)
     dataDir
   }
@@ -249,11 +257,6 @@ object IceLite {
     * per-file-stats design real Iceberg manifests use).
     */
   def footerStats(dataDir: String): Seq[PartitionManifest] = {
-    def parquetFiles(f: java.io.File): Seq[java.io.File] = {
-      val fs = Option(f.listFiles()).getOrElse(Array.empty).toSeq
-      fs.filter(x => x.isFile && x.getName.endsWith(".parquet")) ++
-        fs.filter(_.isDirectory).flatMap(parquetFiles)
-    }
     // Footer reads are independent small-file reads — do them in parallel
     // (at 32 shuffle partitions a serial loop adds ~32 × read-latency to
     // every epoch's commit path), on a DEDICATED bounded pool: the shared
@@ -275,6 +278,12 @@ object IceLite {
       }
       .toSeq
       .sortBy(_.pid)
+  }
+
+  private def parquetFiles(f: java.io.File): Seq[java.io.File] = {
+    val fs = Option(f.listFiles()).getOrElse(Array.empty).toSeq
+    fs.filter(x => x.isFile && x.getName.endsWith(".parquet")) ++
+      fs.filter(_.isDirectory).flatMap(parquetFiles)
   }
 
   /** One Hadoop conf for every footer read: a fresh `Configuration`
@@ -308,7 +317,7 @@ object IceLite {
       pn.put("conv_id_max", p.convIdMax)
       // pid is a data column (not a partition directory); the binding of
       // files to pid is via each file's parquet footer stats (min==max).
-      pn.put("path", s"data/batch=${m.batchId}")
+      pn.put("path", epochRel(m.batchId))
     }
     node.set[com.fasterxml.jackson.databind.JsonNode](
       "lineage", mapper.readTree(m.lineageJson))
@@ -401,12 +410,19 @@ object IceLite {
     */
   def readBatches(spark: SparkSession, root: String, batches: Seq[Long]): DataFrame = {
     require(batches.nonEmpty, s"IceLite table at $root has no committed batches")
-    val dirs = batches.map(b => Paths.get(root, "data", s"batch=$b").toString)
+    val dirs = batches.map(epochDir(root, _).toString)
     spark.read
       .option("basePath", Paths.get(root, "data").toString)
       .parquet(dirs: _*)
       .drop("pid", "batch")
   }
+
+  /** The rows of committed epoch `batchId`, or None when the epoch wrote
+    * no parquet (an empty epoch) — the read-back of one epoch's output.
+    */
+  def readEpoch(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] =
+    Option.when(parquetFiles(epochDir(root, batchId).toFile).nonEmpty)(
+      readBatches(spark, root, Seq(batchId)))
 
   // ---- table maintenance: fold epoch dirs into one compacted table ----
   // The small-files discipline a standing query needs at deployment
@@ -541,7 +557,7 @@ object IceLite {
       val mdir = Paths.get(root, "manifests")
       commitIO.listNames(mdir).foreach {
         case n @ TableFile("manifest", b) if b <= upTo =>
-          rmTree(Paths.get(root, "data", s"batch=$b").toFile)
+          rmTree(epochDir(root, b).toFile)
           if (Files.deleteIfExists(mdir.resolve(n))) removed += 1
         case n @ TableFile("compact", u) if u < upTo =>
           // resolve the marker's data dir BEFORE deleting the marker (the

@@ -171,6 +171,51 @@ class ExplainSpec extends SparkSpec {
     assert(p.contains("BroadcastExchange"), "eval gram set must broadcast")
   }
 
+  /** `body`'s result and the Spark jobs it starts on this thread. A
+    * trailing marker job proves the listener bus has delivered every
+    * earlier job start.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.explain.phase"))) match {
+          case Some("body") => started.incrementAndGet(); ()
+          case Some("marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.explain.phase", "body")
+      val result = body
+      sc.setLocalProperty("graft.explain.phase", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      (result, started.get)
+    } finally {
+      sc.setLocalProperty("graft.explain.phase", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("cross_dedup_exact: one 128-bit-key anti-join, no union, no bloom probe, no job at build") {
+    assume(available, s"$dir fixtures not present")
+    // reading parquet runs one schema-inference job; building the query
+    // frame may run that and nothing else
+    val (_, scanJobs) = jobsDuring(spark.read.parquet(s"$dir/documents.parquet"))
+    val (df, buildJobs) = jobsDuring(SparkEntry.queries("cross_dedup_exact")(spark, dir))
+    assert(buildJobs == scanJobs,
+      s"building the frame ran ${buildJobs - scanJobs} Spark job(s) beyond the scan")
+    val p = df.queryExecution.executedPlan.toString()
+    assert("\\bLeftAnti\\b".r.findAllIn(p).size == 1, s"exactly one anti-join: $p")
+    assert(!p.contains("Union"), s"no clean/maybe union: $p")
+    assert(!p.contains("might_contain"), s"no bloom probe: $p")
+  }
+
   test("dedup_exact: column pruning reaches the scan") {
     val p = plan("dedup_exact")
     val read = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")

@@ -737,24 +737,18 @@ class StreamingSpec extends SparkSpec {
       newRows.take(100).toDF("doc_id", "text"),
       newRows.drop(100).toDF("doc_id", "text")))
     val expected = newRows.filterNot(_._2.startsWith("reference")).map(_._1).sorted
-    // bloom OFF and ON: both shapes must plan as a stream-static
-    // anti-join (the bloom adds only a static literal filter + union)
-    for (bloomItems <- Seq(0L, 200L)) {
-      val stream = spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val out = graft.ops.TrainingDataOps.exactCrossDedup(
-        stream, ref, bloomItems = bloomItems, fpp = 0.05)
-      val sink = tmp(s"xd-out-$bloomItems")
-      val q = out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", tmp(s"xd-ck-$bloomItems"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val got = spark.read.parquet(sink).select("doc_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(got.toSeq == expected,
-        s"stream-static cross-dedup (bloomItems=$bloomItems) equals the batch anti-join")
-    }
+    val stream = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    val out = graft.ops.TrainingDataOps.exactCrossDedup(stream, ref)
+    val sink = tmp("xd-out")
+    val q = out.writeStream.format("parquet")
+      .option("path", sink).option("checkpointLocation", tmp("xd-ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = spark.read.parquet(sink).select("doc_id")
+      .collect().map(_.getLong(0)).sorted
+    assert(got.toSeq == expected, "stream-static cross-dedup equals the batch anti-join")
   }
 
   test("bracketed heavy hitters: MG lower <= exact <= CMS upper for every candidate; compaction lossless") {

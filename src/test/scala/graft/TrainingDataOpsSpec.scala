@@ -886,9 +886,9 @@ class TrainingDataOpsSpec extends SparkSpec {
     assert(w1("c") > w("c")._2, "alpha<1 flattens the head stratum")
   }
 
-  // --- exact cross dedup + bloom pre-filter --------------------------------
+  // --- exact cross dedup ---------------------------------------------------
 
-  test("exact cross dedup: bloom-prefiltered plan returns exactly the plain anti-join") {
+  test("exact cross dedup: anti-join drops planted dups, keeps null-text docs") {
     // null-text rows on BOTH sides: SQL equality never matches nulls, so
     // the null new doc must be KEPT (the hash-of-null sentinel must not
     // conflate them — ref nulls are excluded before keying)
@@ -901,9 +901,6 @@ class TrainingDataOpsSpec extends SparkSpec {
     } :+ (1900L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val plain = TrainingDataOps.exactCrossDedup(newD, ref).collect()
       .map(_.getLong(0)).sorted
-    val bloomed = TrainingDataOps.exactCrossDedup(newD, ref, bloomItems = 300L, fpp = 0.05)
-      .collect().map(_.getLong(0)).sorted
-    assert(plain.toSeq == bloomed.toSeq, "bloom prefilter never changes the result")
     assert(plain.length == 321, s"80 planted dups dropped, null kept (got ${plain.length})")
     assert(!plain.contains(1000L) && plain.contains(1001L), "dup dropped, fresh kept")
     assert(plain.contains(1900L), "null-text new doc is never dropped")
