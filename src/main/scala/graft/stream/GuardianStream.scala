@@ -643,12 +643,13 @@ object GuardianStream {
   }
 
   /** Fixed duration string → microseconds (month-bearing intervals have no
-    * fixed length and are rejected — tumbling quality windows need one).
+    * fixed length and are rejected — tumbling quality windows, session
+    * gaps and the provenance join's skew bound need one).
     */
   private[stream] def windowMicros(w: String): Long = {
     val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
       org.apache.spark.unsafe.types.UTF8String.fromString(w))
-    require(iv.months == 0, s"quality window must be a fixed duration: $w")
+    require(iv.months == 0, s"not a fixed duration: $w")
     iv.days * 86400000000L + iv.microseconds
   }
 
@@ -679,8 +680,12 @@ object GuardianStream {
 
   /** Standing provenance-match query (BASELINE.json north_star): raw and
     * generated turn file streams, both event-time watermarked, joined with
-    * bounded skew; match rows (with the per-turn text-equality verdict)
-    * land exactly-once in their own IceLite audit table.
+    * bounded skew by `ProvenanceJoin.stream` (one `flatMapGroupsWithState`
+    * keyed on (conv_id, turn_idx); its match rows equal Spark's streaming
+    * join of `ProvenanceJoin.join`). Match rows (with the per-turn
+    * text-equality verdict) land exactly-once in their own IceLite audit
+    * table, each partition sorted by `raw_ts` (a local sort, no exchange:
+    * in key-hash order the sink's parquet pages compress ~5% worse).
     */
   def startProvenance(
       spark: SparkSession,
@@ -697,12 +702,12 @@ object GuardianStream {
       maxFilesPerTrigger.foreach(n => r = r.option("maxFilesPerTrigger", n))
       r.parquet(dir).withWatermark("ts", watermarkDelay)
     }
-    val joined = ProvenanceJoin.join(src(rawDir), src(genDir), maxSkew)
+    val joined = ProvenanceJoin.stream(src(rawDir), src(genDir), maxSkew)
     var writer = joined.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        IceLite.commit(batch, sinkDir, batchId,
+        IceLite.commit(batch.sortWithinPartitions("raw_ts"), sinkDir, batchId,
             count(lit(1)).as("n"), sum(col("text_match").cast("long")).as("matched")) { m =>
           val n = m.get("n").collect { case l: Long => l }.getOrElse(0L)
           val lineage = new DataLineage("provenance", createdAt = 0.0)

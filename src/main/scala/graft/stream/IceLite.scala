@@ -39,8 +39,11 @@ object PosixCommitIO extends CommitIO {
     try stream.iterator().asScala.map(_.getFileName.toString).toSeq
     finally stream.close()
   }
+  /** Name prefix of the temp file a publish writes next to its target. */
+  val TmpPrefix = ".tmp-"
+
   def publishIfAbsent(target: Path, content: String): Boolean = {
-    val tmp = target.getParent.resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    val tmp = target.getParent.resolve(s"$TmpPrefix${java.util.UUID.randomUUID()}")
     Files.createDirectories(target.getParent)
     Files.writeString(tmp, content)
     linkIfAbsent(tmp, target)
@@ -358,7 +361,7 @@ object IceLite {
       latest: Option[Long], residual: Seq[Long]): DataFrame = {
     require(latest.nonEmpty || residual.nonEmpty,
       s"IceLite table at $root has no committed batches")
-    (latest.map(u => spark.read.parquet(compactDataDir(root, u))).toSeq ++
+    (latest.map(compactDataDir(root, _)).map(d => parquetReader(spark, Seq(d)).parquet(d)).toSeq ++
       Option.when(residual.nonEmpty)(readBatches(spark, root, residual)))
       .reduce(_.unionByName(_))
   }
@@ -411,11 +414,30 @@ object IceLite {
   def readBatches(spark: SparkSession, root: String, batches: Seq[Long]): DataFrame = {
     require(batches.nonEmpty, s"IceLite table at $root has no committed batches")
     val dirs = batches.map(epochDir(root, _).toString)
-    spark.read
+    parquetReader(spark, dirs)
       .option("basePath", Paths.get(root, "data").toString)
       .parquet(dirs: _*)
       .drop("pid", "batch")
   }
+
+  /** A parquet reader of `dirs` given the schema the first data file
+    * under them recorded in its footer, so that building the frame starts
+    * no schema-inference job (a bare `spark.read.parquet` starts one).
+    * With no data file to read it from, Spark infers as before.
+    */
+  private def parquetReader(spark: SparkSession, dirs: Seq[String]) =
+    dirs.iterator.flatMap(d => parquetFiles(new java.io.File(d))).nextOption()
+      .flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getAbsolutePath), footerConf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .map(json => org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .fold(spark.read)(spark.read.schema(_))
 
   /** The rows of committed epoch `batchId`, or None when the epoch wrote
     * no parquet (an empty epoch) — the read-back of one epoch's output.
@@ -462,9 +484,10 @@ object IceLite {
     f.delete(); ()
   }
 
-  /** How long an unreferenced attempt dir must sit untouched before the
-    * orphan sweep may remove it — a live parquet write keeps refreshing
-    * its dir as part files land, so only crashed attempts go stale.
+  /** How long an unreferenced attempt dir or publish temp file must sit
+    * untouched before the orphan sweep may remove it — a live parquet
+    * write keeps refreshing its dir as part files land, so only crashed
+    * attempts go stale.
     */
   private val OrphanGraceMs = 15L * 60 * 1000
 
@@ -541,20 +564,27 @@ object IceLite {
   /** Expire state superseded by the latest compaction (the Iceberg
     * `expire_snapshots` discipline): folded epoch data dirs and
     * manifests, older compacted tables, and orphan attempt dirs from
-    * losing/crashed compactors. On the manifest-only quality table the
+    * losing/crashed compactors. Also, compacted or not, manifest publish
+    * temp files older than the orphan grace window: a crash between
+    * writing one and linking it leaves it behind, and nothing else ever
+    * removes it. On the manifest-only quality table the
     * data deletes find nothing. Superseded manifests are never on the
     * read path (`compactSources` prefers the latest compacted marker), so
     * the delete ORDER within one entry is immaterial for readers;
     * data-first keeps the sweep idempotent — a crash between the two
     * deletes leaves the manifest in place, so the re-run finds the entry
     * again and re-deletes the (possibly half-gone) data dir. Returns the
-    * number of manifests, markers and orphan dirs removed.
+    * number of manifests, markers, orphan dirs and temp files removed.
     */
   def expireCompacted(root: String): Int = {
     val (latest, _) = compactSources(root)
-    var removed = 0
+    val mdir = Paths.get(root, "manifests")
+    var removed = commitIO.listNames(mdir).count { n =>
+      // a live publisher's temp file is seconds old; a crashed one's goes stale
+      n.startsWith(PosixCommitIO.TmpPrefix) && orphanStale(mdir.resolve(n)) &&
+        Files.deleteIfExists(mdir.resolve(n))
+    }
     latest.foreach { upTo =>
-      val mdir = Paths.get(root, "manifests")
       commitIO.listNames(mdir).foreach {
         case n @ TableFile("manifest", b) if b <= upTo =>
           rmTree(epochDir(root, b).toFile)

@@ -434,36 +434,43 @@ class ArenaStateStoreSpec extends SparkSpec {
     val rawSrc = tmp("evict-raw"); val genSrc = tmp("evict-gen")
     writeBatches(rawSrc, slices(raw))
     writeBatches(genSrc, genLate)
-    val (streamed, removedRows) = withArenaProvider {
-      def fileStream(dir: String) = spark.readStream
-        .schema(GuardianStream.turnSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir)
-        .withWatermark("ts", "2 minutes")
-      val q = ProvenanceJoin.join(fileStream(rawSrc), fileStream(genSrc), "2 minutes")
-        .writeStream
-        .option("checkpointLocation", tmp("evict-ck"))
-        .outputMode("append")
-        .format("memory").queryName("evict_out")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val removed = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-        .map(_.numRowsRemoved).sum
-      (spark.table("evict_out"), removed)
-    }
-    assert(removedRows > 0, "watermark advance must actually evict join state")
     val batchAll = ProvenanceJoin.join(raw, gen, "2 minutes")
     val lateCond = lateKeys
       .map(k => col("conv_id") === k._1 && col("turn_idx") === k._2)
       .reduce(_ || _)
     val expected = batchAll.filter(!lateCond)
     assert(batchAll.count() == spec.totalTurns, "every twin matches in batch")
-    assert(streamed.count() == expected.count(),
-      s"late pairs dropped: ${streamed.count()} vs ${expected.count()} (batch ${batchAll.count()})")
-    assert(streamed.exceptAll(expected).count() == 0)
-    assert(expected.exceptAll(streamed).count() == 0)
+    // Spark's symmetric hash join and the standing state operator
+    // (ProvenanceJoin.stream: one flatMapGroupsWithState, whose removed
+    // rows are whole keys)
+    Seq[(String, (DataFrame, DataFrame, String) => DataFrame)](
+      "evict_out" -> ProvenanceJoin.join, "evict_out_fmgws" -> ProvenanceJoin.stream
+    ).foreach { case (name, plan) =>
+      val (streamed, removedRows) = withArenaProvider {
+        def fileStream(dir: String) = spark.readStream
+          .schema(GuardianStream.turnSchema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(dir)
+          .withWatermark("ts", "2 minutes")
+        val q = plan(fileStream(rawSrc), fileStream(genSrc), "2 minutes")
+          .writeStream
+          .option("checkpointLocation", tmp("evict-ck"))
+          .outputMode("append")
+          .format("memory").queryName(name)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        val removed = q.recentProgress
+          .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+          .map(_.numRowsRemoved).sum
+        (spark.table(name), removed)
+      }
+      assert(removedRows > 0, s"$name: watermark advance must actually evict join state")
+      assert(streamed.count() == expected.count(),
+        s"$name: late pairs dropped: ${streamed.count()} vs ${expected.count()} (batch ${batchAll.count()})")
+      assert(streamed.exceptAll(expected).count() == 0)
+      assert(expected.exceptAll(streamed).count() == 0)
+    }
   }
 
   test("fMGWS dedup (the rowDedup=off A/B path) runs on the arena provider") {

@@ -88,6 +88,30 @@ class ExplainSpec extends SparkSpec {
     } finally graft.stream.IceLite.rmTree(new java.io.File(root))
   }
 
+  test("IceLite read-backs build their frames with no Spark job") {
+    // the schema comes from a data file's footer, not an inference job:
+    // compacted table + residual epoch, point lookup, one epoch
+    val root = java.nio.file.Files.createTempDirectory("explain-read").toString
+    try {
+      val turns = graft.gen.DeterministicGen.transcripts(
+        spark, graft.gen.DeterministicGen.TranscriptSpec(nConvs = 3, turnsPerConv = 4, seed = 6))
+      (0L to 2L).foreach(b =>
+        graft.stream.IceLite.commit(turns, root, b)(_ => new graft.lineage.DataLineage("t")))
+      assert(graft.stream.IceLite.compact(spark, root))
+      graft.stream.IceLite.commit(turns, root, 3L)(_ => new graft.lineage.DataLineage("t"))
+      val frames = Seq(
+        "read" -> (() => graft.stream.IceLite.read(spark, root)),
+        "readConv" -> (() => graft.stream.IceLite.readConv(spark, root, "conv-000001")),
+        "readEpoch" -> (() => graft.stream.IceLite.readEpoch(spark, root, 3L).get))
+      frames.foreach { case (name, build) =>
+        val (df, jobs) = jobsDuring(build())
+        assert(jobs == 0, s"building IceLite.$name started $jobs job(s)")
+        assert(df.columns.toSeq == turns.columns.toSeq, s"$name: ${df.columns.mkString(",")}")
+      }
+      assert(graft.stream.IceLite.read(spark, root).count() == 4 * turns.count())
+    } finally graft.stream.IceLite.rmTree(new java.io.File(root))
+  }
+
   test("shuffle-free projections plan ZERO exchanges") {
     // the scan-speed operators' whole value is no shuffle; a regression
     // (an accidental repartition, a window, a join) fails here

@@ -600,6 +600,22 @@ class StreamingSpec extends SparkSpec {
       .agg(sum("n_turns")).collect()(0).getLong(0) == 3)
   }
 
+  test("expiry sweeps a stale manifest publish temp file and keeps a fresh one") {
+    // a crash between writing a manifest's temp file and linking it
+    val root = tmp("tmp-sweep")
+    IceLite.commit(tinyTurns("alpha"), root, 0L)(_ => new graft.lineage.DataLineage("t"))
+    val mdir = java.nio.file.Paths.get(root, "manifests")
+    val Seq(stale, fresh) = Seq("stale", "fresh").map { n =>
+      Files.writeString(mdir.resolve(s"${PosixCommitIO.TmpPrefix}$n"), "{}").toFile
+    }
+    assert(stale.setLastModified(System.currentTimeMillis() - 60L * 60 * 1000))
+    assert(IceLite.expireCompacted(root) == 1)
+    assert(!stale.exists(), "stale temp file swept")
+    assert(fresh.exists(), "fresh temp file kept")
+    assert(IceLite.committedBatches(root) == Seq(0L))
+    assert(IceLite.read(spark, root).count() == 1)
+  }
+
   test("standing drift monitor over quality partials equals the batch drift detector") {
     val spec = TranscriptSpec(nConvs = 6, turnsPerConv = 20, seed = 47,
       stepSeconds = 300, burstLen = 1000, piiPermille = 60)
@@ -1340,6 +1356,15 @@ class StreamingSpec extends SparkSpec {
       guardianDrain(src, "warm-2")
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
       assert(compiled == 0, s"the second drain compiled $compiled classes")
+      // the provenance query too, raw and generated side from one source
+      def provenanceDrain(tag: String): Unit =
+        GuardianStream.startProvenance(spark, src, src, tmp(s"$tag-ck"), tmp(s"$tag-sink"),
+          availableNow = true, maxFilesPerTrigger = Some(1)).awaitTermination()
+      provenanceDrain("warm-prov-1")
+      val beforeProv = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      provenanceDrain("warm-prov-2")
+      val compiledProv = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - beforeProv
+      assert(compiledProv == 0, s"the second provenance drain compiled $compiledProv classes")
     }
   }
 

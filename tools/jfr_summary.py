@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Summarize the process spawns in a JFR recording, and the codegen compiles
-in a run's log.
+and broadcasts in a run's log.
 
 Usage:
 
@@ -21,6 +21,11 @@ keeps those lines past a WARN root level. A perfbench log is also split
 at its `drain <i>:` lines: the compiles logged before each drain's line
 belong to that drain (the first segment includes setup).
 
+Broadcasts are counted the same way, from MemoryStore's `Block broadcast_N
+stored as values in memory (estimated size S ...)` lines (logger
+`org.apache.spark.storage.memory.MemoryStore` at INFO), with their sizes:
+per drain, and how many of each size.
+
 Needs the JDK's `jfr` tool on PATH.
 """
 import argparse
@@ -33,6 +38,9 @@ import sys
 PLUMBING = ("java.", "jdk.", "sun.", "scala.", "org.apache.hadoop.", "com.fasterxml.jackson.")
 CODEGEN = re.compile(r"CodeGenerator: Code generated in ([0-9.]+) ms")
 DRAIN = re.compile(r"\] drain \d+: ")
+BROADCAST = re.compile(
+    r"Block broadcast_\d+ stored as values in memory \(estimated size ([0-9.]+) (B|KiB|MiB|GiB)")
+UNIT = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30}
 
 
 def class_name(f):
@@ -88,19 +96,33 @@ def main():
         print(f"  {n:6d}  {site}  ({cmd}, {kind})")
 
     if a.log:
-        ms, per_drain, n = [], [], 0
+        # per kind: values, and per drain [count, bytes] (last = after the last drain)
+        seen = {"codegen": [], "broadcast": []}
+        drains = {k: [[0, 0.0]] for k in seen}
         with open(a.log, errors="replace") as fh:
             for line in fh:
-                m = CODEGEN.search(line)
-                if m:
-                    ms.append(float(m.group(1)))
-                    n += 1
+                m, b = CODEGEN.search(line), BROADCAST.search(line)
+                if m or b:
+                    kind, v = ("codegen", float(m.group(1))) if m else \
+                        ("broadcast", float(b.group(1)) * UNIT[b.group(2)])
+                    seen[kind].append(v)
+                    drains[kind][-1][0] += 1
+                    drains[kind][-1][1] += v
                 elif DRAIN.search(line):
-                    per_drain.append(n)
-                    n = 0
+                    for d in drains.values():
+                        d.append([0, 0.0])
+        ms, sizes = seen["codegen"], seen["broadcast"]
         print(f"codegen compiles: {len(ms)} ({sum(ms):.0f} ms)")
-        if per_drain:
-            print(f"  up to each perfbench drain: {per_drain}; after the last: {n}")
+        if len(drains["codegen"]) > 1:
+            print(f"  up to each perfbench drain: {[n for n, _ in drains['codegen'][:-1]]}; "
+                  f"after the last: {drains['codegen'][-1][0]}")
+        print(f"broadcasts: {len(sizes)} ({sum(sizes) / 1024:.0f} KiB)")
+        if len(drains["broadcast"]) > 1:
+            print("  up to each perfbench drain: "
+                  + ", ".join(f"{n} ({kib / 1024:.0f} KiB)" for n, kib in drains["broadcast"][:-1])
+                  + f"; after the last: {drains['broadcast'][-1][0]}")
+        for size, n in collections.Counter(sizes).most_common(a.top):
+            print(f"  {n:6d}  x {size / 1024:.1f} KiB")
 
 
 if __name__ == "__main__":
