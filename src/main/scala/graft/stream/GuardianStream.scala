@@ -563,7 +563,7 @@ object GuardianStream {
     * data write — the only Spark job of the epoch. The validation
     * report's moments ride along as `observe()` metrics of that same job,
     * and the manifest's per-partition lineage (row counts, conv_id
-    * ranges) is read from the written parquet footers driver-side (the
+    * ranges) comes back from the writing tasks with their file names (the
     * per-file-stats design real Iceberg manifests use). The atomic
     * manifest publish stays last, preserving the
     * invisible-until-committed invariant.

@@ -2,8 +2,9 @@ package graft.stream
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.lineage.DataLineage
 
@@ -17,8 +18,11 @@ import graft.lineage.DataLineage
   * no link — a 100 TB deployment on S3/GCS/ABFS implements this trait
   * with the store's conditional put instead (`If-None-Match: *` on S3,
   * `ifGenerationMatch=0` on GCS, ETag precondition on ABFS), which gives
-  * the same winner-takes-all semantics. Everything else IceLite does
-  * (data-file writes, footer reads, manifest lists) is plain
+  * the same winner-takes-all semantics. It is the ONLY commit: data files
+  * are written by the tasks under attempt-unique names and are visible
+  * exactly when a published manifest lists them, so no output committer,
+  * rename or `_SUCCESS` marker sits underneath it. Everything else IceLite
+  * does (data-file writes, manifest reads and lists) is plain
   * write-new-object / read / list and needs no atomicity.
   */
 trait CommitIO {
@@ -80,7 +84,8 @@ object PosixCommitIO extends CommitIO {
   *
   *  - data files land under `data/batch=<epoch>/` and are INVISIBLE to
   *    readers until `manifests/manifest-<epoch>.json` is published
-  *    winner-takes-all — a crashed or duplicated `foreachBatch` invocation
+  *    winner-takes-all; readers scan exactly the files a manifest lists, so
+  *    a crashed or duplicated `foreachBatch` invocation, or a failed task,
   *    leaves no visible trace;
   *  - a manifest that already exists short-circuits the commit
   *    (idempotent by batch id ⇒ exactly-once under Structured Streaming's
@@ -91,14 +96,22 @@ object PosixCommitIO extends CommitIO {
   *    partition, conv_id range).
   *
   * Layout (flat — `pid` is a DATA column, not a directory: `partitionBy`
-  * would force a per-batch sort; the file↔partition binding is recovered
-  * from each file's parquet footer stats, min == max on `pid`):
+  * would force a per-batch sort; each task writes one attempt-unique file
+  * `part-<pid>-<attempt>.parquet` and returns its stats, see
+  * `ParquetTaskWrite`):
   * {{{
-  *   <root>/data/batch=<epoch>/part-*.parquet   (pid, conv_id, … columns)
-  *   <root>/manifests/manifest-<epoch %09d>.json ("path": "data/batch=<epoch>")
-  *   <root>/compact/<upto>-<attempt>/part-*.parquet
-  *   <root>/manifests/compact-<upto %09d>.json ("path": "compact/<upto>-<attempt>")
+  *   <root>/data/batch=<epoch>/part-<pid>-<attempt>.parquet   (pid, conv_id, … columns)
+  *   <root>/manifests/manifest-<epoch %09d>.json
+  *       ("partitions": per-pid stats, "files": the epoch's data files,
+  *        "schema": the table schema, "lineage")
+  *   <root>/compact/<upto>-<attempt>/part-<pid>-<attempt>.parquet
+  *   <root>/manifests/compact-<upto %09d>.json
+  *       ("path": "compact/<upto>-<attempt>", "files", "schema")
   * }}}
+  * A partition with no rows writes no file; an empty epoch lists none and
+  * still records its schema. A manifest or marker written before files
+  * were listed (no "files" field; Spark's output directories) reads as its
+  * whole directory.
   *
   * One lifecycle serves the tables the guardian writes: `commit` lands
   * an epoch of the audit, provenance and session-partials tables,
@@ -133,6 +146,14 @@ object IceLite {
     */
   private def epochRel(batchId: Long): String = s"data/batch=$batchId"
 
+  private object EpochDir {
+    private val Name = """batch=(\d+)""".r
+    def unapply(name: String): Option[Long] = name match {
+      case Name(n) => Some(n.toLong)
+      case _ => None
+    }
+  }
+
   private def epochDir(root: String, batchId: Long): Path =
     Paths.get(root, epochRel(batchId))
 
@@ -165,53 +186,41 @@ object IceLite {
     * batch id was already committed (a duplicate foreachBatch delivery,
     * or a concurrent commit that published first).
     *
-    * ONE Spark job: rows are stamped with `spark_partition_id()` as `pid`,
-    * the data files are written while `metrics` ride the same job as
-    * `observe()` aggregates, and the per-partition stats (row counts,
-    * conv_id min/max, pid binding) are read driver-side from the written
-    * parquet FOOTERS. The manifest — its lineage built by `lineage` from
-    * the observed values — is published last, so the epoch stays
-    * invisible until committed. Its per-partition stats describe exactly
-    * the rows with that `pid`: the (conv_id-range, epoch, partition)
-    * triple the north star requires.
+    * An epoch already committed is still run to its end, writing nothing:
+    * a micro-batch's stateful operators commit their state version only
+    * once every partition is consumed, and Spark fails the batch when
+    * they did not (a restart after a crash between this publish and the
+    * checkpoint's commit log redelivers such an epoch).
+    *
+    * ONE Spark job: rows are stamped with `spark_partition_id()` as `pid`
+    * (a DATA column, not a partition directory: `partitionBy` would force
+    * a sort of every micro-batch), each task writes its partition to one
+    * attempt-unique file and returns the file's stats (row count, conv_id
+    * min/max, pid), and `metrics` ride the same job as `observe()`
+    * aggregates. The manifest — the files, the schema, the per-partition
+    * stats and the lineage `lineage` builds from the observed values — is
+    * published last and is the only commit, so the epoch stays invisible
+    * until committed. Its per-partition stats describe exactly the rows
+    * with that `pid`: the (conv_id-range, epoch, partition) triple the
+    * north star requires.
     */
   def commit(df: DataFrame, root: String, batchId: Long, metrics: Column*)(
       lineage: Map[String, Any] => DataLineage): Option[Map[String, Any]] = {
-    if (isCommitted(root, batchId)) return None
+    if (isCommitted(root, batchId)) {
+      df.write.format("noop").mode("overwrite").save()
+      return None
+    }
     val stamped = df.withColumn("pid", spark_partition_id())
     val observation = Option.when(metrics.nonEmpty)(Observation())
-    val dir = writeData(
+    val written = ParquetTaskWrite(
       observation.fold(stamped)(stamped.observe(_, metrics.head, metrics.tail: _*)),
-      root, batchId)
+      root, epochRel(batchId))
     val observed = observation.fold(Map.empty[String, Any])(_.get)
-    Option.when(publish(root, batchId, lineage(observed), footerStats(dir)))(observed)
+    val lin = lineage(observed)
+    val stats = written.map(w => PartitionManifest(w.pid, w.rows, w.convIdMin, w.convIdMax))
+    val manifest = Manifest(batchId, lin.datasetId, stats.map(_.rowCount).sum, stats, lin.toJson)
+    Option.when(writeManifest(root, manifest, written.map(_.rel), stamped.schema))(observed)
   }
-
-  /** Write one batch's data files (invisible until `publish`). Returns the
-    * batch data directory.
-    *
-    * `pid` is written as a DATA column, not a partition directory:
-    * `partitionBy` would force a full sort of every micro-batch on the
-    * partition key, while each write task emits exactly one file anyway —
-    * so the file↔partition binding is recovered from the parquet footer's
-    * pid column statistics (min == max per file) at manifest time.
-    */
-  private def writeData(stamped: DataFrame, root: String, batchId: Long): String = {
-    Files.createDirectories(Paths.get(root, "data"))
-    Files.createDirectories(Paths.get(root, "manifests"))
-    val dataDir = epochDir(root, batchId).toString
-    stamped.write.mode("overwrite").parquet(dataDir)
-    dataDir
-  }
-
-  /** Atomically publish the manifest that makes a written batch visible. */
-  private def publish(
-      root: String,
-      batchId: Long,
-      lineage: DataLineage,
-      stats: Seq[PartitionManifest]): Boolean =
-    writeManifest(root, Manifest(
-      batchId, lineage.datasetId, stats.map(_.rowCount).sum, stats, lineage.toJson))
 
   /** One file's (pid, rows, conv_id range) from its parquet footer. */
   private def footerOf(
@@ -254,18 +263,16 @@ object IceLite {
     } finally reader.close()
   }
 
-  /** Per-partition stats straight from the written parquet FOOTERS —
-    * row counts and conv_id min/max come from parquet column statistics,
-    * read driver-side in milliseconds with NO Spark job (the same
-    * per-file-stats design real Iceberg manifests use).
+  /** Per-partition stats of the parquet files under `dataDir`, from their
+    * FOOTERS' column statistics, read driver-side with no Spark job. Not on
+    * the commit path (the writing tasks return these stats): it describes
+    * a directory as it stands, e.g. one written before manifests listed
+    * their files.
     */
   def footerStats(dataDir: String): Seq[PartitionManifest] = {
-    // Footer reads are independent small-file reads — do them in parallel
-    // (at 32 shuffle partitions a serial loop adds ~32 × read-latency to
-    // every epoch's commit path), on a DEDICATED bounded pool: the shared
-    // ForkJoinPool.commonPool is also used elsewhere in a driver JVM, and
-    // an unbounded fan-out (or a blocked common pool) could stall the
-    // commit path.
+    // Footer reads are independent small-file reads — do them in parallel,
+    // on a DEDICATED bounded pool: the shared ForkJoinPool.commonPool is
+    // also used elsewhere in a driver JVM.
     val files: Array[java.io.File] = parquetFiles(new java.io.File(dataDir)).toArray
     files
       .map(f => java.util.concurrent.CompletableFuture.supplyAsync(
@@ -290,14 +297,12 @@ object IceLite {
   }
 
   /** One Hadoop conf for every footer read: a fresh `Configuration`
-    * re-parses core-default.xml on first use — a few ms on every epoch's
-    * commit path. Footer reads only read it.
+    * re-parses core-default.xml on first use. Footer reads only read it.
     */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
   /** Shared bounded pool for footer reads — one per process, daemon
-    * threads (a fresh pool per commit would put 8 thread creations inside
-    * the very commit path whose p99 the bench headlines).
+    * threads.
     */
   private lazy val footerPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(8, r => {
@@ -306,7 +311,8 @@ object IceLite {
       t
     })
 
-  private def writeManifest(root: String, m: Manifest): Boolean = {
+  private def writeManifest(root: String, m: Manifest, files: Seq[String],
+      schema: StructType): Boolean = {
     val node = mapper.createObjectNode()
     node.put("batch_id", m.batchId)
     node.put("dataset_id", m.datasetId)
@@ -318,16 +324,57 @@ object IceLite {
       pn.put("row_count", p.rowCount)
       pn.put("conv_id_min", p.convIdMin)
       pn.put("conv_id_max", p.convIdMax)
-      // pid is a data column (not a partition directory); the binding of
-      // files to pid is via each file's parquet footer stats (min==max).
       pn.put("path", epochRel(m.batchId))
     }
+    putListing(node, files, schema)
     node.set[com.fasterxml.jackson.databind.JsonNode](
       "lineage", mapper.readTree(m.lineageJson))
     val json = mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
     // Winner-takes-all atomic publish through the CommitIO seam.
     commitIO.publishIfAbsent(manifestPath(root, m.batchId), json)
   }
+
+  /** Record what a manifest or marker makes visible: its data files
+    * (relative to the table root; `part-<pid>-…` names bind each to its
+    * partition) and the table schema, which an epoch or table with no rows
+    * still has.
+    */
+  private def putListing(node: com.fasterxml.jackson.databind.node.ObjectNode,
+      files: Seq[String], schema: StructType): Unit = {
+    val fs = node.putArray("files")
+    files.foreach(fs.add)
+    node.set[com.fasterxml.jackson.databind.JsonNode]("schema", mapper.readTree(schema.json))
+    ()
+  }
+
+  /** What one manifest or marker makes visible: the `paths` a reader scans
+    * — its listed files, or the one data directory of one written before
+    * files were listed — and the schema it recorded, if any.
+    */
+  private final case class Listing(paths: Seq[String], schema: Option[StructType]) {
+    def nonEmpty: Boolean =
+      if (schema.isEmpty) paths.exists(d => parquetFiles(new java.io.File(d)).nonEmpty)
+      else paths.nonEmpty
+  }
+
+  /** The listing of the manifest or marker at `manifest`, whose data
+    * directory is `dir`; a missing manifest lists the directory.
+    */
+  private def listing(root: String, manifest: Path, dir: String): Listing = {
+    val node = Option.when(commitIO.exists(manifest))(mapper.readTree(Files.readString(manifest)))
+    node.flatMap(n => Option(n.get("files")).map(n -> _)) match {
+      case Some((n, files)) => Listing(
+        files.elements().asScala.map(f => Paths.get(root, f.asText()).toString).toSeq,
+        Some(DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType]))
+      case None => Listing(Seq(dir), None)
+    }
+  }
+
+  private def epochListing(root: String, batchId: Long): Listing =
+    listing(root, manifestPath(root, batchId), epochDir(root, batchId).toString)
+
+  private def compactListing(root: String, upTo: Long): Listing =
+    listing(root, compactMarkerPath(root, upTo), compactDataDir(root, upTo))
 
   def readManifest(root: String, batchId: Long): Manifest = {
     val node = mapper.readTree(Files.readString(manifestPath(root, batchId)))
@@ -361,9 +408,7 @@ object IceLite {
       latest: Option[Long], residual: Seq[Long]): DataFrame = {
     require(latest.nonEmpty || residual.nonEmpty,
       s"IceLite table at $root has no committed batches")
-    (latest.map(compactDataDir(root, _)).map(d => parquetReader(spark, Seq(d)).parquet(d)).toSeq ++
-      Option.when(residual.nonEmpty)(readBatches(spark, root, residual)))
-      .reduce(_.unionByName(_))
+    scan(spark, latest.map(compactListing(root, _)).toSeq ++ residual.map(epochListing(root, _)))
   }
 
   /** Residual epoch batches whose manifest per-partition
@@ -413,19 +458,34 @@ object IceLite {
     */
   def readBatches(spark: SparkSession, root: String, batches: Seq[Long]): DataFrame = {
     require(batches.nonEmpty, s"IceLite table at $root has no committed batches")
-    val dirs = batches.map(epochDir(root, _).toString)
-    parquetReader(spark, dirs)
-      .option("basePath", Paths.get(root, "data").toString)
-      .parquet(dirs: _*)
-      .drop("pid", "batch")
+    scan(spark, batches.map(epochListing(root, _)))
   }
 
-  /** A parquet reader of `dirs` given the schema the first data file
-    * under them recorded in its footer, so that building the frame starts
-    * no schema-inference job (a bare `spark.read.parquet` starts one).
-    * With no data file to read it from, Spark infers as before.
+  /** The rows of `listings`, `pid` dropped: exactly their listed files
+    * (and the whole directories of old listings), read with the schema a
+    * listing recorded — or, when none did, the one the first data file's
+    * footer recorded — so that building the frame starts no
+    * schema-inference job (a bare `spark.read.parquet` starts one). With
+    * no file to scan, the empty frame of the recorded schema.
     */
-  private def parquetReader(spark: SparkSession, dirs: Seq[String]) =
+  private def scan(spark: SparkSession, listings: Seq[Listing]): DataFrame = {
+    val paths = listings.flatMap(_.paths)
+    val schema = listings.iterator.flatMap(_.schema).nextOption().orElse(footerSchema(paths))
+    val df = schema match {
+      case Some(s) if paths.isEmpty =>
+        // as a file read would: every column nullable
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType(s.map(_.copy(nullable = true))))
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+    df.drop("pid", "batch")
+  }
+
+  /** The schema Spark recorded in the footer of the first data file under
+    * the directories `dirs`, if any.
+    */
+  private def footerSchema(dirs: Seq[String]): Option[StructType] =
     dirs.iterator.flatMap(d => parquetFiles(new java.io.File(d))).nextOption()
       .flatMap { f =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -435,16 +495,15 @@ object IceLite {
           .get("org.apache.spark.sql.parquet.row.metadata"))
         finally reader.close()
       }
-      .map(json => org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .fold(spark.read)(spark.read.schema(_))
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType])
 
   /** The rows of committed epoch `batchId`, or None when the epoch wrote
     * no parquet (an empty epoch) — the read-back of one epoch's output.
     */
-  def readEpoch(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] =
-    Option.when(parquetFiles(epochDir(root, batchId).toFile).nonEmpty)(
-      readBatches(spark, root, Seq(batchId)))
+  def readEpoch(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] = {
+    val epoch = epochListing(root, batchId)
+    Option.when(epoch.nonEmpty)(scan(spark, Seq(epoch)))
+  }
 
   // ---- table maintenance: fold epoch dirs into one compacted table ----
   // The small-files discipline a standing query needs at deployment
@@ -484,10 +543,10 @@ object IceLite {
     f.delete(); ()
   }
 
-  /** How long an unreferenced attempt dir or publish temp file must sit
-    * untouched before the orphan sweep may remove it — a live parquet
-    * write keeps refreshing its dir as part files land, so only crashed
-    * attempts go stale.
+  /** How long an unreferenced attempt dir, data file or publish temp file
+    * must sit untouched before the orphan sweep may remove it — a live
+    * parquet write keeps refreshing its files and dir as they land, so only
+    * crashed attempts go stale.
     */
   private val OrphanGraceMs = 15L * 60 * 1000
 
@@ -543,8 +602,8 @@ object IceLite {
     // deletes its orphan, and readers of the winner's published path are
     // never exposed to a mid-overwrite dir.
     val attemptRel = s"compact/$upTo-${java.util.UUID.randomUUID().toString.take(8)}"
-    val attemptDir = Paths.get(root, attemptRel).toString
-    rewrite(sources(spark, root, latest, residual)).write.mode("overwrite").parquet(attemptDir)
+    val folded = rewrite(sources(spark, root, latest, residual))
+    val written = ParquetTaskWrite(folded, root, attemptRel)
     val prevRows = latest.fold(Option(0L)) { u =>
       Option(mapper.readTree(Files.readString(compactMarkerPath(root, u))).get("row_count"))
         .map(_.asLong())
@@ -555,9 +614,10 @@ object IceLite {
     node.put("path", attemptRel)
     prevRows.foreach(p =>
       node.put("row_count", p + residual.map(b => readManifest(root, b).rowCount).sum))
+    putListing(node, written.map(_.rel), folded.schema)
     val won = commitIO.publishIfAbsent(
       compactMarkerPath(root, upTo), mapper.writeValueAsString(node))
-    if (!won) rmTree(new java.io.File(attemptDir))
+    if (!won) rmTree(Paths.get(root, attemptRel).toFile)
     won
   }
 
@@ -567,14 +627,18 @@ object IceLite {
     * losing/crashed compactors. Also, compacted or not, manifest publish
     * temp files older than the orphan grace window: a crash between
     * writing one and linking it leaves it behind, and nothing else ever
-    * removes it. On the manifest-only quality table the
-    * data deletes find nothing. Superseded manifests are never on the
+    * removes it. Likewise stale data files in an epoch directory that no
+    * manifest lists: a failed task, or an epoch attempt that crashed
+    * before its publish, leaves files no reader scans. On the
+    * manifest-only quality table the data deletes find nothing.
+    * Superseded manifests are never on the
     * read path (`compactSources` prefers the latest compacted marker), so
     * the delete ORDER within one entry is immaterial for readers;
     * data-first keeps the sweep idempotent — a crash between the two
     * deletes leaves the manifest in place, so the re-run finds the entry
     * again and re-deletes the (possibly half-gone) data dir. Returns the
-    * number of manifests, markers, orphan dirs and temp files removed.
+    * number of manifests, markers, orphan dirs, data files and temp files
+    * removed.
     */
   def expireCompacted(root: String): Int = {
     val (latest, _) = compactSources(root)
@@ -583,6 +647,23 @@ object IceLite {
       // a live publisher's temp file is seconds old; a crashed one's goes stale
       n.startsWith(PosixCommitIO.TmpPrefix) && orphanStale(mdir.resolve(n)) &&
         Files.deleteIfExists(mdir.resolve(n))
+    }
+    val ddir = Paths.get(root, "data")
+    commitIO.listNames(ddir).foreach {
+      case d @ EpochDir(b) =>
+        // the files the manifest lists; no manifest lists none, and an old
+        // one (no file list, no schema) its whole directory
+        val listed =
+          if (!isCommitted(root, b)) Some(Set.empty[String])
+          else { val l = epochListing(root, b); l.schema.map(_ => l.paths.toSet) }
+        listed.foreach { keep =>
+          removed += commitIO.listNames(ddir.resolve(d)).count { n =>
+            val f = ddir.resolve(d).resolve(n)
+            n.endsWith(".parquet") && !n.startsWith(".") && !keep(f.toString) &&
+              orphanStale(f) && Files.deleteIfExists(f)
+          }
+        }
+      case _ =>
     }
     latest.foreach { upTo =>
       commitIO.listNames(mdir).foreach {

@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * operator `GuardianStream.startProvenance` runs: the same match rows
   * from one `flatMapGroupsWithState` over the tagged union of both
   * streams, which emits exactly what Spark's streaming symmetric hash
-  * join of `join` emits (StreamingSpec's seeded differential test) at a
+  * join of `join` emits (ProvenanceJoinSpec's seeded differential test) at a
   * fraction of its fixed cost per epoch.
   */
 object ProvenanceJoin {

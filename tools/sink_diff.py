@@ -6,14 +6,23 @@
 For each IceLite table of a sink -- the root (audit or provenance table),
 `quality/` and `sessions/` -- it checks:
 
-  * epoch manifests (`manifests/manifest-<n>.json`): same names, byte-equal;
+  * epoch manifests (`manifests/manifest-<n>.json`): same names, and
+    byte-equal -- or, where either lists its data files, equal JSON once
+    the attempt number of each listed file name is masked
+    (`part-<pid>-<n>.parquet` -> `part-<pid>-<attempt>.parquet`: a sink
+    whose epoch was retried lists `-1` where another lists `-0`). Against
+    a sink written before manifests listed their files, the `files` and
+    `schema` only one side has are set aside and reported on their own;
   * compaction markers (`manifests/compact-<n>.json`): equal JSON once the
-    attempt-unique `path` is masked. On `sessions/` the folded-row count
-    `row_count` is reported on its own line instead of compared;
+    attempt-unique `path` and listed file names are masked. On `sessions/`
+    the folded-row count `row_count` is reported on its own line instead of
+    compared;
   * rows: the snapshot `IceLite.read` returns -- the latest compacted table
-    (the marker's `path`, or `compact/<n>` without one) plus the epoch
-    batches after it, `pid` dropped -- equal as multisets (DuckDB
-    `EXCEPT ALL` both ways over pyarrow tables).
+    plus the epoch batches after it, each the files its manifest or marker
+    lists (or, for one without a file list, every parquet file in its
+    directory: the marker's `path` or `compact/<n>`, `data/batch=<n>`),
+    `pid` dropped -- equal as multisets (DuckDB `EXCEPT ALL` both ways over
+    pyarrow tables).
 
 A table absent from both sinks is skipped. Prints one line per table and
 exits 1 when any table differs.
@@ -29,6 +38,7 @@ import pyarrow.parquet as pq
 
 TABLES = [".", "quality", "sessions"]
 NAME = re.compile(r"(manifest|compact)-(\d+)\.json$")
+ATTEMPT = re.compile(r"(part-\d+)-\d+\.parquet$")
 
 
 def listing(root):
@@ -47,6 +57,21 @@ def read_json(root, name):
         return json.load(f)
 
 
+def masked(j):
+    """`j` with its attempt-unique `path` and listed file names masked."""
+    j = dict(j)
+    if "path" in j:
+        j["path"] = "<attempt>"
+    if "files" in j:
+        j["files"] = [ATTEMPT.sub(r"\1-<attempt>.parquet", f) for f in j["files"]]
+    return j
+
+
+def unlisted(j):
+    """`j` without the file list and schema."""
+    return {k: v for k, v in j.items() if k not in ("files", "schema")}
+
+
 def differing_keys(ja, jb):
     """Top-level keys whose values differ between two JSON objects."""
     return sorted(k for k in ja.keys() | jb.keys() if ja.get(k) != jb.get(k))
@@ -61,16 +86,23 @@ def parquet_files(d):
     return found
 
 
+def listed(root, j, rel):
+    """The files manifest or marker `j` lists, else those in its directory `rel`."""
+    if "files" in j:
+        return [os.path.join(root, f) for f in j["files"]]
+    return parquet_files(os.path.join(root, rel))
+
+
 def snapshot(root, ls):
     """The parquet files `IceLite.read` would scan, or [] for none."""
     latest = max(ls["compact"], default=None)
     files = []
     if latest is not None:
-        rel = read_json(root, ls["compact"][latest]).get("path", f"compact/{latest}")
-        files += parquet_files(os.path.join(root, rel))
+        j = read_json(root, ls["compact"][latest])
+        files += listed(root, j, j.get("path", f"compact/{latest}"))
     for b in sorted(ls["manifest"]):
         if latest is None or b > latest:
-            files += parquet_files(os.path.join(root, "data", f"batch={b}"))
+            files += listed(root, read_json(root, ls["manifest"][b]), os.path.join("data", f"batch={b}"))
     return files
 
 
@@ -92,28 +124,30 @@ def compare_table(a, b, table):
 
     if la["manifest"].keys() != lb["manifest"].keys():
         problems.append(f"epoch sets differ: {sorted(la['manifest'])} vs {sorted(lb['manifest'])}")
-    same = 0
+    same = older = 0
     for n in sorted(la["manifest"].keys() & lb["manifest"].keys()):
         name = la["manifest"][n]
         with open(os.path.join(ra, "manifests", name), "rb") as fa, \
                 open(os.path.join(rb, "manifests", name), "rb") as fb:
             ba, bb = fa.read(), fb.read()
-        if ba == bb:
+        ja, jb = json.loads(ba), json.loads(bb)
+        if ba == bb or (("files" in ja or "files" in jb) and masked(ja) == masked(jb)):
             same += 1
+        elif ("files" in ja) != ("files" in jb) and unlisted(ja) == unlisted(jb):
+            older += 1
         else:
-            keys = differing_keys(json.loads(ba), json.loads(bb)) or ["formatting"]
+            keys = differing_keys(masked(ja), masked(jb)) or ["formatting"]
             problems.append(f"{name} differs in {', '.join(keys)}")
-    notes.append(f"{same} epoch manifests byte-identical")
+    notes.append(f"{same} epoch manifests equal (byte-identical, or with file names masked)")
+    if older:
+        notes.append(f"{older} epoch manifests equal apart from the file list and schema one side predates")
 
     if la["compact"].keys() != lb["compact"].keys():
         problems.append(f"marker sets differ: {sorted(la['compact'])} vs {sorted(lb['compact'])}")
     same = 0
     for n in sorted(la["compact"].keys() & lb["compact"].keys()):
-        ja = read_json(ra, la["compact"][n])
-        jb = read_json(rb, lb["compact"][n])
-        for j in (ja, jb):
-            if "path" in j:
-                j["path"] = "<attempt>"
+        ja = masked(read_json(ra, la["compact"][n]))
+        jb = masked(read_json(rb, lb["compact"][n]))
         if table == "sessions":
             ca, cb = ja.pop("row_count", None), jb.pop("row_count", None)
             notes.append(f"compact-{n} row_count {ca if ca is not None else '-'}"
@@ -122,7 +156,7 @@ def compare_table(a, b, table):
             same += 1
         else:
             problems.append(f"compact-{n} differs in {', '.join(differing_keys(ja, jb))}")
-    notes.append(f"{same} markers equal with path masked")
+    notes.append(f"{same} markers equal with path and file names masked")
 
     ta, tb = rows(snapshot(ra, la)), rows(snapshot(rb, lb))
     if ta is None and tb is None:
