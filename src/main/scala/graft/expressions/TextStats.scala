@@ -69,16 +69,24 @@ object TextScan {
   /** One pass over the UTF-8 bytes. Multi-byte UTF-8 units have the high
     * bit set, so they fall through every ASCII class test and count as
     * plain non-whitespace token bytes — byte-level \S semantics match
-    * char-level for these patterns.
+    * char-level for these patterns. Characters are counted in the same
+    * pass, stepping from each first byte as `UTF8String.numChars` does,
+    * so the count equals it on malformed UTF-8 too.
     */
   def pack(s: UTF8String): Long = {
     val n = s.numBytes()
+    var chars = 0L
+    var nextChar = 0
     var tokens = 0L
     var inTok = false
     var pii = false
     var i = 0
     while (i < n) {
       val b = s.getByte(i)
+      if (i == nextChar) {
+        chars += 1
+        nextChar = i + UTF8String.numBytesForFirstByte(b)
+      }
       if (isWs(b)) inTok = false
       else {
         if (!inTok) { tokens += 1; inTok = true }
@@ -89,7 +97,7 @@ object TextScan {
       }
       i += 1
     }
-    (s.numChars().toLong << 32) | (tokens << 1) | (if (pii) 1L else 0L)
+    (chars << 32) | (tokens << 1) | (if (pii) 1L else 0L)
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.stream
 
+import java.nio.ByteBuffer
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.Turn
@@ -39,7 +40,20 @@ object DedupState {
   /** Event-time window of `nearDupRows`' per-row band count. */
   private val NearDupWindow = "60 seconds"
 
-  final case class SeenState(hashes: Array[Long], maxEventMs: Long)
+  /** A key's state: its newest admitted event time (ms), then its
+    * remembered turn hashes oldest first, 8 big-endian bytes each, packed
+    * into one binary value. A state encoder with an array field made every
+    * query start compile its state projections again; a binary field does
+    * not. The packing changed the state schema: checkpoints of the
+    * `rowDedup = false` path written before it do not resume.
+    */
+  final case class SeenState(packed: Array[Byte])
+
+  private def pack(hashes: Array[Long], maxEventMs: Long): SeenState = {
+    val buf = ByteBuffer.allocate(8 * (hashes.length + 1)).putLong(maxEventMs)
+    hashes.foreach(buf.putLong)
+    SeenState(buf.array())
+  }
 
   private def turnHash(t: Turn): Long = {
     // FNV-1a over turn_idx and text UTF-16 units — stable across JVMs,
@@ -135,11 +149,10 @@ object DedupState {
       state.remove()
       return Iterator.empty
     }
-    val prev = state.getOption.getOrElse(SeenState(Array.empty, 0L))
-    val seen = new LongOrderedSet(prev.hashes.length + 16)
-    var i = 0
-    while (i < prev.hashes.length) { seen.add(prev.hashes(i)); i += 1 }
-    var maxEventMs = prev.maxEventMs
+    val prev = ByteBuffer.wrap(state.getOption.map(_.packed).getOrElse(new Array[Byte](8)))
+    var maxEventMs = prev.getLong()
+    val seen = new LongOrderedSet(prev.remaining / 8 + 16)
+    while (prev.hasRemaining) seen.add(prev.getLong())
     // Engines drop late rows automatically only for windowed aggregations;
     // for arbitrary stateful ops the contract is explicit: a turn whose
     // event time is at-or-behind the current watermark is LATE and
@@ -162,7 +175,7 @@ object DedupState {
       // keep no state at all.
       if (state.exists) state.remove()
     } else {
-      state.update(SeenState(seen.toTrimmedArray(MaxHashesPerKey), maxEventMs))
+      state.update(pack(seen.toTrimmedArray(MaxHashesPerKey), maxEventMs))
       if (wmMs >= 0) {
         // Timeout must be strictly beyond the current watermark.
         state.setTimeoutTimestamp(math.max(maxEventMs + StateTtlMs, wmMs + 1))

@@ -113,6 +113,12 @@ object PosixCommitIO extends CommitIO {
   * were listed (no "files" field; Spark's output directories) reads as its
   * whole directory.
   *
+  * File encoding: Spark's parquet writer settings (the session's codec),
+  * except that every timestamp column (`ts`, `raw_ts`, `gen_ts`) is INT64
+  * `TIMESTAMP(MICROS)` with no dictionary, since event times are close to
+  * unique per row. Epochs written in Spark's default INT96 read alongside
+  * them, and `compact` rewrites them in this encoding.
+  *
   * One lifecycle serves the tables the guardian writes: `commit` lands
   * an epoch of the audit, provenance and session-partials tables,
   * `compact` folds a table's committed epochs into one, and

@@ -17,6 +17,7 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.graftbridge.CatalystBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,7 +39,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `ParquetWriteSupport`, configured by the few keys
   * `ParquetFileFormat.prepareWrite` sets plus the session's `parquet.*`
   * keys (codec level and the like): the bytes equal those Spark's parquet
-  * writer produces for the same rows.
+  * writer produces for the same rows under the same settings. The one
+  * setting of its own is the timestamp encoding (`taskConf`).
   */
 object ParquetTaskWrite {
 
@@ -81,7 +83,12 @@ object ParquetTaskWrite {
   /** The task conf: the session's `parquet.*` keys, then what
     * `ParquetFileFormat.prepareWrite` sets for `schema` — the codec, the
     * write support's schema and Spark's parquet write flags. A dozen keys
-    * instead of the session's whole Hadoop conf.
+    * instead of the session's whole Hadoop conf. Then the timestamp
+    * encoding: INT64 `TIMESTAMP_MICROS`, and `parquet.enable.dictionary#<col>`
+    * off for each top-level `TimestampType` column. Event times are close
+    * to unique per row, so a dictionary of them never pays; Spark's
+    * default INT96 costs 12 bytes a value before compression. Files written
+    * in INT96 (every sink written before this encoding) read the same.
     */
   private[stream] def taskConf(spark: SparkSession, schema: StructType): Map[String, String] = {
     val conf = new Configuration(false)
@@ -89,8 +96,16 @@ object ParquetTaskWrite {
       .foreach { case (k, v) => conf.set(s"parquet.$k", v) }
     val job = Job.getInstance(conf)
     new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    job.getConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val written = job.getConfiguration
+    written.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+    schema.fields.filter(_.dataType == TimestampType)
+      .foreach(f => written.setBoolean(s"$ColumnDictionary${f.name}", false))
+    written.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
   }
+
+  /** Prefix of parquet's per-column dictionary switch. */
+  private val ColumnDictionary = s"${ParquetOutputFormat.ENABLE_DICTIONARY}#"
 
   /** `build()` asks for the write support by `ParquetConfiguration`; the
     * `Configuration` variant is abstract.
@@ -105,10 +120,14 @@ object ParquetTaskWrite {
   }
 
   /** A writer of the (created, empty) `file` configured as
-    * `ParquetOutputFormat` configures one from `conf`.
+    * `ParquetOutputFormat` configures one from `conf`, per-column
+    * dictionary switches included (the builder does not read those).
     */
-  private def writer(file: java.nio.file.Path, conf: Configuration): ParquetWriter[InternalRow] =
-    new Builder(new LocalOutputFile(file))
+  private def writer(file: java.nio.file.Path, conf: Configuration): ParquetWriter[InternalRow] = {
+    val builder = new Builder(new LocalOutputFile(file))
+    conf.iterator().asScala.map(_.getKey).filter(_.startsWith(ColumnDictionary))
+      .foreach(k => builder.withDictionaryEncoding(k.stripPrefix(ColumnDictionary), conf.getBoolean(k, false)))
+    builder
       .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .withConf(conf)
       .withCompressionCodec(ParquetOutputFormat.getCompression(conf))
@@ -120,6 +139,7 @@ object ParquetTaskWrite {
       .withValidation(ParquetOutputFormat.getValidation(conf))
       .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
       .build()
+  }
 
   /** One task: write `rows` to a new file, return its one stats row. */
   private[stream] def writePartition(root: String, rel: String, conf: Map[String, String],
@@ -143,8 +163,8 @@ object ParquetTaskWrite {
       if (convOrdinal >= 0 && !r.isNullAt(convOrdinal)) {
         val c = r.getUTF8String(convOrdinal)
         // rows may share one buffer: keep copies
-        if (lo == null || c.compareTo(lo) < 0) lo = c.clone()
-        if (hi == null || c.compareTo(hi) > 0) hi = c.clone()
+        if (lo == null || c.binaryCompare(lo) < 0) lo = c.clone()
+        if (hi == null || c.binaryCompare(hi) > 0) hi = c.clone()
       }
     } finally out.close()
     afterFile(file)

@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StructType, TimestampType}
 import graft.gen.DeterministicGen
 import graft.gen.DeterministicGen.TranscriptSpec
 import graft.lineage.DataLineage
@@ -11,8 +15,9 @@ import graft.stream._
 
 /** The IceLite table format: tasks write their own parquet files, the
   * manifest lists them and is the only commit. Byte identity with Spark's
-  * parquet writer, listed-file reads next to orphans, empty epochs, sinks
-  * written before manifests listed their files, and sink hygiene.
+  * parquet writer, the timestamp encoding, listed-file reads next to
+  * orphans, empty epochs, sinks written before manifests listed their
+  * files or in Spark's INT96 encoding, and sink hygiene.
   */
 class IceLiteSpec extends SparkSpec {
 
@@ -38,11 +43,18 @@ class IceLiteSpec extends SparkSpec {
     val codecs = Seq(Map.empty[String, String], Map(
       "spark.sql.parquet.compression.codec" -> "zstd",
       "parquet.compression.codec.zstd.level" -> "1"))
+    // the sink's timestamp encoding, given to Spark's writer
+    val tsType = SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key
+    val noTsDictionary = df.schema.fields.filter(_.dataType == TimestampType)
+      .map(f => s"parquet.enable.dictionary#${f.name}" -> "false").toMap
+    assert(noTsDictionary.nonEmpty)
     for (conf <- codecs) withClue(s"$conf: ") {
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val sparkDir = tmp("bytes-spark")
-        df.write.mode("overwrite").parquet(sparkDir)
+        spark.conf.set(tsType, "TIMESTAMP_MICROS")
+        try df.write.options(noTsDictionary).mode("overwrite").parquet(sparkDir)
+        finally spark.conf.unset(tsType)
         val root = tmp("bytes-task")
         val written = ParquetTaskWrite(df, root, "data")
         assert(written.map(_.pid) == Seq(0, 1, 2))
@@ -84,6 +96,100 @@ class IceLiteSpec extends SparkSpec {
       .flatMap(n => Option(manifestJson(root, n).get("files")).toSeq
         .flatMap(_.elements().asScala.map(f => Paths.get(root, f.asText()))))
       .toSet
+
+  /** Per column of a parquet file's footer: (physical type, logical type,
+    * whether any row group's chunk of it is dictionary-encoded).
+    */
+  private def columnEncodings(file: Path): Map[String, (String, String, Boolean)] = {
+    val reader = ParquetFileReader.open(new LocalInputFile(file))
+    try {
+      val chunks = reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      chunks.groupBy(_.getPath.toDotString).map { case (col, cs) =>
+        val t = cs.head.getPrimitiveType
+        col -> (t.getPrimitiveTypeName.toString, String.valueOf(t.getLogicalTypeAnnotation),
+          cs.exists(c => c.hasDictionaryPage || c.getEncodings.asScala.exists(_.usesDictionary)))
+      }
+    } finally reader.close()
+  }
+
+  /** The `TimestampType` columns of the table at `root`, from its manifest schema. */
+  private def timestampColumns(root: String): Seq[String] = {
+    val name = PosixCommitIO.listNames(Paths.get(root, "manifests")).filter(_.startsWith("manifest-")).min
+    org.apache.spark.sql.types.DataType.fromJson(manifestJson(root, name).get("schema").toString)
+      .asInstanceOf[StructType].fields.filter(_.dataType == TimestampType).map(_.name).toSeq
+  }
+
+  /** The data files manifest or marker `name` of the table at `root` lists. */
+  private def filesOf(root: String, name: String): Seq[Path] =
+    manifestJson(root, name).get("files").elements().asScala.map(f => Paths.get(root, f.asText())).toSeq
+
+  /** Each of `files` of the table at `root` stores `tsCols` as INT64
+    * microseconds (UTC-adjusted) with no dictionary. `pid`, one value per
+    * epoch file, keeps its dictionary wherever one pays (more than one row).
+    */
+  private def assertEncoding(root: String, files: Iterable[Path], tsCols: Seq[String]): Unit = {
+    assert(files.nonEmpty && timestampColumns(root) == tsCols)
+    files.foreach { f =>
+      val enc = columnEncodings(f)
+      tsCols.foreach(c => assert(enc(c) == (("INT64", "TIMESTAMP(MICROS,true)", false)), s"$f $c"))
+      val rows = { val r = ParquetFileReader.open(new LocalInputFile(f)); try r.getRecordCount finally r.close() }
+      assert(enc.get("pid").forall(_._3 || rows < 2), s"$f: pid keeps its dictionary")
+    }
+  }
+
+  test("start and startProvenance epochs store timestamps as INT64 micros with no dictionary page") {
+    val src = tmp("enc-src")
+    writeSlices(src, slices(70))
+    val cfg = guardianCfg(src, "enc")
+    GuardianStream.start(spark, cfg).awaitTermination()
+    assertEncoding(cfg.sinkDir, listedFiles(cfg.sinkDir), Seq("ts"))
+
+    val raw = slices(71)
+    val (rawDir, genDir, sink) = (tmp("enc-raw"), tmp("enc-gen"), tmp("enc-prov"))
+    writeSlices(rawDir, raw)
+    writeSlices(genDir, raw.map(DeterministicGen.generatedTwin(_, maxSkewSeconds = 60, seed = 71)))
+    GuardianStream.startProvenance(spark, rawDir, genDir, tmp("enc-prov-ck"), sink,
+      watermarkDelay = "365 days", availableNow = true, maxFilesPerTrigger = Some(1)).awaitTermination()
+    assertEncoding(sink, listedFiles(sink), Seq("raw_ts", "gen_ts"))
+  }
+
+  /** Rewrite every listed file of committed epoch `b` of the table at
+    * `root` with Spark's default parquet writer (INT96 timestamps), in
+    * place: the manifest still lists it.
+    */
+  private def toInt96(root: String, b: Long): Unit =
+    filesOf(root, f"manifest-$b%09d.json").foreach { f =>
+      val staging = tmp("int96")
+      spark.read.parquet(f.toString).coalesce(1).write.mode("overwrite").parquet(staging)
+      val part = new java.io.File(staging).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(columnEncodings(f)("ts")._1 == "INT96")
+    }
+
+  test("a table mixing Spark's INT96 epochs with INT64 epochs reads the same, and compacts to INT64") {
+    val src = tmp("mixed-src")
+    writeSlices(src, slices(72))
+    val cfg = guardianCfg(src, "mixed")
+    GuardianStream.start(spark, cfg).awaitTermination()
+    val root = cfg.sinkDir
+    val conv = "conv-000003"
+    val epochs = IceLite.committedBatches(root)
+    def reads() = (rowsOf(IceLite.read(spark, root)),
+      rowsOf(IceLite.readConv(spark, root, conv)),
+      epochs.map(b => IceLite.readEpoch(spark, root, b).map(rowsOf).getOrElse(Seq.empty)))
+    val before = reads()
+    assert(before._1.size == 48 && before._2.nonEmpty)
+    val withData = epochs.filter(b => filesOf(root, f"manifest-$b%09d.json").nonEmpty)
+    val int96 = withData.filter(_ % 2 == 0)
+    assert(int96.nonEmpty && int96.size < withData.size)
+    int96.foreach(toInt96(root, _))
+    assert(reads() == before)
+    assert(IceLite.compact(spark, root))
+    assert(rowsOf(IceLite.read(spark, root)) == before._1)
+    assert(rowsOf(IceLite.readConv(spark, root, conv)) == before._2)
+    val marker = PosixCommitIO.listNames(Paths.get(root, "manifests")).filter(_.startsWith("compact-")).max
+    assertEncoding(root, filesOf(root, marker), Seq("ts"))
+  }
 
   test("an unlisted data file changes no read; expiry removes it once stale, never a listed one") {
     val root = tmp("orphan")

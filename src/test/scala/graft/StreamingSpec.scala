@@ -1368,6 +1368,29 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a second AvailableNow drain of the flatMapGroupsWithState dedup path compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val slices = Seq(25, 26).map(seed => turnsDF(TranscriptSpec(nConvs = 4, turnsPerConv = 8, seed = seed)))
+    val src = tmp("warm-fmgws-src")
+    writeBatches(src, slices)
+    def drain(tag: String): String = {
+      val cfg = GuardianStream.StreamConfig(
+        sourceDir = src, checkpointDir = tmp(s"$tag-ck"), sinkDir = tmp(s"$tag-sink"),
+        maxFilesPerTrigger = Some(1), availableNow = true, rowDedup = false)
+      GuardianStream.start(spark, cfg).awaitTermination()
+      cfg.sinkDir
+    }
+    withArena {
+      val first = drain("warm-fmgws-1")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val second = drain("warm-fmgws-2")
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"the second drain compiled $compiled classes")
+      def rows(sink: String) = IceLite.read(spark, sink).drop("pid").collect().map(_.toString).sorted.toSeq
+      assert(rows(first).nonEmpty && rows(second) == rows(first))
+    }
+  }
+
   test("a drain writes no .crc file under the checkpoint's offsets, commits, sources or state") {
     val turns = turnsDF(TranscriptSpec(nConvs = 6, turnsPerConv = 8, seed = 57))
     val src = tmp("nocrc-src")

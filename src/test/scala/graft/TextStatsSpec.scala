@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expressions.TextScan
 import graft.gen.DeterministicGen
 import graft.gen.DeterministicGen.TranscriptSpec
 import graft.stream.Windows
@@ -38,6 +40,26 @@ class TextStatsSpec extends SparkSpec {
       "mixed 李@例.com ascii@host.org", "trailing@dot.com.",
       "a@-.xx", "a@x-y.zz", "dot@.a.bc")
     assertEquivalent(cases.zipWithIndex.map(_.swap).toDF("id", "text"))
+  }
+
+  test("scanner's char count equals UTF8String.numChars on multibyte and malformed bytes") {
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val literal = Seq("", "é", "中文 文本", "emoji 😀 pair", "unicode héllo wörld — em–dash…")
+      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val malformed = Seq(
+      bytes(0x80), bytes(0xbf, 0xbf, 0x41), bytes(0xc0, 0x41), bytes(0xc1, 0x80),
+      bytes(0xc3), bytes(0xe4, 0xb8), bytes(0xe0, 0x41, 0x42, 0x43), bytes(0xf0, 0x9f, 0x98),
+      bytes(0x41, 0xf4, 0x8f, 0xbf, 0xbf, 0x41), bytes(0xf5, 0xff, 0xfe, 0x20),
+      bytes(0x61, 0x40, 0xe2, 0x82, 0x62, 0x2e, 0x63, 0x6f))
+    // seeded random bytes, weighted towards lead and continuation bytes
+    val rng = new scala.util.Random(71)
+    val random = Seq.fill(2000)(Array.fill(rng.nextInt(24))(
+      (if (rng.nextInt(3) == 0) rng.nextInt(128) else 128 + rng.nextInt(128)).toByte))
+    for (b <- literal ++ malformed ++ random) {
+      val expected = UTF8String.fromBytes(b).numChars()
+      val packed = TextScan.pack(UTF8String.fromBytes(b))
+      assert((packed >>> 32) == expected, s"bytes ${b.map(x => f"${x & 0xff}%02x").mkString(" ")}")
+    }
   }
 
   test("scanner equals regexes on PII-planted transcripts and documents") {

@@ -22,10 +22,15 @@ For each IceLite table of a sink -- the root (audit or provenance table),
     lists (or, for one without a file list, every parquet file in its
     directory: the marker's `path` or `compact/<n>`, `data/batch=<n>`),
     `pid` dropped -- equal as multisets (DuckDB `EXCEPT ALL` both ways over
-    pyarrow tables).
+    pyarrow tables). Timestamp columns are compared as epoch microseconds:
+    pyarrow reads Spark's INT96 as a naive timestamp and INT64
+    `TIMESTAMP(MICROS)` as a UTC one, which DuckDB would compare through
+    its session TimeZone.
 
-A table absent from both sinks is skipped. Prints one line per table and
-exits 1 when any table differs.
+A table absent from both sinks is skipped. Prints one line per table, then
+per column of that snapshot the bytes per row, physical type and encodings
+on each side (sizes from the parquet footers), and exits 1 when any table
+differs.
 """
 import json
 import os
@@ -106,13 +111,48 @@ def snapshot(root, ls):
     return files
 
 
+def epoch_micros(t):
+    """`t` with each timestamp column as int64 microseconds since the epoch."""
+    for i, f in enumerate(t.schema):
+        if pa.types.is_timestamp(f.type):
+            us = t.column(i).cast(pa.timestamp("us", tz=f.type.tz)).cast(pa.int64())
+            t = t.set_column(i, f.name, us)
+    return t
+
+
 def rows(files):
     tables = []
     for f in files:
         t = pq.read_table(f)
         keep = sorted(c for c in t.column_names if c not in ("pid", "batch"))
-        tables.append(t.select(keep))
+        tables.append(epoch_micros(t.select(keep)))
     return pa.concat_tables(tables, promote_options="permissive") if tables else None
+
+
+def columns(files):
+    """{column: (bytes per row, physical types, encodings)} over `files`' footers."""
+    size, types, encs, n = {}, {}, {}, 0
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            n += rg.num_rows
+            for i in range(rg.num_columns):
+                c = rg.column(i)
+                k = c.path_in_schema
+                size[k] = size.get(k, 0) + c.total_compressed_size
+                types.setdefault(k, set()).add(c.physical_type)
+                encs.setdefault(k, set()).update(c.encodings)
+    return {k: (size[k] / max(n, 1), "/".join(sorted(types[k])), ",".join(sorted(encs[k])))
+            for k in size}
+
+
+def column_lines(fa, fb):
+    """One line per column: B/row, physical type and encodings, A then B."""
+    ca, cb = columns(fa), columns(fb)
+    def side(c, k):
+        return f"{c[k][0]:7.3f} B/row {c[k][1]:<10} {c[k][2]:<38}" if k in c else f"{'-':<62}"
+    return [f"    {k:<12} A {side(ca, k)}  |  B {side(cb, k)}" for k in list(ca) + [k for k in cb if k not in ca]]
 
 
 def compare_table(a, b, table):
@@ -158,7 +198,8 @@ def compare_table(a, b, table):
             problems.append(f"compact-{n} differs in {', '.join(differing_keys(ja, jb))}")
     notes.append(f"{same} markers equal with path and file names masked")
 
-    ta, tb = rows(snapshot(ra, la)), rows(snapshot(rb, lb))
+    fa, fb = snapshot(ra, la), snapshot(rb, lb)
+    ta, tb = rows(fa), rows(fb)
     if ta is None and tb is None:
         notes.append("no data files")
     elif ta is None or tb is None:
@@ -179,7 +220,8 @@ def compare_table(a, b, table):
         con.close()
 
     status = "OK" if not problems else "DIFF"
-    return not problems, f"{table}: {status}: " + "; ".join(problems + notes)
+    return not problems, "\n".join([f"{table}: {status}: " + "; ".join(problems + notes)]
+                                    + column_lines(fa, fb))
 
 
 def main(argv):
