@@ -682,10 +682,14 @@ object GuardianStream {
     * generated turn file streams, both event-time watermarked, joined with
     * bounded skew by `ProvenanceJoin.stream` (one `flatMapGroupsWithState`
     * keyed on (conv_id, turn_idx); its match rows equal Spark's streaming
-    * join of `ProvenanceJoin.join`). Match rows (with the per-turn
-    * text-equality verdict) land exactly-once in their own IceLite audit
-    * table, each partition sorted by `raw_ts` (a local sort, no exchange:
-    * in key-hash order the sink's parquet pages compress ~5% worse).
+    * join of `ProvenanceJoin.join`). Join state keeps no text: a retained
+    * row is its side, ts and the SHA-256 digest of its text, 45 bytes
+    * whatever the turn length, and each key adds its key row and one
+    * format byte; the text-equality verdict is digest equality. Match
+    * rows (with that verdict) land exactly-once in their own IceLite
+    * audit table, each partition sorted by `raw_ts` (a local sort, no
+    * exchange: in key-hash order the sink's parquet pages compress ~5%
+    * worse).
     */
   def startProvenance(
       spark: SparkSession,

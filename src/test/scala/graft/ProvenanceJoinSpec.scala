@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState, Trigger}
 import graft.stream._
 
 /** `ProvenanceJoin.stream`, the standing provenance operator, against
@@ -163,7 +166,15 @@ class ProvenanceJoinSpec extends SparkSpec {
       r(2, "retain", 2, wmE(2) - S), g(3, "retain", 2, wmE(2)),
       // the late filter of batch 4 drops ts <= wmL(4), keeps wmL(4) + 1 µs
       r(3, "late", 0, wmL(4) + Min), g(4, "late", 0, wmL(4)),
-      r(3, "late", 1, wmL(4) + Min), g(4, "late", 1, wmL(4) + 1))
+      r(3, "late", 1, wmL(4) + Min), g(4, "late", 1, wmL(4) + 1),
+      // text_match is digest equality on the state operator: equal and
+      // last-byte-different 4 KiB texts, NFC against NFD (the same
+      // character in different bytes), "" against "" and against NULL
+      r(1, "text", 0, N(1) - Min, "x" * 4096), g(1, "text", 0, N(1) - Min, "x" * 4096),
+      r(1, "text", 1, N(1) - Min, "x" * 4096), g(1, "text", 1, N(1) - Min, "x" * 4095 + "y"),
+      r(1, "text", 2, N(1) - Min, "\u00e9"), g(1, "text", 2, N(1) - Min, "e\u0301"),
+      r(1, "text", 3, N(1) - Min, ""), g(1, "text", 3, N(1) - Min, ""),
+      r(1, "text", 4, N(1) - Min, ""), g(1, "text", 4, N(1) - Min, null))
     // one mega-key: 120 rows a side over 10 minutes, in two epochs each
     val mega = (0 until 120).flatMap { i =>
       val e = 2 + i % 2
@@ -183,6 +194,10 @@ class ProvenanceJoinSpec extends SparkSpec {
     assert((0 to 2).map(count(got, "retain", _)) == Seq(1, 1, 0))
     assert(count(got, "late", 0) == 0 && count(got, "late", 1) == 1)
     assert(count(got, "mega", 0) > 2000)
+    def textMatch(turn: Int) =
+      got.filter(_.startsWith(s"[text,$turn,")).map(_.split(",")(4))
+    assert((0 to 4).map(textMatch) ==
+      Seq(Seq("true"), Seq("false"), Seq("false"), Seq("true"), Seq("null")))
   }
 
   test("state operator equals Spark's streaming join with an empty side") {
@@ -219,6 +234,81 @@ class ProvenanceJoinSpec extends SparkSpec {
       val got = differential(clock(6) ++ turns, epochs = 6).filterNot(_.startsWith("[clock,"))
       assert(got.size >= 20, s"seed $seed: only ${got.size} matches")
     }
+  }
+
+  test("state written before digests (v1, texts) matches fresh rows as === does and is rewritten as digests") {
+    /** A v1 value: per row is_raw, ts_us, UTF-8 length or -1, the text. */
+    def v1(rows: Seq[(Boolean, Long, String)]): Array[Byte] = {
+      val texts = rows.map(r => Option(r._3).map(_.getBytes(UTF_8)).orNull)
+      val buf = ByteBuffer.allocate(13 * rows.size + texts.map(t => if (t == null) 0 else t.length).sum)
+      rows.lazyZip(texts).foreach { case ((isRaw, us, _), t) =>
+        buf.put((if (isRaw) 1 else 0).toByte).putLong(us).putInt(if (t == null) -1 else t.length)
+        if (t != null) buf.put(t)
+      }
+      buf.array()
+    }
+    val ts = N(1) - Min
+    val old = Seq((true, ts, "same"), (true, ts + 1, "\u00e9"), (true, ts + 2, null),
+      (false, ts, "gen"))
+    val fresh = Seq((false, ts + 3, "same"), (false, ts + 4, "e\u0301"), (false, ts + 5, null),
+      (true, ts + 6, "gen"), (true, ts + 7, "other"))
+    val freshRows = fresh.map { case (isRaw, us, t) =>
+      ProvenanceJoin.Side(isRaw, DateTimeUtils.toJavaTimestamp(us), Option(t).map(_.getBytes(UTF_8)).orNull)
+    }
+    // every pair of a fresh row and an old or own-epoch partner is in range
+    val pairs = fresh.flatMap { case (isRaw, us, t) =>
+      (old ++ (if (isRaw) fresh else Nil)).collect {
+        case (pRaw, pUs, pt) if pRaw != isRaw => if (isRaw) (us, t, pUs, pt) else (pUs, pt, us, t)
+      }
+    }
+    val byEq = spark.createDataFrame(pairs).toDF("raw_us", "raw_text", "gen_us", "gen_text")
+      .select(col("raw_us"), col("gen_us"), (col("raw_text") === col("gen_text")).as("m"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getBoolean(2))))
+      .toSeq.sortBy(x => (x._1, x._2))
+    assert(byEq.map(_._3).toSet == Set(Some(true), Some(false), None))
+    def run(state: Array[Byte]) = {
+      val st = TestGroupState.create[ProvenanceJoin.Retained](
+        Optional.of(ProvenanceJoin.Retained(state)), GroupStateTimeout.EventTimeTimeout(), 0L,
+        Optional.of(wmE(1) / Ms), false)
+      val out = ProvenanceJoin.matchKey(S, ("k", 0), freshRows.iterator, st).toSeq
+      (out.map(m => (m.raw_us, m.gen_us, Option(m.text_match).map(_.booleanValue)))
+        .sortBy(x => (x._1, x._2)), st.get.rows)
+    }
+    val (fromV1, written) = run(v1(old))
+    assert(fromV1 == byEq)
+    assert(written(0) == 2, "the value written back carries the digest format byte")
+    assert(written.length == 1 + 9 * 13 + 7 * 32)
+    assert(ProvenanceJoin.unpack(written).map(r => (r._1, r._2)) ==
+      (old ++ fresh).map(r => (r._1, r._2)))
+    // the rewritten value answers the same
+    assert(run(ProvenanceJoin.pack(ProvenanceJoin.unpack(v1(old))))._1 == byEq)
+  }
+
+  test("startProvenance: join state is the same size for 8-byte and 4 KiB texts") {
+    val turns = clock(3) ++ (0 until 3).flatMap { e =>
+      (0 until 40).flatMap(i => Seq(
+        T(e, raw = true, s"s$i", e, N(e) - (i + 1) * 1000 * Ms, "t"),
+        T(e, raw = false, s"s$i", e, N(e) - i * 1000 * Ms, "t")))
+    }
+    def arenaLive(textLen: Int): Seq[Long] = {
+      val rawDir = tmp("prov-size-raw"); val genDir = tmp("prov-size-gen")
+      def files(raw: Boolean) = (0 until 3).map(e => turns.filter(t => t.e == e && t.raw == raw)
+        .map(t => if (t.conv == "clock") t.row else t.copy(text = "t" * textLen).row))
+      writeEpochs(rawDir, files(raw = true))
+      writeEpochs(genDir, files(raw = false))
+      val k = "spark.sql.streaming.stateStore.providerClass"
+      spark.conf.set(k, "graft.stream.state.ArenaStateStoreProvider")
+      val q =
+        try GuardianStream.startProvenance(spark, rawDir, genDir, tmp("prov-size-ck"),
+          tmp("prov-size-sink"), watermarkDelay = Delay, maxSkew = Skew, availableNow = true,
+          maxFilesPerTrigger = Some(1))
+        finally spark.conf.unset(k)
+      q.awaitTermination()
+      q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq).map(_.customMetrics.get("arenaLiveBytes").longValue)
+    }
+    val short = arenaLive(8)
+    assert(short.size >= 3 && short.exists(_ > 0), short)
+    assert(arenaLive(4096) == short)
   }
 
   test("startProvenance: a restart after epoch 1 equals an uninterrupted run, rows and manifests") {
