@@ -58,6 +58,28 @@ object SparkEntry {
       path
     })
 
+  /** The provenance fixture pair (raw, generated twin). The raw side is the
+    * events-derived transcript fixture; the twin carries a deterministic
+    * bounded skew ((event_id % 241) - 120 s), planted OUT-of-range rows
+    * (event_id % 17 = 0 ⇒ +400 s, outside the 2-minute join window) and
+    * planted text perturbations (event_id % 23 = 0). Both sides re-read
+    * the memoized fixture parquet: cheap scans, no recompute of the
+    * window-function sort.
+    */
+  private def provenancePair(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val fixture = e2eFixture(s, dir)
+    val gen = fixture
+      .withColumn("__skew",
+        when(pmod(col("event_id"), lit(17L)) === 0, lit(400L))
+          .otherwise(pmod(col("event_id"), lit(241L)) - 120L))
+      .withColumn("ts", col("ts") + expr("make_dt_interval(0, 0, 0, __skew)"))
+      .withColumn("text",
+        when(pmod(col("event_id"), lit(23L)) === 0,
+          concat(col("text"), lit(" [generated]"))).otherwise(col("text")))
+      .drop("event_id", "__skew")
+    (fixture.drop("event_id"), gen)
+  }
+
   /** Near-dup cluster table — the LSH → verify → connected-components
     * pass is the most expensive batch stage and BOTH `dedup_clusters` and
     * `corpus_retain` consume its exact output, so the first consumer
@@ -370,52 +392,27 @@ object SparkEntry {
         .toDF("field", "status")
     }),
 
-    // Provenance matching, batch-checkable: the raw side is the
-    // events-derived transcript fixture; the generated twin carries a
-    // deterministic bounded skew ((event_id % 241) - 120 s), planted
-    // OUT-of-range rows (event_id % 17 = 0 ⇒ +400 s, outside the 2-minute
-    // join window) and planted text perturbations (event_id % 23 = 0).
-    // Same join as the standing stream-stream query (ProvenanceJoin.join,
-    // watermark-bounded in streaming); the oracle restates fixture, twin
-    // and the interval join in SQL.
+    // Provenance matching, batch-checkable: the raw side and its
+    // generated twin (`provenancePair`). Same join as the standing
+    // stream-stream query (ProvenanceJoin.join, watermark-bounded in
+    // streaming); the oracle restates fixture, twin and the interval join
+    // in SQL.
     "provenance_match" -> ((s, dir) => {
-      val base = e2eFixture(s, dir)
-      val raw = base.drop("event_id")
-      val gen = base
-        .withColumn("__skew",
-          when(pmod(col("event_id"), lit(17L)) === 0, lit(400L))
-            .otherwise(pmod(col("event_id"), lit(241L)) - 120L))
-        .withColumn("ts", col("ts") + expr("make_dt_interval(0, 0, 0, __skew)"))
-        .withColumn("text",
-          when(pmod(col("event_id"), lit(23L)) === 0,
-            concat(col("text"), lit(" [generated]"))).otherwise(col("text")))
-        .drop("event_id", "__skew")
+      val (raw, gen) = provenancePair(s, dir)
       graft.stream.ProvenanceJoin.join(raw, gen, "2 minutes")
     }),
 
     // The STANDING provenance join end-to-end (round-3 verdict item 4):
     // the same raw/generated fixture pair as provenance_match, but run
     // through `GuardianStream.startProvenance` — two watermarked parquet
-    // file streams, the stream-stream interval join (state on the arena
-    // store's join state managers), and the exactly-once IceLite audit
-    // sink — then read back through the snapshot reader. Same oracle SQL
-    // as the batch form: the standing query must converge to exactly the
-    // batch join.
+    // file streams, the standing provenance operator (`ProvenanceJoin.stream`:
+    // one `flatMapGroupsWithState`, its state on the arena store), and the
+    // exactly-once IceLite audit sink — then read back through the
+    // snapshot reader. Same oracle SQL as the batch form: the standing
+    // query must converge to exactly the batch join.
     "stream_provenance_e2e" -> ((s, dir) => {
       val root = scratchDir("graft-prov-e2e")
-      // BOTH side writes (raw + skewed twin) re-read the memoized fixture
-      // parquet — two cheap scans, no recompute of the window-function sort
-      val fixture = e2eFixture(s, dir)
-      val raw = fixture.drop("event_id")
-      val gen = fixture
-        .withColumn("__skew",
-          when(pmod(col("event_id"), lit(17L)) === 0, lit(400L))
-            .otherwise(pmod(col("event_id"), lit(241L)) - 120L))
-        .withColumn("ts", col("ts") + expr("make_dt_interval(0, 0, 0, __skew)"))
-        .withColumn("text",
-          when(pmod(col("event_id"), lit(23L)) === 0,
-            concat(col("text"), lit(" [generated]"))).otherwise(col("text")))
-        .drop("event_id", "__skew")
+      val (raw, gen) = provenancePair(s, dir)
       raw.repartition(4).write.parquet(s"$root/raw")
       gen.repartition(4).write.parquet(s"$root/gen")
       // 2 files/trigger over 4 files per side ⇒ multiple committed epochs,

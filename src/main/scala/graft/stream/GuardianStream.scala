@@ -685,11 +685,13 @@ object GuardianStream {
     * join of `ProvenanceJoin.join`). Join state keeps no text: a retained
     * row is its side, ts and the SHA-256 digest of its text, 45 bytes
     * whatever the turn length, and each key adds its key row and one
-    * format byte; the text-equality verdict is digest equality. Match
-    * rows (with that verdict) land exactly-once in their own IceLite
-    * audit table, each partition sorted by `raw_ts` (a local sort, no
-    * exchange: in key-hash order the sink's parquet pages compress ~5%
-    * worse).
+    * format byte; the text-equality verdict is digest equality. A
+    * checkpoint whose state is in another format (the text-keeping v1 of
+    * older checkpoints) is refused by name: such a query restarts on a
+    * fresh checkpoint. Match rows (with that verdict) land exactly-once
+    * in their own IceLite audit table, each partition sorted by `raw_ts`
+    * (a local sort, no exchange: in key-hash order the sink's parquet
+    * pages compress ~5% worse).
     */
   def startProvenance(
       spark: SparkSession,

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.lineage.DataLineage
 
 /** The filesystem contract the exactly-once commit rests on — ONE
@@ -109,9 +109,10 @@ object PosixCommitIO extends CommitIO {
   *       ("path": "compact/<upto>-<attempt>", "files", "schema")
   * }}}
   * A partition with no rows writes no file; an empty epoch lists none and
-  * still records its schema. A manifest or marker written before files
-  * were listed (no "files" field; Spark's output directories) reads as its
-  * whole directory.
+  * still records its schema. Readers read exactly this layout: a data
+  * table's manifest or marker without its "files" and "schema" (or a
+  * marker without its "path" and "row_count") is an older layout, which
+  * every reader refuses by name rather than guessing at its files.
   *
   * File encoding: Spark's parquet writer settings (the session's codec),
   * except that every timestamp column (`ts`, `raw_ts`, `gen_ts`) is INT64
@@ -271,9 +272,8 @@ object IceLite {
 
   /** Per-partition stats of the parquet files under `dataDir`, from their
     * FOOTERS' column statistics, read driver-side with no Spark job. Not on
-    * the commit path (the writing tasks return these stats): it describes
-    * a directory as it stands, e.g. one written before manifests listed
-    * their files.
+    * the commit path (the writing tasks return these stats) nor on any
+    * read path: it describes a directory as it stands (perfbench times it).
     */
   def footerStats(dataDir: String): Seq[PartitionManifest] = {
     // Footer reads are independent small-file reads — do them in parallel,
@@ -333,7 +333,7 @@ object IceLite {
       pn.put("path", epochRel(m.batchId))
     }
     putListing(node, files, schema)
-    node.set[com.fasterxml.jackson.databind.JsonNode](
+    node.set[JsonNode](
       "lineage", mapper.readTree(m.lineageJson))
     val json = mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
     // Winner-takes-all atomic publish through the CommitIO seam.
@@ -349,49 +349,55 @@ object IceLite {
       files: Seq[String], schema: StructType): Unit = {
     val fs = node.putArray("files")
     files.foreach(fs.add)
-    node.set[com.fasterxml.jackson.databind.JsonNode]("schema", mapper.readTree(schema.json))
+    node.set[JsonNode]("schema", mapper.readTree(schema.json))
     ()
   }
 
-  /** What one manifest or marker makes visible: the `paths` a reader scans
-    * — its listed files, or the one data directory of one written before
-    * files were listed — and the schema it recorded, if any.
+  /** What a data table's manifest or marker makes visible: its listed
+    * files (absolute) and the table schema, which an epoch or table with
+    * no rows still has.
     */
-  private final case class Listing(paths: Seq[String], schema: Option[StructType]) {
-    def nonEmpty: Boolean =
-      if (schema.isEmpty) paths.exists(d => parquetFiles(new java.io.File(d)).nonEmpty)
-      else paths.nonEmpty
+  private final case class Listing(files: Seq[String], schema: StructType)
+
+  /** A manifest or marker, parsed once. */
+  private final case class Parsed(path: Path, json: JsonNode) {
+    /** Field `name`, which this build always writes into a data table's
+      * manifests (and markers). A table file without it is an older
+      * layout this build does not read: refused by name, not guessed at.
+      */
+    def field(name: String): JsonNode = Option(json.get(name)).getOrElse(
+      throw new IllegalStateException(
+        s"$path has no \"$name\" field: it is an older IceLite layout, which this build " +
+          "does not read. Start the query on a new sink and checkpoint."))
+
+    def listing(root: String): Listing = Listing(
+      field("files").elements().asScala.map(f => Paths.get(root, f.asText()).toString).toSeq,
+      DataType.fromJson(field("schema").toString).asInstanceOf[StructType])
   }
 
-  /** The listing of the manifest or marker at `manifest`, whose data
-    * directory is `dir`; a missing manifest lists the directory.
+  private def parsed(p: Path): Parsed = Parsed(p, mapper.readTree(Files.readString(p)))
+
+  /** The sources of one snapshot, each parsed once: the marker of
+    * compaction `latest` (if any), then the `residual` epoch manifests.
+    * Readers and compaction plan from one listing — re-listing could see
+    * a compaction or an epoch published in between.
     */
-  private def listing(root: String, manifest: Path, dir: String): Listing = {
-    val node = Option.when(commitIO.exists(manifest))(mapper.readTree(Files.readString(manifest)))
-    node.flatMap(n => Option(n.get("files")).map(n -> _)) match {
-      case Some((n, files)) => Listing(
-        files.elements().asScala.map(f => Paths.get(root, f.asText()).toString).toSeq,
-        Some(DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType]))
-      case None => Listing(Seq(dir), None)
-    }
-  }
+  private def sourcesOf(root: String, latest: Option[Long], residual: Seq[Long]): Seq[Parsed] =
+    latest.map(u => parsed(compactMarkerPath(root, u))).toSeq ++
+      residual.map(b => parsed(manifestPath(root, b)))
 
-  private def epochListing(root: String, batchId: Long): Listing =
-    listing(root, manifestPath(root, batchId), epochDir(root, batchId).toString)
-
-  private def compactListing(root: String, upTo: Long): Listing =
-    listing(root, compactMarkerPath(root, upTo), compactDataDir(root, upTo))
-
-  def readManifest(root: String, batchId: Long): Manifest = {
-    val node = mapper.readTree(Files.readString(manifestPath(root, batchId)))
-    val parts = node.get("partitions").elements().asScala.map { pn =>
+  private def partitionsOf(manifest: JsonNode): Seq[PartitionManifest] =
+    manifest.get("partitions").elements().asScala.map { pn =>
       PartitionManifest(
         pn.get("pid").asInt(), pn.get("row_count").asLong(),
         pn.get("conv_id_min").asText(), pn.get("conv_id_max").asText())
     }.toSeq
+
+  def readManifest(root: String, batchId: Long): Manifest = {
+    val node = parsed(manifestPath(root, batchId)).json
     Manifest(
       node.get("batch_id").asLong(), node.get("dataset_id").asText(),
-      node.get("row_count").asLong(), parts,
+      node.get("row_count").asLong(), partitionsOf(node),
       mapper.writeValueAsString(node.get("lineage")))
   }
 
@@ -402,38 +408,21 @@ object IceLite {
     */
   def read(spark: SparkSession, root: String): DataFrame = {
     val (latest, residual) = compactSources(root)
-    sources(spark, root, latest, residual)
+    scan(spark, root, sourcesOf(root, latest, residual).map(_.listing(root)))
   }
 
-  /** The rows of an EXPLICIT source listing: the compacted table `latest`
-    * (if any) plus the `residual` epoch batches. Readers and compaction
-    * plan from one listing — re-listing could see a compaction or an
-    * epoch published in between.
+  /** Whether an epoch manifest's per-partition (conv_id_min, conv_id_max)
+    * ranges can contain `convId`.
     */
-  private def sources(spark: SparkSession, root: String,
-      latest: Option[Long], residual: Seq[Long]): DataFrame = {
-    require(latest.nonEmpty || residual.nonEmpty,
-      s"IceLite table at $root has no committed batches")
-    scan(spark, latest.map(compactListing(root, _)).toSeq ++ residual.map(epochListing(root, _)))
-  }
+  private def mayHold(manifest: JsonNode, convId: String): Boolean =
+    partitionsOf(manifest).exists(p => p.convIdMin <= convId && convId <= p.convIdMax)
 
   /** Residual epoch batches whose manifest per-partition
     * (conv_id_min, conv_id_max) ranges can contain `convId` — the
     * driver-side pruning set for a point audit. Exposed for tests.
     */
   private[graft] def convBatches(root: String, convId: String): Seq[Long] =
-    convBatchesOf(root, convId, compactSources(root)._2)
-
-  /** Pruning over an EXPLICIT residual listing: readConv passes the one
-    * snapshot it planned everything else from — re-listing here could see
-    * a compaction published in between and return a torn (empty) view.
-    */
-  private def convBatchesOf(
-      root: String, convId: String, residual: Seq[Long]): Seq[Long] =
-    residual.filter { b =>
-      readManifest(root, b).partitions
-        .exists(p => p.convIdMin <= convId && convId <= p.convIdMax)
-    }
+    compactSources(root)._2.filter(b => mayHold(parsed(manifestPath(root, b)).json, convId))
 
   /** Point audit lookup: all audit rows of ONE conversation, planning
     * only the epochs that can contain it. The north star's promise is
@@ -448,67 +437,46 @@ object IceLite {
     */
   def readConv(spark: SparkSession, root: String, convId: String): DataFrame = {
     val (latest, residual) = compactSources(root)
-    require(latest.nonEmpty || residual.nonEmpty,
-      s"IceLite table at $root has no committed batches")
-    val hits = convBatchesOf(root, convId, residual)
-    if (latest.isEmpty && hits.isEmpty)
-      // schema-stable empty result: no epoch can contain the conv — plan
-      // one pruned-to-nothing scan rather than inventing a schema
-      readBatches(spark, root, residual.take(1)).filter(lit(false))
-    else
-      sources(spark, root, latest, hits).filter(col("conv_id") === convId)
+    val (marker, epochs) = sourcesOf(root, latest, residual).splitAt(latest.size)
+    val listings = (marker ++ epochs.filter(e => mayHold(e.json, convId))).map(_.listing(root))
+    // schema-stable empty result when no source can contain the conv: the
+    // first epoch's schema with no file to scan, rather than an invented one
+    scan(spark, root,
+      if (listings.nonEmpty) listings else epochs.take(1).map(_.listing(root).copy(files = Nil)))
+      .filter(col("conv_id") === convId)
   }
 
-  /** Snapshot read of SPECIFIC committed batch ids (the compaction read
-    * path: latest compacted state + residual epochs).
+  /** The rows of `listings`, `pid` dropped: exactly their listed files,
+    * read with the schema the first listing recorded, so that building the
+    * frame reads no footer and starts no schema-inference job (a bare
+    * `spark.read.parquet` starts one). With no file to scan, the empty
+    * frame of that schema.
     */
-  def readBatches(spark: SparkSession, root: String, batches: Seq[Long]): DataFrame = {
-    require(batches.nonEmpty, s"IceLite table at $root has no committed batches")
-    scan(spark, batches.map(epochListing(root, _)))
-  }
-
-  /** The rows of `listings`, `pid` dropped: exactly their listed files
-    * (and the whole directories of old listings), read with the schema a
-    * listing recorded — or, when none did, the one the first data file's
-    * footer recorded — so that building the frame starts no
-    * schema-inference job (a bare `spark.read.parquet` starts one). With
-    * no file to scan, the empty frame of the recorded schema.
-    */
-  private def scan(spark: SparkSession, listings: Seq[Listing]): DataFrame = {
-    val paths = listings.flatMap(_.paths)
-    val schema = listings.iterator.flatMap(_.schema).nextOption().orElse(footerSchema(paths))
-    val df = schema match {
-      case Some(s) if paths.isEmpty =>
+  private def scan(spark: SparkSession, root: String, listings: Seq[Listing]): DataFrame = {
+    require(listings.nonEmpty, s"IceLite table at $root has no committed batches")
+    val files = listings.flatMap(_.files)
+    val schema = listings.head.schema
+    val df =
+      if (files.isEmpty)
         // as a file read would: every column nullable
         spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          StructType(s.map(_.copy(nullable = true))))
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-    df.drop("pid", "batch")
+          StructType(schema.map(_.copy(nullable = true))))
+      else spark.read.schema(schema).parquet(files: _*)
+    df.drop("pid")
   }
 
-  /** The schema Spark recorded in the footer of the first data file under
-    * the directories `dirs`, if any.
-    */
-  private def footerSchema(dirs: Seq[String]): Option[StructType] =
-    dirs.iterator.flatMap(d => parquetFiles(new java.io.File(d))).nextOption()
-      .flatMap { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getAbsolutePath), footerConf))
-        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        finally reader.close()
-      }
-      .map(json => DataType.fromJson(json).asInstanceOf[StructType])
-
   /** The rows of committed epoch `batchId`, or None when the epoch wrote
-    * no parquet (an empty epoch) — the read-back of one epoch's output.
+    * no parquet (an empty epoch) or has no manifest (a batch that never
+    * committed makes no rows visible) — the read-back of one epoch's
+    * output.
     */
-  def readEpoch(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] = {
-    val epoch = epochListing(root, batchId)
-    Option.when(epoch.nonEmpty)(scan(spark, Seq(epoch)))
+  def readEpoch(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] =
+    epochListing(root, batchId).filter(_.files.nonEmpty).map(l => scan(spark, root, Seq(l)))
+
+  /** The listing of epoch `batchId`'s manifest, None when it has none. */
+  private def epochListing(root: String, batchId: Long): Option[Listing] = {
+    val manifest = manifestPath(root, batchId)
+    Option.when(commitIO.exists(manifest))(parsed(manifest).listing(root))
   }
 
   // ---- table maintenance: fold epoch dirs into one compacted table ----
@@ -523,25 +491,16 @@ object IceLite {
   /** Data dir of a PUBLISHED compacted table: resolved from the marker's
     * `path` field (each compaction attempt writes an attempt-unique dir,
     * so a losing concurrent compactor can never clobber the winner's
-    * published data — ADVICE r4). Falls back to the legacy `compact/<upTo>`
-    * layout for markers written before the path field existed. The read
-    * is failure-tolerant, not just existence-checked: a concurrent expiry
-    * sweep may delete a SUPERSEDED marker between the exists() and the
-    * read — the legacy fallback keeps both the reader (which never reads
-    * superseded markers) and the idempotent sweep well-defined.
+    * published data — ADVICE r4). None for a marker with no path — the
+    * manifest-only quality table's, which own no data — and for a marker
+    * that is gone: a concurrent expiry sweep may delete a SUPERSEDED marker
+    * (after its data dir) between the listing and this read.
     */
-  def compactDataDir(root: String, upTo: Long): String = {
-    val mp = compactMarkerPath(root, upTo)
-    val legacy = s"compact/$upTo"
-    val rel =
-      try {
-        if (commitIO.exists(mp))
-          Option(mapper.readTree(Files.readString(mp)).get("path"))
-            .map(_.asText()).getOrElse(legacy)
-        else legacy
-      } catch { case _: java.io.IOException => legacy }
-    Paths.get(root, rel).toString
-  }
+  private def compactDataDir(root: String, upTo: Long): Option[String] =
+    try
+      Option(parsed(compactMarkerPath(root, upTo)).json.get("path"))
+        .map(p => Paths.get(root, p.asText()).toString)
+    catch { case _: java.io.IOException => None }
 
   private[graft] def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory)
@@ -584,9 +543,8 @@ object IceLite {
     * fold by merging interval islands, itself lossless. The marker's
     * `row_count` counts the rows folded in (the folded epoch manifests'
     * counts plus the previous marker's), so accounting survives expiry of
-    * the per-epoch manifests; it is left out when the previous marker has
-    * none (session markers written before the count was kept) rather than
-    * guessed. Returns false with < 2 residual batches.
+    * the per-epoch manifests. Plans from one parse of each source's
+    * manifest or marker. Returns false with < 2 residual batches.
     *
     * Cost note: this rewrite is O(previous compact + residual) — a
     * MAINTENANCE action run at coarse cadence, unlike the every-N-epochs
@@ -608,18 +566,15 @@ object IceLite {
     // deletes its orphan, and readers of the winner's published path are
     // never exposed to a mid-overwrite dir.
     val attemptRel = s"compact/$upTo-${java.util.UUID.randomUUID().toString.take(8)}"
-    val folded = rewrite(sources(spark, root, latest, residual))
+    val sources = sourcesOf(root, latest, residual)
+    val rows = sources.map(_.field("row_count").asLong()).sum
+    val folded = rewrite(scan(spark, root, sources.map(_.listing(root))))
     val written = ParquetTaskWrite(folded, root, attemptRel)
-    val prevRows = latest.fold(Option(0L)) { u =>
-      Option(mapper.readTree(Files.readString(compactMarkerPath(root, u))).get("row_count"))
-        .map(_.asLong())
-    }
     val node = mapper.createObjectNode()
     node.put("upto_batch", upTo)
     latest.foreach(node.put("prev_compact", _))
     node.put("path", attemptRel)
-    prevRows.foreach(p =>
-      node.put("row_count", p + residual.map(b => readManifest(root, b).rowCount).sum))
+    node.put("row_count", rows)
     putListing(node, written.map(_.rel), folded.schema)
     val won = commitIO.publishIfAbsent(
       compactMarkerPath(root, upTo), mapper.writeValueAsString(node))
@@ -657,17 +612,12 @@ object IceLite {
     val ddir = Paths.get(root, "data")
     commitIO.listNames(ddir).foreach {
       case d @ EpochDir(b) =>
-        // the files the manifest lists; no manifest lists none, and an old
-        // one (no file list, no schema) its whole directory
-        val listed =
-          if (!isCommitted(root, b)) Some(Set.empty[String])
-          else { val l = epochListing(root, b); l.schema.map(_ => l.paths.toSet) }
-        listed.foreach { keep =>
-          removed += commitIO.listNames(ddir.resolve(d)).count { n =>
-            val f = ddir.resolve(d).resolve(n)
-            n.endsWith(".parquet") && !n.startsWith(".") && !keep(f.toString) &&
-              orphanStale(f) && Files.deleteIfExists(f)
-          }
+        // the files the manifest lists; a batch with no manifest lists none
+        val keep = epochListing(root, b).fold(Set.empty[String])(_.files.toSet)
+        removed += commitIO.listNames(ddir.resolve(d)).count { n =>
+          val f = ddir.resolve(d).resolve(n)
+          n.endsWith(".parquet") && !n.startsWith(".") && !keep(f.toString) &&
+            orphanStale(f) && Files.deleteIfExists(f)
         }
       case _ =>
     }
@@ -679,7 +629,7 @@ object IceLite {
         case n @ TableFile("compact", u) if u < upTo =>
           // resolve the marker's data dir BEFORE deleting the marker (the
           // path field is only recoverable from it)
-          rmTree(new java.io.File(compactDataDir(root, u)))
+          compactDataDir(root, u).foreach(dir => rmTree(new java.io.File(dir)))
           if (Files.deleteIfExists(mdir.resolve(n))) removed += 1
         case _ =>
       }
@@ -689,15 +639,18 @@ object IceLite {
       // computed its target BEFORE a newer compaction published may still
       // be writing a dir with upTo' <= latest — so only dirs untouched
       // for a grace window are swept (a live parquet write refreshes its
-      // dir's mtime as files land; a crashed attempt goes stale).
-      val live = Paths.get(compactDataDir(root, upTo)).getFileName.toString
-      val cdir = Paths.get(root, "compact")
-      commitIO.listNames(cdir).foreach { d =>
-        val num = d.takeWhile(_.isDigit)
-        if (d != live && num.nonEmpty && num.toLong <= upTo &&
-            orphanStale(cdir.resolve(d))) {
-          rmTree(cdir.resolve(d).toFile)
-          removed += 1
+      // dir's mtime as files land; a crashed attempt goes stale). Only a
+      // table whose latest marker names its data dir has attempt dirs.
+      compactDataDir(root, upTo).foreach { liveDir =>
+        val live = Paths.get(liveDir).getFileName.toString
+        val cdir = Paths.get(root, "compact")
+        commitIO.listNames(cdir).foreach { d =>
+          val num = d.takeWhile(_.isDigit)
+          if (d != live && num.nonEmpty && num.toLong <= upTo &&
+              orphanStale(cdir.resolve(d))) {
+            rmTree(cdir.resolve(d).toFile)
+            removed += 1
+          }
         }
       }
     }

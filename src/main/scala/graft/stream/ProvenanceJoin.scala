@@ -34,7 +34,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the same three-valued answer as `===` up to a SHA-256 collision. The
   * hash is cryptographic on purpose: `text_match` is the audit verdict,
   * and a generator could forge equality against a hash such as the dedup
-  * key's xxhash64. `join` keeps exact `===`.
+  * key's xxhash64. `join` keeps exact `===`. The packed state starts with
+  * a format byte, and `unpack` reads only the format `pack` writes: a new
+  * layout takes a new byte, and any other (the text-keeping v1 of older
+  * checkpoints) is refused by name.
   */
 object ProvenanceJoin {
 
@@ -87,21 +90,17 @@ object ProvenanceJoin {
     */
   private[graft] type Kept = (Boolean, Long, Array[Byte])
 
-  /** The first byte of every value `pack` writes. A value written before
-    * the state kept digests (v1: rows of is_raw, ts_us, text length or -1,
-    * UTF-8 text) starts with an is_raw byte, 0 or 1, so `unpack` tells the
-    * two apart.
+  /** The first byte of every value `pack` writes, and the one format
+    * `unpack` reads. A value written before the state kept digests (v1:
+    * rows of is_raw, ts_us, text length or -1, UTF-8 text) starts with an
+    * is_raw byte, 0 or 1, so `unpack` names it when it refuses it.
     */
   private val DigestFormat: Byte = 2
 
   private val sha256 =
     ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("SHA-256"))
 
-  private def digest(bytes: Array[Byte], from: Int, len: Int): Array[Byte] = {
-    val md = sha256.get()
-    md.update(bytes, from, len)
-    md.digest()
-  }
+  private def digest(bytes: Array[Byte]): Array[Byte] = sha256.get().digest(bytes)
 
   /** The format byte, then per row: is_raw (1 byte), ts_us (8), digest
     * length or -1 for NULL text (4), the 32-byte digest.
@@ -116,26 +115,25 @@ object ProvenanceJoin {
     buf.array()
   }
 
-  /** Reads `pack`'s layout, and v1 values from checkpoints written before
-    * it by digesting their texts: both are one binary state field, so
-    * Spark's schema check lets a v1 checkpoint resume, and its texts must
-    * still match their partners.
+  /** Reads `pack`'s layout and refuses any other by name. Every format is
+    * one binary state field, so Spark's schema check lets a checkpoint of
+    * another format resume; read as this one, its rows would match wrong.
     */
   private[graft] def unpack(bytes: Array[Byte]): IndexedSeq[Kept] = {
-    val v1 = bytes(0) != DigestFormat
-    val buf = ByteBuffer.wrap(bytes)
-    if (!v1) buf.get()
+    if (bytes(0) != DigestFormat) throw new IllegalStateException(
+      "provenance join state is in " +
+        (if (bytes(0) == 0 || bytes(0) == 1) "format v1 (texts, written before the state kept digests)"
+         else s"an unknown format (first byte ${bytes(0)})") +
+        s"; this build reads only format byte $DigestFormat (digests). " +
+        "Restart the query on a fresh checkpoint.")
+    val buf = ByteBuffer.wrap(bytes, 1, bytes.length - 1)
     val rows = ArrayBuffer.empty[Kept]
     while (buf.hasRemaining) {
       val isRaw = buf.get() == 1
       val us = buf.getLong()
       val n = buf.getInt()
-      val at = buf.position()
-      val d =
-        if (n < 0) null
-        else if (v1) digest(bytes, at, n)
-        else java.util.Arrays.copyOfRange(bytes, at, at + n)
-      if (n > 0) buf.position(at + n)
+      val d = if (n < 0) null else new Array[Byte](n)
+      if (d != null) buf.get(d)
       rows += ((isRaw, us, d))
     }
     rows.toIndexedSeq
@@ -151,12 +149,12 @@ object ProvenanceJoin {
     * (conv_id, turn_idx) into one `flatMapGroupsWithState` (append,
     * event-time timeout). Each key's state holds its retained rows of
     * both sides as (is_raw, ts_us, SHA-256 of text), packed behind one
-    * format byte that tells them from the text-keeping values of older
-    * checkpoints, which are still read (`unpack`). One state store per
-    * partition where the symmetric hash join keeps four, and no per-node
-    * Hadoop conf broadcast: Spark's `StreamingSymmetricHashJoinExec`
-    * broadcasts its whole Hadoop conf every time the planner copies the
-    * node, about twenty times an epoch.
+    * format byte; `unpack` refuses the text-keeping values of older
+    * checkpoints by name, and such a query restarts on a fresh
+    * checkpoint. One state store per partition where the symmetric hash
+    * join keeps four, and no per-node Hadoop conf broadcast: Spark's
+    * `StreamingSymmetricHashJoinExec` broadcasts its whole Hadoop conf
+    * every time the planner copies the node, about twenty times an epoch.
     *
     * Same output as Spark's streaming join of `join`, row for row:
     *  - late rows (`ts` at or behind the previous epoch's watermark) are
@@ -215,7 +213,7 @@ object ProvenanceJoin {
     val old = state.getOption.fold(IndexedSeq.empty[Kept])(r => unpack(r.rows))
     val fresh = rows.map { s =>
       (s.is_raw, DateTimeUtils.fromJavaTimestamp(s.ts),
-        if (s.text == null) null else digest(s.text, 0, s.text.length))
+        if (s.text == null) null else digest(s.text))
     }.toIndexedSeq
     val out = ArrayBuffer.empty[Match]
     def emit(rawUs: Long, rawDigest: Array[Byte], genUs: Long, genDigest: Array[Byte]): Unit =

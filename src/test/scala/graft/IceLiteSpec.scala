@@ -16,8 +16,8 @@ import graft.stream._
 /** The IceLite table format: tasks write their own parquet files, the
   * manifest lists them and is the only commit. Byte identity with Spark's
   * parquet writer, the timestamp encoding, listed-file reads next to
-  * orphans, empty epochs, sinks written before manifests listed their
-  * files or in Spark's INT96 encoding, and sink hygiene.
+  * orphans, empty epochs, sinks in Spark's INT96 encoding, the refusal of
+  * manifests written before they listed their files, and sink hygiene.
   */
 class IceLiteSpec extends SparkSpec {
 
@@ -74,15 +74,15 @@ class IceLiteSpec extends SparkSpec {
     }
   }
 
-  /** Each slice as one parquet file fNN.parquet under `dir`, numbered from `from`. */
-  private def writeSlices(dir: String, slices: Seq[DataFrame], from: Int = 0): Unit =
+  /** Each slice as one parquet file fNN.parquet under `dir`. */
+  private def writeSlices(dir: String, slices: Seq[DataFrame]): Unit =
     slices.zipWithIndex.foreach { case (df, i) =>
       val staging = tmp(s"stage-$i")
       df.coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
         .find(_.getName.endsWith(".parquet")).get
       Files.createDirectories(Paths.get(dir))
-      Files.move(part.toPath, Paths.get(dir, f"f${from + i}%02d.parquet"))
+      Files.move(part.toPath, Paths.get(dir, f"f$i%02d.parquet"))
     }
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -196,9 +196,11 @@ class IceLiteSpec extends SparkSpec {
     assert(IceLite.commit(turns(62).repartition(2), root, 0L)(lin).nonEmpty)
     def reads() = (rowsOf(IceLite.read(spark, root)),
       rowsOf(IceLite.readConv(spark, root, "conv-000001")),
-      rowsOf(IceLite.readEpoch(spark, root, 0L).get))
+      rowsOf(IceLite.readEpoch(spark, root, 0L).get),
+      // a batch that never committed makes no rows visible
+      IceLite.readEpoch(spark, root, 1L).map(rowsOf))
     val before = reads()
-    assert(before._1.size == 48 && before._2.size == 8)
+    assert(before._1.size == 48 && before._2.size == 8 && before._4.isEmpty)
     val listed = listedFiles(root).toSeq
     assert(listed.size == 2)
     // a copy of a listed file would double its rows if it were read; one
@@ -294,57 +296,31 @@ class IceLiteSpec extends SparkSpec {
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
   }
 
-  test("a sink written before manifests listed files reads the same, and a resumed query appends to it") {
-    val parts = slices(65)
-    val (srcA, srcB) = (tmp("old-srcA"), tmp("old-srcB"))
-    writeSlices(srcA, parts)
-    writeSlices(srcB, parts.take(2))
-    val cfgA = guardianCfg(srcA, "old-A")
-    val cfgB = guardianCfg(srcB, "old-B")
-    GuardianStream.start(spark, cfgA).awaitTermination()
-    GuardianStream.start(spark, cfgB).awaitTermination()
-    val sessions = Paths.get(cfgB.sinkDir, "sessions").toString
-    val conv = "conv-000002"
-    def reads(root: String) = (rowsOf(IceLite.read(spark, root)),
-      rowsOf(IceLite.readConv(spark, root, conv)),
-      // an old epoch without rows holds Spark's one empty file
-      IceLite.committedBatches(root).map(b =>
-        IceLite.readEpoch(spark, root, b).map(rowsOf).getOrElse(Seq.empty)))
-    // the epochs' rows, whichever epochs hold them: a drain that stops
-    // ends on a trailing epoch without data, so batch ids shift on resume
-    def epochRows(root: String) = reads(root)._3.flatten.sorted
-    val before = (reads(cfgB.sinkDir), reads(sessions))
-    val oldEpochs = IceLite.committedBatches(cfgB.sinkDir)
-    oldEpochs.foreach(toOldLayout(cfgB.sinkDir, _))
-    IceLite.committedBatches(sessions).foreach(toOldLayout(sessions, _))
-    val names = walk(cfgB.sinkDir).map(_.getFileName.toString)
+  test("a manifest without a file list is refused by every reader") {
+    val src = tmp("old-src")
+    writeSlices(src, slices(65))
+    val cfg = guardianCfg(src, "old")
+    GuardianStream.start(spark, cfg).awaitTermination()
+    val root = cfg.sinkDir
+    val old = IceLite.committedBatches(root).head
+    val name = f"manifest-$old%09d.json"
+    assert(IceLite.committedBatches(root).size >= 2 && filesOf(root, name).nonEmpty)
+    toOldLayout(root, old)
+    val names = walk(root).map(_.getFileName.toString)
     assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), "Spark's output layout")
-    assert((reads(cfgB.sinkDir), reads(sessions)) == before)
-
-    // the query resumes over the old sink: new epochs land listed, next to the old
-    writeSlices(srcB, parts.drop(2), from = 2)
-    GuardianStream.start(spark, cfgB).awaitTermination()
-    val added = IceLite.committedBatches(cfgB.sinkDir).filterNot(oldEpochs.contains)
-    assert(added.nonEmpty && added.forall(b =>
-      manifestJson(cfgB.sinkDir, f"manifest-$b%09d.json").has("files")))
-    val (b, a) = (reads(cfgB.sinkDir), reads(cfgA.sinkDir))
-    assert((b._1, b._2) == (a._1, a._2))
-    assert(epochRows(cfgB.sinkDir) == epochRows(cfgA.sinkDir))
-    assert(rowsOf(GuardianStream.readSessionQuality(spark, cfgB.sinkDir)) ==
-      rowsOf(GuardianStream.readSessionQuality(spark, cfgA.sinkDir)))
-    assert(rowsOf(GuardianStream.readQuality(spark, cfgB.sinkDir)) ==
-      rowsOf(GuardianStream.readQuality(spark, cfgA.sinkDir)))
-    // compaction folds old and new epochs alike; expiry removes the old dirs
-    val whole = reads(cfgA.sinkDir)._1
-    assert(IceLite.compact(spark, cfgB.sinkDir))
-    assert(GuardianStream.compactSessions(spark, cfgB.sinkDir))
-    assert(rowsOf(IceLite.read(spark, cfgB.sinkDir)) == whole)
-    assert(rowsOf(IceLite.readConv(spark, cfgB.sinkDir, conv)) == reads(cfgA.sinkDir)._2)
-    assert(IceLite.expireCompacted(cfgB.sinkDir) > 0 && GuardianStream.expireFolded(cfgB.sinkDir) > 0)
-    assert(!walk(cfgB.sinkDir).exists(_.getFileName.toString == "_SUCCESS"))
-    assert(rowsOf(IceLite.read(spark, cfgB.sinkDir)) == whole)
-    assert(rowsOf(GuardianStream.readSessionQuality(spark, cfgB.sinkDir)) ==
-      rowsOf(GuardianStream.readSessionQuality(spark, cfgA.sinkDir)))
+    // every epoch holds every conversation, so the point read plans the old one too
+    val reads = Seq[(String, () => Any)](
+      "read" -> (() => IceLite.read(spark, root)),
+      "readConv" -> (() => IceLite.readConv(spark, root, "conv-000002")),
+      "readEpoch" -> (() => IceLite.readEpoch(spark, root, old)),
+      "compact" -> (() => IceLite.compact(spark, root)),
+      "expireCompacted" -> (() => IceLite.expireCompacted(root)))
+    reads.foreach { case (op, run) =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains(Paths.get(root, "manifests", name).toString) &&
+        e.getMessage.contains("older IceLite layout"), s"$op: ${e.getMessage}")
+    }
+    assert(!Files.exists(Paths.get(root, "compact")), "the refused compaction wrote nothing")
   }
 
   // ---- crash points of an epoch's commit ----

@@ -236,7 +236,7 @@ class ProvenanceJoinSpec extends SparkSpec {
     }
   }
 
-  test("state written before digests (v1, texts) matches fresh rows as === does and is rewritten as digests") {
+  test("join state in the v1 format (texts) is refused by name") {
     /** A v1 value: per row is_raw, ts_us, UTF-8 length or -1, the text. */
     def v1(rows: Seq[(Boolean, Long, String)]): Array[Byte] = {
       val texts = rows.map(r => Option(r._3).map(_.getBytes(UTF_8)).orNull)
@@ -274,14 +274,20 @@ class ProvenanceJoinSpec extends SparkSpec {
       (out.map(m => (m.raw_us, m.gen_us, Option(m.text_match).map(_.booleanValue)))
         .sortBy(x => (x._1, x._2)), st.get.rows)
     }
-    val (fromV1, written) = run(v1(old))
-    assert(fromV1 == byEq)
+    val e = intercept[IllegalStateException](run(v1(old)))
+    assert(e.getMessage.contains("format v1") && e.getMessage.contains("fresh checkpoint"),
+      e.getMessage)
+    // the same rows in the format the build writes match as === does
+    val sha256 = java.security.MessageDigest.getInstance("SHA-256")
+    val (matched, written) = run(ProvenanceJoin.pack(old.map { case (isRaw, us, t) =>
+      (isRaw, us, Option(t).map(x => sha256.digest(x.getBytes(UTF_8))).orNull)
+    }))
+    assert(matched == byEq)
     assert(written(0) == 2, "the value written back carries the digest format byte")
     assert(written.length == 1 + 9 * 13 + 7 * 32)
     assert(ProvenanceJoin.unpack(written).map(r => (r._1, r._2)) ==
       (old ++ fresh).map(r => (r._1, r._2)))
-    // the rewritten value answers the same
-    assert(run(ProvenanceJoin.pack(ProvenanceJoin.unpack(v1(old))))._1 == byEq)
+    assert(ProvenanceJoin.pack(ProvenanceJoin.unpack(written)).sameElements(written))
   }
 
   test("startProvenance: join state is the same size for 8-byte and 4 KiB texts") {

@@ -387,22 +387,21 @@ class StreamingSpec extends SparkSpec {
     assert(canonS() == sBefore, "readSessionQuality unchanged by expiry")
     assert(GuardianStream.expireFolded(cfg.sinkDir) == 0, "expiry is idempotent")
 
-    // a sink whose session marker predates the folded-row count (only
-    // upto_batch and path): two more epochs, then compaction over it —
-    // the merged view is unchanged and the new marker guesses no count
+    // a sink whose session marker predates the file list and the
+    // folded-row count (only upto_batch and path): two more epochs land,
+    // and the read and the compaction over it refuse the old marker by name
     val old = mapper.createObjectNode()
     old.put("upto_batch", sc.get)
     old.put("path", sMarker(sc.get).get("path").asText())
     Files.writeString(sMarkerPath(sc.get), mapper.writeValueAsString(old))
     GuardianStream.processBatch(tinyTurns("one more turn"), sc.get + 1, cfg)
     GuardianStream.processBatch(tinyTurns("and another"), sc.get + 2, cfg)
-    val sBeforeOld = canonS()
-    assert(sBeforeOld.size == sBefore.size + 1, "the new epochs add one session")
-    assert(GuardianStream.compactSessions(spark, cfg.sinkDir), "compaction over the old marker")
-    assert(canonS() == sBeforeOld, "readSessionQuality unchanged by compaction over an old sink")
-    val newMarker = sMarker(sc.get + 2)
-    assert(newMarker.get("prev_compact").asLong() == sc.get)
-    assert(!newMarker.has("row_count"), s"no guessed row_count: $newMarker")
+    Seq[() => Any](() => canonS(), () => GuardianStream.compactSessions(spark, cfg.sinkDir))
+      .foreach { op =>
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains(sMarkerPath(sc.get).toString), e.getMessage)
+      }
+    assert(!Files.exists(sMarkerPath(sc.get + 2)), "the refused compaction published no marker")
   }
 
   test("auto-compaction every N epochs keeps the manifest count bounded") {

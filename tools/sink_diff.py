@@ -3,29 +3,25 @@
 
     python3 tools/sink_diff.py <sinkA> <sinkB>
 
-For each IceLite table of a sink -- the root (audit or provenance table),
-`quality/` and `sessions/` -- it checks:
+For each IceLite table of a sink -- the data tables (the root, audit or
+provenance, and `sessions/`) and the manifest-only `quality/` -- it checks:
 
   * epoch manifests (`manifests/manifest-<n>.json`): same names, and
-    byte-equal -- or, where either lists its data files, equal JSON once
-    the attempt number of each listed file name is masked
-    (`part-<pid>-<n>.parquet` -> `part-<pid>-<attempt>.parquet`: a sink
-    whose epoch was retried lists `-1` where another lists `-0`). Against
-    a sink written before manifests listed their files, the `files` and
-    `schema` only one side has are set aside and reported on their own;
+    byte-equal -- or, on a data table, equal JSON once the attempt number
+    of each listed file name is masked (`part-<pid>-<n>.parquet` ->
+    `part-<pid>-<attempt>.parquet`: a sink whose epoch was retried lists
+    `-1` where another lists `-0`);
   * compaction markers (`manifests/compact-<n>.json`): equal JSON once the
-    attempt-unique `path` and listed file names are masked. On `sessions/`
-    the folded-row count `row_count` is reported on its own line instead of
-    compared;
-  * rows: the snapshot `IceLite.read` returns -- the latest compacted table
-    plus the epoch batches after it, each the files its manifest or marker
-    lists (or, for one without a file list, every parquet file in its
-    directory: the marker's `path` or `compact/<n>`, `data/batch=<n>`),
-    `pid` dropped -- equal as multisets (DuckDB `EXCEPT ALL` both ways over
-    pyarrow tables). Timestamp columns are compared as epoch microseconds:
-    pyarrow reads Spark's INT96 as a naive timestamp and INT64
-    `TIMESTAMP(MICROS)` as a UTC one, which DuckDB would compare through
-    its session TimeZone.
+    attempt-unique `path` and listed file names are masked;
+  * that every manifest and marker of a data table lists its files: one
+    without a `files` list is a layout the engine no longer writes (nor
+    reads), and is reported as a problem by name;
+  * rows: the snapshot `IceLite.read` returns -- the files the latest
+    marker and the epoch manifests after it list, `pid` dropped -- equal
+    as multisets (DuckDB `EXCEPT ALL` both ways over pyarrow tables).
+    Timestamp columns are compared as epoch microseconds: pyarrow reads
+    Spark's INT96 as a naive timestamp and INT64 `TIMESTAMP(MICROS)` as a
+    UTC one, which DuckDB would compare through its session TimeZone.
 
 A table absent from both sinks is skipped. Prints one line per table, then
 per column of that snapshot the bytes per row, physical type and encodings
@@ -41,7 +37,7 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = [".", "quality", "sessions"]
+TABLES = {".": True, "quality": False, "sessions": True}  # table -> data table
 NAME = re.compile(r"(manifest|compact)-(\d+)\.json$")
 ATTEMPT = re.compile(r"(part-\d+)-\d+\.parquet$")
 
@@ -63,18 +59,15 @@ def read_json(root, name):
 
 
 def masked(j):
-    """`j` with its attempt-unique `path` and listed file names masked."""
+    """`j` with its attempt-unique `path` and listed file names masked (a
+    marker's files lie under its `path`)."""
     j = dict(j)
+    if "files" in j:
+        files = [f.replace(j["path"] + "/", "<attempt>/", 1) if "path" in j else f for f in j["files"]]
+        j["files"] = [ATTEMPT.sub(r"\1-<attempt>.parquet", f) for f in files]
     if "path" in j:
         j["path"] = "<attempt>"
-    if "files" in j:
-        j["files"] = [ATTEMPT.sub(r"\1-<attempt>.parquet", f) for f in j["files"]]
     return j
-
-
-def unlisted(j):
-    """`j` without the file list and schema."""
-    return {k: v for k, v in j.items() if k not in ("files", "schema")}
 
 
 def differing_keys(ja, jb):
@@ -82,33 +75,17 @@ def differing_keys(ja, jb):
     return sorted(k for k in ja.keys() | jb.keys() if ja.get(k) != jb.get(k))
 
 
-def parquet_files(d):
-    found = []
-    for base, dirs, files in os.walk(d):
-        dirs.sort()
-        found += [os.path.join(base, f) for f in sorted(files)
-                  if f.endswith(".parquet") and not f.startswith((".", "_"))]
-    return found
-
-
-def listed(root, j, rel):
-    """The files manifest or marker `j` lists, else those in its directory `rel`."""
-    if "files" in j:
-        return [os.path.join(root, f) for f in j["files"]]
-    return parquet_files(os.path.join(root, rel))
+def unlisted(side, name, j):
+    """A problem when data-table manifest or marker `j` lists no files."""
+    return [] if "files" in j else [f"{side} {name} has no file list, a layout the engine no longer writes"]
 
 
 def snapshot(root, ls):
     """The parquet files `IceLite.read` would scan, or [] for none."""
     latest = max(ls["compact"], default=None)
-    files = []
-    if latest is not None:
-        j = read_json(root, ls["compact"][latest])
-        files += listed(root, j, j.get("path", f"compact/{latest}"))
-    for b in sorted(ls["manifest"]):
-        if latest is None or b > latest:
-            files += listed(root, read_json(root, ls["manifest"][b]), os.path.join("data", f"batch={b}"))
-    return files
+    names = [ls["compact"][latest]] if latest is not None else []
+    names += [ls["manifest"][b] for b in sorted(ls["manifest"]) if latest is None or b > latest]
+    return [os.path.join(root, f) for n in names for f in read_json(root, n).get("files", [])]
 
 
 def epoch_micros(t):
@@ -155,7 +132,7 @@ def column_lines(fa, fb):
     return [f"    {k:<12} A {side(ca, k)}  |  B {side(cb, k)}" for k in list(ca) + [k for k in cb if k not in ca]]
 
 
-def compare_table(a, b, table):
+def compare_table(a, b, table, data):
     ra, rb = os.path.join(a, table), os.path.join(b, table)
     if not os.path.isdir(ra) and not os.path.isdir(rb):
         return True, f"{table}: absent in both"
@@ -164,34 +141,31 @@ def compare_table(a, b, table):
 
     if la["manifest"].keys() != lb["manifest"].keys():
         problems.append(f"epoch sets differ: {sorted(la['manifest'])} vs {sorted(lb['manifest'])}")
-    same = older = 0
+    same = 0
     for n in sorted(la["manifest"].keys() & lb["manifest"].keys()):
         name = la["manifest"][n]
         with open(os.path.join(ra, "manifests", name), "rb") as fa, \
                 open(os.path.join(rb, "manifests", name), "rb") as fb:
             ba, bb = fa.read(), fb.read()
         ja, jb = json.loads(ba), json.loads(bb)
-        if ba == bb or (("files" in ja or "files" in jb) and masked(ja) == masked(jb)):
+        if data:
+            problems += unlisted("A", name, ja) + unlisted("B", name, jb)
+        if ba == bb or (data and masked(ja) == masked(jb)):
             same += 1
-        elif ("files" in ja) != ("files" in jb) and unlisted(ja) == unlisted(jb):
-            older += 1
         else:
             keys = differing_keys(masked(ja), masked(jb)) or ["formatting"]
             problems.append(f"{name} differs in {', '.join(keys)}")
     notes.append(f"{same} epoch manifests equal (byte-identical, or with file names masked)")
-    if older:
-        notes.append(f"{older} epoch manifests equal apart from the file list and schema one side predates")
 
     if la["compact"].keys() != lb["compact"].keys():
         problems.append(f"marker sets differ: {sorted(la['compact'])} vs {sorted(lb['compact'])}")
     same = 0
     for n in sorted(la["compact"].keys() & lb["compact"].keys()):
-        ja = masked(read_json(ra, la["compact"][n]))
-        jb = masked(read_json(rb, lb["compact"][n]))
-        if table == "sessions":
-            ca, cb = ja.pop("row_count", None), jb.pop("row_count", None)
-            notes.append(f"compact-{n} row_count {ca if ca is not None else '-'}"
-                         f" vs {cb if cb is not None else '-'}")
+        name = la["compact"][n]
+        ja, jb = read_json(ra, name), read_json(rb, name)
+        if data:
+            problems += unlisted("A", name, ja) + unlisted("B", name, jb)
+        ja, jb = masked(ja), masked(jb)
         if ja == jb:
             same += 1
         else:
@@ -228,8 +202,8 @@ def main(argv):
     if len(argv) != 3:
         sys.exit(__doc__.strip().splitlines()[2].strip())
     ok = True
-    for table in TABLES:
-        good, line = compare_table(argv[1], argv[2], table)
+    for table, data in TABLES.items():
+        good, line = compare_table(argv[1], argv[2], table, data)
         ok &= good
         print(line)
     print("SINKS EQUAL" if ok else "SINKS DIFFER")
